@@ -27,31 +27,18 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from slmpy_spark.graph.edges import symmetrize, vertices
-from slmpy_spark.util import explain_to, materialize
+from slmpy_spark.util import EdgeCache, materialize, supersteps
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 50, checkpointer=None,
-    leaf_cache: bool = True,
+    edges: DataFrame, max_iter: int = 50, checkpointer=None
 ) -> DataFrame:
-    """Exact undirected connected components. Returns (id, component).
-
-    `leaf_cache=False` skips the checkpoint leaf under the edge cache
-    (saves its fixed block-write job on small inputs — the A/B toggle,
-    BENCH/ab_leaf_small.py)."""
-    # pre-hash-partitioned on the per-round join key (dst) and cached:
-    # the edge table enters this layout once and never exchanges again —
-    # only the vertex-sized label table shuffles per round (the same
-    # iterative-join layout as pagerank's contrib_edges)
-    # leaf-base the cache (checkpoint, then repartition+persist): the
-    # per-round CacheManager lookup and AQE replanning canonicalize the
-    # cached plan's embedded lineage every round — a leaf keeps that
-    # constant-time regardless of the caller's plan depth (measured for
-    # the SLM sweep, BENCH/qe_stage_probe.py).  The leaf outlives the
-    # cache (evicted cache partitions recompute from it).
-    sym_base = symmetrize(edges).select("src", "dst")
-    sym_leaf = materialize(sym_base) if leaf_cache else sym_base
-    sym = sym_leaf.repartition("dst").persist()
+    """Exact undirected connected components. Returns (id, component);
+    its `.unpersist()` frees the result's blocks."""
+    # the symmetric edge table, cached pre-hash-partitioned on the
+    # per-round join key (dst) over a checkpoint leaf (util.EdgeCache):
+    # only the vertex-sized label table shuffles per round
+    sym = EdgeCache(symmetrize(edges).select("src", "dst"), "dst")
 
     # init: singleton labels, with the vertex count riding the
     # materialize action (r6 — replaces the separate persisted
@@ -64,12 +51,11 @@ def connected_components(
         .observe(obs0, F.count(F.lit(1)).alias("n"))
     )
     if int(obs0.get["n"] or 0) == 0:
-        sym.unpersist()
-        sym_leaf.unpersist()
+        sym.free()
         labels.unpersist()  # the empty checkpoint leaf would otherwise leak
         return edges.sparkSession.createDataFrame([], "id long, component long")
 
-    for it in range(max_iter):
+    def step(labels, it):
         # gather fused INTO one aggregation (r6): the state rides into
         # the neighbor-min groupBy as (id, own component, old=component)
         # rows, so candidate = min(own, neighbors) falls out of ONE
@@ -80,7 +66,7 @@ def connected_components(
         # subtree twice, once per jump side).
         null_l = F.lit(None).cast("long")
         cand = (
-            sym.join(
+            sym.df.join(
                 labels.select(F.col("id").alias("dst"), "component"), "dst"
             )
             .select(F.col("src").alias("id"), "component", null_l.alias("old"))
@@ -115,21 +101,11 @@ def connected_components(
             )
             .observe(obs, F.sum("changed").alias("ch"))
         )
-        if it == 0:
-            explain_to(new_labels, "cc_round")
-        new_labels = new_labels.transform(materialize)
+        return new_labels, lambda: int(obs.get["ch"] or 0) == 0
 
-        changed = int(obs.get["ch"] or 0)
-        labels.unpersist()
-        labels = new_labels
-        if checkpointer is not None:
-            reread = checkpointer.save_state("cc_labels", it, labels)
-            labels.unpersist()
-            labels = reread
-        if changed == 0:
-            break
-
-    sym.unpersist()
-    # after the cache built over it is gone; no-op when leaf_cache=False
-    sym_leaf.unpersist()
-    return labels.select("id", "component")
+    out = supersteps(
+        labels, step, "cc_round", max_iter, ("id", "component"),
+        checkpointer, "cc_labels",
+    )
+    sym.free()
+    return out

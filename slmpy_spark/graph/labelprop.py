@@ -22,22 +22,19 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from slmpy_spark.graph.edges import symmetrize, vertices
-from slmpy_spark.util import explain_to, materialize
+from slmpy_spark.util import EdgeCache, materialize, supersteps
 
 
 def label_propagation(
     edges: DataFrame, max_iter: int = 20, checkpointer=None
 ) -> DataFrame:
     """Returns assign(id long, label long) after `max_iter` synchronous
-    rounds (early-exits when no label changes)."""
-    # pre-hash-partitioned on the per-round join key (dst) and cached,
-    # so only the vertex-sized label table shuffles per round.  The
-    # cache sits over a checkpoint LEAF so the per-round CacheManager
-    # lookup / AQE replanning canonicalize a constant-size plan, not
-    # the caller's lineage (see components.py; the leaf outlives the
-    # cache — evicted cache partitions recompute from it).
-    sym_leaf = materialize(symmetrize(edges))
-    sym = sym_leaf.repartition("dst").persist()
+    rounds (early-exits when no label changes); its `.unpersist()` frees
+    the result's blocks."""
+    # pre-hash-partitioned on the per-round join key (dst) and cached
+    # over a checkpoint leaf (util.EdgeCache), so only the vertex-sized
+    # label table shuffles per round
+    sym = EdgeCache(symmetrize(edges), "dst")
 
     # init: singleton labels with the (unused beyond emptiness) vertex
     # set folded in — no separate persisted verts frame (r6)
@@ -45,7 +42,7 @@ def label_propagation(
         vertices(edges).select("id", F.col("id").alias("label"))
     )
 
-    for it in range(max_iter):
+    def step(labels, it):
         # the changed flag rides on the frame and its sum is OBSERVED
         # on the materialize action — one Spark job per round.  The
         # iterated path passes verts=None: `labels` is verts-complete
@@ -58,25 +55,17 @@ def label_propagation(
         # cheap runtime-broadcast join, the sentinel branch widened the
         # big per-(id,label) exchange instead.)
         obs = Observation()
-        new_labels = lpa_round(sym, labels, None, with_changed=True).observe(
+        new_labels = lpa_round(sym.df, labels, None, with_changed=True).observe(
             obs, F.sum("changed").alias("ch")
         )
-        if it == 0:
-            explain_to(new_labels, "lpa_round")
-        new_labels = new_labels.transform(materialize)
-        changed = int(obs.get["ch"] or 0)
-        labels.unpersist()
-        labels = new_labels
-        if checkpointer is not None:
-            reread = checkpointer.save_state("lpa_labels", it, labels)
-            labels.unpersist()
-            labels = reread
-        if changed == 0:
-            break
+        return new_labels, lambda: int(obs.get["ch"] or 0) == 0
 
-    sym.unpersist()
-    sym_leaf.unpersist()  # after the cache built over it is gone
-    return labels.select("id", "label")
+    out = supersteps(
+        labels, step, "lpa_round", max_iter, ("id", "label"),
+        checkpointer, "lpa_labels",
+    )
+    sym.free()
+    return out
 
 
 def lpa_round(

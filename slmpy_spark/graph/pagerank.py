@@ -59,7 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from slmpy_spark.util import explain_to, materialize
+from slmpy_spark.util import EdgeCache, materialize, owned_view, supersteps
 
 
 def pagerank(
@@ -70,10 +70,10 @@ def pagerank(
     checkpoint_interval: int = 5,
     checkpointer=None,
     weighted: bool = False,
-    leaf_cache: bool = True,
     broadcast_threshold: int = 250_000,
 ) -> DataFrame:
-    """Return ranks(id long, rank double), Σ rank = 1.
+    """Return ranks(id long, rank double), Σ rank = 1; its
+    `.unpersist()` frees the result's blocks.
 
     `weighted=True`: contributions split proportionally to edge weight
     (frac = weight/out_w) instead of uniformly (1/out_deg) — the
@@ -83,12 +83,6 @@ def pagerank(
     `checkpointer`: optional slmpy_spark.checkpoint.Checkpointer; when
     given, per-iteration state is persisted (resumable); otherwise
     localCheckpoint truncates lineage in-memory.
-
-    `leaf_cache`: build the per-iteration contribution cache over a
-    checkpoint leaf (constant-time per-iteration planning — the r4
-    CacheManager-canonicalization fix, a measured win at ≥10M edges).
-    False skips the leaf's fixed checkpoint job — the A/B toggle for
-    small inputs (BENCH/ab_leaf_small.py).
 
     `broadcast_threshold`: when the vertex count fits under it, the
     one-time setup joins take broadcast hints (see module docstring —
@@ -143,11 +137,8 @@ def pagerank(
     hint = F.broadcast if n <= broadcast_threshold else (lambda f: f)
 
     # out-edge contribution fraction, fixed across iterations: per-edge
-    # weight share (weighted) or the uniform 1/out_deg split.  The base
-    # is a checkpoint LEAF (constant-time per-iteration planning — the
-    # leaf collapses every downstream reference to scan-over-LogicalRDD;
-    # see r4/r5 notes).  The dyn flag marks edges whose SOURCE is in the
-    # iterated state.
+    # weight share (weighted) or the uniform 1/out_deg split.  The dyn
+    # flag marks edges whose SOURCE is in the iterated state.
     frac_expr = (
         (F.col("weight") / F.col("out_w")) if weighted
         else (F.lit(1.0) / F.col("out_deg"))
@@ -156,25 +147,19 @@ def pagerank(
         F.col("id").alias("src"), "out_deg", "out_w",
         (F.col("has_in") == 1).alias("dyn"),
     )
-    _leaf = materialize if leaf_cache else (lambda f: f)
-    contrib_leaf = _leaf(
-        edges.join(hint(src_info), "src").select("src", "dst", frac_expr, "dyn")
+    # the dyn edges, persisted PRE-HASH-PARTITIONED on the join key over
+    # a checkpoint leaf (util.EdgeCache): the cached relation's
+    # outputPartitioning satisfies the per-iteration join's requirement,
+    # so the edge-sized side is shuffled ONCE for the whole run and only
+    # the (vertex-sized) ranks side moves per iteration; at small inputs
+    # the cache's known statistics let Catalyst broadcast it instead.
+    # The leaf also feeds the one-time flat-unit aggregation below.
+    contrib = EdgeCache(
+        edges.join(hint(src_info), "src").select("src", "dst", frac_expr, "dyn"),
+        int(spark.conf.get("spark.sql.shuffle.partitions")), "src",
+        view=lambda leaf: leaf.where("dyn").select("src", "dst", "frac"),
+        eager=True,
     )
-    # Persisted PRE-HASH-PARTITIONED on the join key: the cached
-    # relation's outputPartitioning satisfies the per-iteration join's
-    # requirement, so the edge-sized side is shuffled ONCE for the whole
-    # run and only the (vertex-sized) ranks side moves per iteration; at
-    # small inputs the cache's known statistics let Catalyst broadcast
-    # it instead — both without per-iteration replanning (the cache sits
-    # over the checkpoint leaf).
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    contrib_edges = (
-        contrib_leaf.where("dyn")
-        .select("src", "dst", "frac")
-        .repartition(n_parts, "src")
-        .persist()
-    )
-    contrib_edges.count()  # materialize the cached layout
 
     r_flat = 1.0 / n  # current rank of every no-in vertex
 
@@ -191,7 +176,7 @@ def pagerank(
     )
     if n_flat:
         flat_unit = (
-            contrib_leaf.where(~F.col("dyn"))
+            contrib.leaf.where(~F.col("dyn"))
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("frac").alias("u"))
         )
@@ -206,11 +191,13 @@ def pagerank(
     n_iter = 0
     null_d = F.lit(None).cast("double")
     null_i = F.lit(None).cast("int")
-    for it in range(max_iter):
+
+    def step(ranks, it):
+        nonlocal n_iter
         n_iter = it + 1
         dmass = n_dangling_flat * r_flat + dmass_dyn
         base = (1.0 - d) / n + d * dmass / n
-        contribs = contrib_edges.join(
+        contribs = contrib.df.join(
             ranks.select(F.col("id").alias("src"), "rank"), "src", "inner"
         ).select(
             F.col("dst").alias("id"),
@@ -254,36 +241,31 @@ def pagerank(
             "unit",
             "old_rank",
         )
-        if it == 0:
-            explain_to(new_state, "pagerank_iter")
-        new_ranks = (
-            new_state.observe(
-                obs,
-                F.max(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),
-                F.sum(
-                    F.when(F.col("dang") == 1, F.col("rank")).otherwise(F.lit(0.0))
-                ).alias("dmass"),
-            )
-            .select("id", "rank", "dang", "unit")
-            .transform(materialize)
-        )
-        vals = obs.get
-        delta = max(float(vals["delta"] or 0.0), abs(base - r_flat))
-        dmass_dyn = float(vals["dmass"] or 0.0)
-        old = ranks
-        ranks = new_ranks
-        r_flat = base
-        old.unpersist()
-        if checkpointer is not None and (it + 1) % checkpoint_interval == 0:
-            reread = checkpointer.save_state("pagerank_ranks", it, ranks)
-            ranks.unpersist()
-            ranks = reread
-        if tol > 0.0 and delta < tol:
-            break
+        new_ranks = new_state.observe(
+            obs,
+            F.max(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),
+            F.sum(
+                F.when(F.col("dang") == 1, F.col("rank")).otherwise(F.lit(0.0))
+            ).alias("dmass"),
+        ).select("id", "rank", "dang", "unit")
 
+        def stop():
+            nonlocal dmass_dyn, r_flat
+            vals = obs.get
+            delta = max(float(vals["delta"] or 0.0), abs(base - r_flat))
+            dmass_dyn = float(vals["dmass"] or 0.0)
+            r_flat = base
+            return tol > 0.0 and delta < tol
+
+        # the plan audit keeps dumping the pre-observe projection
+        return new_ranks, stop, new_state
+
+    out = supersteps(
+        ranks, step, "pagerank_iter", max_iter, ("id", "rank"),
+        checkpointer, "pagerank_ranks", every=checkpoint_interval,
+    )
     if checkpointer is not None:
         checkpointer.log_metric(op="pagerank", iters=n_iter, n=n)
-    out = ranks.select("id", "rank")
     if n_flat:
         # flat vertices re-derive LAZILY from the caller's edge table
         # (distinct src ∪ dst minus distinct dst) — pure lineage, no
@@ -297,13 +279,14 @@ def pagerank(
             .distinct()
         )
         has_in_ids = edges.select(F.col("dst").alias("id")).distinct()
-        out = out.unionByName(
-            all_ids.join(has_in_ids, "id", "left_anti").select(
-                "id", F.lit(r_flat).alias("rank")
-            )
+        out = owned_view(
+            out.unionByName(
+                all_ids.join(has_in_ids, "id", "left_anti").select(
+                    "id", F.lit(r_flat).alias("rank")
+                )
+            ),
+            out,
         )
-    contrib_edges.unpersist()
-    # after every consumer of the leaf is done; no-op when leaf_cache=False
-    contrib_leaf.unpersist()
+    contrib.free()
     vstats.unpersist()
     return out

@@ -61,7 +61,7 @@ from slmpy_spark.graph import kernels
 from slmpy_spark.graph.aggregate import aggregate_graph
 from slmpy_spark.graph.edges import degrees, symmetrize, total_weight, vertices
 from slmpy_spark.graph.modularity import modularity
-from slmpy_spark.util import explain_to, is_plan_leaf, materialize
+from slmpy_spark.util import EdgeCache, explain_to, materialize, owned_view
 
 ASSIGN_SCHEMA = "id long, community long"
 
@@ -227,11 +227,12 @@ def _propose_moves(
 ) -> DataFrame:
     """One synchronous local-moving sweep, entirely JVM-side.
 
-    `state`: (id, community, node_w) — the current assignment with node
-    weights; the community Σtot is derived lazily from the materialized
-    state leaf per sweep in both modes (_lazy_sigma_state — cheap block
-    re-scan, skew-safe partial-combine aggregation, no giant-community
-    window; broadcast-joined back at bcast levels).
+    `state`: the current assignment with node weights — (id, community,
+    node_w), plus the community Σtot as a `sigma` column at bcast levels
+    (carried on the state by _attach_sigma's window).  At shuffle levels
+    Σtot is derived lazily from the materialized state leaf per sweep
+    (_lazy_sigma_state — cheap block re-scan, skew-safe partial-combine
+    aggregation, no giant-community window).
 
     Semantics (mirrors kernels.local_moving against a snapshot):
     for every eligible vertex i with candidates C = {communities of
@@ -450,7 +451,6 @@ def _distributed_local_moving(
     m_l: int = 0,
     init_frac: float = 0.5,
     q_tol: float = 1e-4,
-    pre_partitioned: bool = False,
 ) -> DataFrame:
     """Superstep local moving with adaptive damping and a *deferred*
     monotone-Q guard.
@@ -485,32 +485,13 @@ def _distributed_local_moving(
     `DataFrame.observe` flat sums (delivered by the localCheckpoint
     action inside `materialize`, see util.materialize) — no separate
     stats aggregation job.  Rejection wastes exactly one speculative
-    decision job (same cost as the old retry)."""
+    decision job (same cost as the old retry).
+
+    At shuffle levels (`bcast=False`) `sym` must be the caller's
+    dst-partitioned edge cache (util.EdgeCache): every sweep's first
+    join (dst → candidate community) then reuses the cached layout and
+    only the vertex-sized state shuffles per sweep."""
     tp = _time.time()
-    if not bcast and not pre_partitioned:
-        # huge-vertex-table path: pre-hash-partition the edge table by
-        # dst ONCE and persist — every sweep's first join (dst →
-        # candidate community) then reuses the cached layout and only
-        # the vertex-sized state shuffles per sweep (the same
-        # iterative-join trick as pagerank's contrib_edges).  In the
-        # level loop the CALLER owns this cache (pre_partitioned=True)
-        # so the split and aggregation phases reuse it too.
-        # leaf-base the cache: the per-sweep CacheManager lookup and AQE
-        # replanning canonicalize the cached plan's embedded lineage
-        # every sweep — a checkpoint leaf under the repartition keeps
-        # that constant-time (see slm_scale's sym0 note).  The leaf must
-        # stay alive as long as the cache does (evicted cache partitions
-        # recompute from it, and checkpoint blocks have no lineage).
-        owned_leaf = None if is_plan_leaf(sym) else materialize(sym)
-        sym = (owned_leaf if owned_leaf is not None else sym).repartition(
-            "dst"
-        ).persist()
-        sym.count()
-        owned_sym = sym
-        tp = _phase(level, "lm_edge_cache", tp)
-    else:
-        owned_leaf = None
-        owned_sym = None
     # state init — when the caller starts from singletons (assign=None)
     # the frame is a plain projection of the node-weight leaf: no
     # vertex join at all (r6), and sigma == node_w exactly (every
@@ -644,10 +625,6 @@ def _distributed_local_moving(
     if state is not best_state:
         state.unpersist()
     best_state.unpersist()
-    if owned_sym is not None:
-        owned_sym.unpersist()
-    if owned_leaf is not None:
-        owned_leaf.unpersist()  # after the cache built over it is gone
     return assign_out
 
 
@@ -764,14 +741,15 @@ def _split_communities(
 
     if top > giant_threshold:
         _dbg(f"split: giant community ({top} intra rows) → distributed split")
-    else:
-        _dbg(f"split: top community {top} intra rows (≤ {giant_threshold}) → kernel split")
-    if top > giant_threshold:
+        lm_sym = intra.select("src", "dst", "weight")
+        cache = None if bcast else EdgeCache(lm_sym, "dst", eager=True)
         out = _distributed_local_moving(
-            intra.select("src", "dst", "weight"), node_w, None,
+            lm_sym if bcast else cache.df, node_w, None,
             resolution2, seed ^ 0x5BD1E995, max_sweeps, gamma, quality,
             True, two_m, bcast=bcast, m_l=intra_count,
         )
+        if cache is not None:
+            cache.free()
         # labels are already canonical min-member ids; vertices with no
         # intra edges kept their singleton id — the kernel semantics
         tp = _phase(level, "split_distributed", tp)
@@ -788,6 +766,7 @@ def _split_communities(
             .transform(materialize)
         )
     else:
+        _dbg(f"split: top community {top} intra rows (≤ {giant_threshold}) → kernel split")
         # the kernel already emits globally-unique min-member-id labels
         # (members are disjoint across parent communities), so the only
         # remaining join fills in intra-edge-less vertices as singletons
@@ -810,11 +789,9 @@ def _split_communities(
             )
             .transform(materialize)
         )
-        out = out_full.select("id", "community")
-        # out is a projection view over out_full's checkpoint leaf; the
-        # caller's unpersist must free the leaf's blocks (same
-        # monkey-patch convention as util.materialize)
-        out.unpersist = out_full.unpersist  # type: ignore[method-assign]
+        # a projection view over out_full's checkpoint leaf whose
+        # unpersist frees the leaf's blocks
+        out = owned_view(out_full.select("id", "community"), out_full)
         tp = _phase(level, "split_kernel", tp)
         parent_map = (
             out_full.select(
@@ -944,13 +921,17 @@ def slm_scale(
                 # the ORIGINAL graph from the merged-down labels; the
                 # guard keeps it monotone, so the pass can only improve Q
                 nv0 = nw0.count()
+                bcast0 = nv0 <= broadcast_threshold
+                cache = None if bcast0 else EdgeCache(sym0, "dst", eager=True)
                 pre_refine = flat
                 flat = _distributed_local_moving(
-                    sym0, nw0, flat, resolution2, pass_seed + max_levels,
-                    max_sweeps, gamma, quality, q_guard, two_m,
-                    checkpointer=checkpointer, level=max_levels,
-                    bcast=(nv0 <= broadcast_threshold),
+                    sym0 if bcast0 else cache.df, nw0, flat, resolution2,
+                    pass_seed + max_levels, max_sweeps, gamma, quality,
+                    q_guard, two_m, checkpointer=checkpointer,
+                    level=max_levels, bcast=bcast0,
                 )
+                if cache is not None:
+                    cache.free()
                 # identity guards (same rule as the best/prev frees
                 # below): an empty-graph _scale_pass can return its
                 # init_flat/warm-start unchanged, so pre_refine may BE
@@ -1076,22 +1057,20 @@ def _scale_pass(
         nv = nv_known if nv_known is not None else node_w_l.count()
         bcast = nv <= broadcast_threshold
         LAST_RUN_STATS["levels"] += 1
+        # level-owned edge cache at shuffle levels: ONE
+        # repartition("dst") + persist reused by every sweep's kic join,
+        # the split's intra join, and the aggregation — the level's edge
+        # table is shuffled into this layout exactly once (sym_l is
+        # already a leaf, so the cache builds no second one)
+        cache = None if bcast else EdgeCache(sym_l, "dst", eager=True)
+        sym_j = sym_l if bcast else cache.df
         if not bcast:
-            # level-owned edge cache: ONE repartition("dst") + persist
-            # reused by every sweep's kic join, the split's intra join,
-            # and the aggregation — the level's edge table is shuffled
-            # into this layout exactly once
-            sym_j = sym_l.repartition("dst").persist()
-            sym_j.count()
             tl = _phase(level, "edge_cache", tl)
-        else:
-            sym_j = sym_l
         warm = assign_l
         assign_l = _distributed_local_moving(
             sym_j, node_w_l, assign_l, resolution2, seed + level, max_sweeps,
             gamma, quality, q_guard, two_m,
             checkpointer=checkpointer, level=level, bcast=bcast, m_l=m_l,
-            pre_partitioned=True,
         )
         if warm is not None and warm is not init_flat:
             # previous level's (materialized) warm-start map is consumed
@@ -1146,13 +1125,13 @@ def _scale_pass(
             node_w_next.unpersist()
             if parent_map is not None:
                 parent_map.unpersist()  # materialized but never used
-            if sym_j is not sym_l:
-                sym_j.unpersist()
+            if cache is not None:
+                cache.free()
             break  # nothing merged at this level → converged
 
         super_edges, _sw = aggregate_graph(sym_j, assign_l, bcast=bcast)
         explain_to(super_edges, "slm_aggregate")
-        old_sym, old_sym_j = sym_l, sym_j
+        old_sym = sym_l
         # next level's edge-entry count rides the aggregation's own
         # checkpoint action (steady-state: zero standalone count jobs
         # per level)
@@ -1170,8 +1149,8 @@ def _scale_pass(
         # the first level unchanged): freeing it would free the result.
         if assign_l is not flat and assign_l is not init_flat:
             assign_l.unpersist()
-        if old_sym_j is not old_sym:
-            old_sym_j.unpersist()
+        if cache is not None:
+            cache.free()
         if old_sym is not sym0:
             old_sym.unpersist()
         if node_w_l is not nw0:

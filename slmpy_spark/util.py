@@ -105,3 +105,90 @@ def materialize(df: DataFrame) -> DataFrame:
 
     out.unpersist = _unpersist  # type: ignore[method-assign]
     return out
+
+
+class EdgeCache:
+    """The one owner of an iterative operator's edge cache.
+
+    Iterative joins read the edge table every round, so each operator
+    keeps it ``repartition(*keys).persist()``-ed on the per-round join
+    key: the edge-sized side enters that layout once and only the
+    vertex-sized state shuffles per round.  The cache sits over a
+    checkpoint LEAF (``materialize``; skipped when ``edges`` already is
+    a leaf, see ``is_plan_leaf``) so the per-round CacheManager lookup
+    and AQE replanning canonicalize a constant-size plan instead of the
+    caller's lineage.
+
+    ``view`` reshapes the leaf before partitioning (``self.leaf`` stays
+    readable for one-time setup joins); ``eager`` fills the cache with
+    one count job instead of on first use.  ``free()`` drops the cache
+    and THEN the leaf it recomputes from — the other order would leave
+    evicted cache partitions without their checkpoint blocks.  A leaf
+    the caller passed in stays the caller's."""
+
+    def __init__(self, edges: DataFrame, *keys, view=None, eager: bool = False):
+        self._owns_leaf = not is_plan_leaf(edges)
+        self.leaf = materialize(edges) if self._owns_leaf else edges
+        base = self.leaf if view is None else view(self.leaf)
+        self.df = base.repartition(*keys).persist()
+        if eager:
+            self.df.count()
+
+    def free(self) -> None:
+        self.df.unpersist()
+        if self._owns_leaf:
+            self.leaf.unpersist()
+
+
+def owned_view(view: DataFrame, leaf: DataFrame) -> DataFrame:
+    """Return `view` (a projection over the materialize() leaf `leaf`)
+    with `.unpersist()` freeing the leaf's blocks: Dataset.unpersist only
+    consults the CacheManager, so on a plain view it would be a no-op and
+    the leaf would stay pinned after the caller is done."""
+    view.unpersist = leaf.unpersist  # type: ignore[method-assign]
+    return view
+
+
+def supersteps(
+    state: DataFrame,
+    step,
+    name: str,
+    max_rounds: int,
+    cols,
+    checkpointer,
+    snapshot: str,
+    every: int = 1,
+) -> DataFrame:
+    """Run Pregel-style supersteps over a materialize() leaf `state` —
+    the one place that owns the round state's lifetime (Pregelix's
+    driver-owned supersteps as a join+groupBy dataflow).
+
+    ``step(state, r)`` builds round r and returns ``(frame, stop)``:
+    ``frame`` is the next state with the round's statistics attached via
+    ``DataFrame.observe`` (delivered by the materialize job itself — one
+    Spark job per round), and ``stop()`` is the stop test, called once
+    the frame is materialized.  A third element, when returned, is the
+    frame the round-0 plan audit (``explain_to(..., name)``) dumps in
+    place of ``frame``.
+
+    Each round the old state is freed only AFTER the new one is
+    materialized (its checkpoint blocks have no lineage to recompute
+    from); every `every` rounds, a given `checkpointer` writes the state
+    as snapshot ``snapshot`` at step r and the loop continues from the
+    re-read.  Returns ``state.select(*cols)`` over the final state, whose
+    ``.unpersist()`` frees the final state's blocks (see owned_view)."""
+    for r in range(max_rounds):
+        frame, stop, *audit = step(state, r)
+        if r == 0:
+            explain_to(audit[0] if audit else frame, name)
+        new = materialize(frame)
+        done = stop()
+        state.unpersist()
+        state = new
+        if checkpointer is not None and (r + 1) % every == 0:
+            reread = checkpointer.save_state(snapshot, r, state)
+            state.unpersist()
+            state = reread
+        if done:
+            break
+    return owned_view(state.select(*cols), state)

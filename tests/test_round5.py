@@ -216,12 +216,16 @@ def test_split_parent_map_matches_join(spark):
     sym.unpersist()
 
 
-def test_scale_shuffle_path_no_cache_leak(spark):
+@pytest.mark.parametrize("variant", ["slm", "louvain_refine"])
+def test_scale_shuffle_path_no_cache_leak(spark, variant):
     """broadcast_threshold=1 forces the shuffle-level machinery (carried
     counts, lazy sigma, per-level split output).  After the run, the only
     surviving cached/checkpointed RDD is the returned assignment's leaf —
     the r4 layout leaked one community-sized checkpoint set per level ≥ 1
-    (the consumed split output was never unpersisted)."""
+    (the consumed split output was never unpersisted).  louvain_refine
+    adds the refinement pass on the original graph, whose caller builds
+    a dst-partitioned edge cache (and its checkpoint leaf) for that pass
+    alone — both must be freed too.  Q is pinned bit for bit."""
     edges = edges_df(
         spark,
         _triangle(0) + _triangle(10) + _triangle(20) + _triangle(30)
@@ -229,11 +233,13 @@ def test_scale_shuffle_path_no_cache_leak(spark):
     )
     before = _persistent_rdd_ids(spark)
     assign, q = slm(
-        edges, mode="scale", exact_threshold=0, seed=7, broadcast_threshold=1
+        edges, mode="scale", exact_threshold=0, seed=7, broadcast_threshold=1,
+        variant=variant,
     )
     assert assign.count() == 12
     extra = _persistent_rdd_ids(spark) - before
     assert len(extra) <= 1, f"leaked {len(extra)} RDD block sets"
+    assert q == 0.747506061667665
 
 
 def test_scale_empty_edges(spark):
