@@ -61,7 +61,7 @@ from slmpy_spark.graph import kernels
 from slmpy_spark.graph.aggregate import aggregate_graph
 from slmpy_spark.graph.edges import degrees, symmetrize, total_weight, vertices
 from slmpy_spark.graph.modularity import modularity
-from slmpy_spark.util import EdgeCache, explain_to, materialize, owned_view
+from slmpy_spark.util import EdgeCache, Frames, explain_to, materialize, owned_view
 
 ASSIGN_SCHEMA = "id long, community long"
 
@@ -154,8 +154,7 @@ def slm_exact(
     )
     first = out.select("q").first()
     q = float(first["q"]) if first else 0.0
-    assign = out.select("id", "community")
-    return assign, q
+    return owned_view(out.select("id", "community"), out), q
 
 
 # ------------------------------------------------- scale mode: LM sweep
@@ -192,7 +191,7 @@ def _attach_sigma(state: DataFrame, bcast: bool) -> DataFrame:
     return state
 
 
-def _lazy_sigma_state(state: DataFrame, bcast: bool = False) -> DataFrame:
+def _lazy_sigma_state(state: DataFrame) -> DataFrame:
     """(id, community, sigma) view of a *materialized* shuffle-level
     state, deriving sigma on the fly: a partial-combining
     groupBy(community).sum (map-side combine → a hub community's rows
@@ -200,9 +199,8 @@ def _lazy_sigma_state(state: DataFrame, bcast: bool = False) -> DataFrame:
     not vertices) hash-joined back.  ``shuffle_hash``: build the tiny
     one-row-per-community side and STREAM the probe partition — a
     sort-merge join would sort the giant community's partition, and a
-    window would buffer it, both single-task stragglers at scale.
-    (`bcast=True` broadcast-joins the tiny side instead — used only by
-    tests/probes; the sweep's bcast levels carry sigma on the state.)
+    window would buffer it, both single-task stragglers at scale.  (The
+    sweep's bcast levels carry sigma on the state instead.)
 
     The sweep references this frame exactly twice (the dst-side
     candidate projection and the zero-weight self rows), both pruned to
@@ -211,8 +209,7 @@ def _lazy_sigma_state(state: DataFrame, bcast: bool = False) -> DataFrame:
     exchange reuse computes them once.  `state` must be a materialize()
     leaf: re-scanning it is reading checkpoint blocks, not recomputing
     a plan."""
-    sig = state.groupBy("community").agg(F.sum("node_w").alias("sigma"))
-    sig = F.broadcast(sig) if bcast else sig.hint("shuffle_hash")
+    sig = state.groupBy("community").agg(F.sum("node_w").alias("sigma")).hint("shuffle_hash")
     return state.select("id", "community").join(sig, "community")
 
 
@@ -425,13 +422,7 @@ def _assign_quality(
         .agg(F.sum(F.col("sigma") * F.col("sigma")).alias("s2"))
     )
     row = intra_df.crossJoin(s2_df).first()
-    intra = float(row["intra"] or 0.0)
-    s2 = float(row["s2"] or 0.0)
-    if two_m == 0:
-        return 0.0
-    if quality == "cpm":
-        return (intra - gamma * s2) / two_m
-    return intra / two_m - gamma * s2 / (two_m * two_m)
+    return _q_of(float(row["intra"] or 0.0), float(row["s2"] or 0.0), two_m, gamma, quality)
 
 
 def _distributed_local_moving(
@@ -509,7 +500,8 @@ def _distributed_local_moving(
             .select("id", "community", "node_w"),
             bcast,
         )
-    state = materialize(state0)
+    frames = Frames()
+    state = frames.own(materialize(state0))
     tp = _phase(level, "lm_state_init", tp)
     best_state = state
     best_q = None
@@ -520,8 +512,9 @@ def _distributed_local_moving(
 
     # Unpersist hygiene: the guard can only ever revert to `best_state`,
     # so any sweep state that is neither `best_state` nor the current
-    # `state` is dead and its checkpoint blocks are freed IMMEDIATELY.
-    # Keeping them until level end (the old `owned` list) let ~16
+    # `state` is dead and its checkpoint blocks are freed IMMEDIATELY
+    # (the `retain` at the end of every sweep, before the next sweep's
+    # job).  Keeping them until level end (the old `owned` list) let ~16
     # vertex-sized row-format block sets pile up in storage memory and
     # evict the level's cached edge table — measured on the 10M-edge
     # ladder as intermittent 3–4× propose-time spikes (cache rebuild)
@@ -535,7 +528,7 @@ def _distributed_local_moving(
                 _propose_moves(sym, state, resolution2, seed, sweep, move_frac, bcast),
                 f"slm_sweep_{'bcast' if bcast else 'shuffle'}",
             )
-        prop = (
+        prop = frames.own(
             _propose_moves(sym, state, resolution2, seed, sweep, move_frac, bcast)
             .observe(
                 obs,
@@ -566,45 +559,34 @@ def _distributed_local_moving(
                 op="slm_sweep", level=level, sweep=sweep, q=q_prev,
                 n_moves=n_moves, move_frac=move_frac,
             )
+        stop = n_moves == 0
+        adopt = True
         if best_q is None:
             best_q = q_prev  # q of the initial assignment
-        elif state is not best_state:
-            if q_guard and q_prev <= best_q + 1e-12:
-                # the state sweep t built on was NOT an improvement:
-                # discard its speculative proposal, damp, retry from best
-                stall += 1
-                move_frac = max(0.125, move_frac / 2)
-                prop.unpersist()
-                doomed = state
-                state = best_state
-                doomed.unpersist()  # rejected state: never needed again
-                pending = False
-                if stall >= patience:
-                    break
-                continue
+        elif pending and q_guard and q_prev <= best_q + 1e-12:
+            # the state sweep t built on was NOT an improvement: discard
+            # it and its speculative proposal, damp, retry from best
+            stall += 1
+            move_frac = max(0.125, move_frac / 2)
+            state, adopt = best_state, False
+            stop = stall >= patience
+        elif pending:
             gained = q_prev - best_q
-            best_q = q_prev
-            old_best = best_state
-            best_state = state
-            old_best.unpersist()  # superseded best: free its blocks now
-            stall = 0
+            best_q, best_state, stall = q_prev, state, 0
             # relax damping on acceptance, but cap at 0.75: measured on
             # the 10M-edge ladder, full (1.0) sweeps gain ~0 Q and get
             # rejected while 0.5-fraction sweeps gain +0.03 each — the
             # synchronous overshoot needs a permanent minority of holdouts
             move_frac = min(0.75, move_frac * 1.5)
-            if q_guard and gained < q_tol:
-                # converged to tolerance: the pending proposal can only
-                # chase diminishing returns — stop here, keep the best
-                prop.unpersist()
-                pending = False
-                break
-        if n_moves == 0:
-            prop.unpersist()
-            pending = False
+            # converged to tolerance: the pending proposal can only
+            # chase diminishing returns — stop here, keep the best
+            stop = stop or (q_guard and gained < q_tol)
+        pending = adopt and not stop
+        if pending:
+            state = prop
+        frames.retain(best_state, state)
+        if stop:
             break
-        state = prop
-        pending = True
 
     tp = _time.time()
     if pending and q_guard:
@@ -622,10 +604,18 @@ def _distributed_local_moving(
         best_state.select("id", "community"), bcast=bcast
     ).transform(materialize)
     tp = _phase(level, "lm_canonical", tp)
-    if state is not best_state:
-        state.unpersist()
-    best_state.unpersist()
+    frames.retain()
     return assign_out
+
+
+def _sweep_edges(frames: Frames, sym: DataFrame, bcast: bool) -> DataFrame:
+    """The edge table a level's sweeps read: `sym` itself at bcast
+    levels; at shuffle levels ONE repartition("dst") + persist of it
+    (util.EdgeCache, owned by `frames`) that every sweep's kic join
+    reuses — and, in the level loop, the split's intra join and the
+    aggregation too — so the edge table is shuffled into this layout
+    exactly once."""
+    return sym if bcast else frames.own(EdgeCache(sym, "dst", eager=True)).df
 
 
 # ----------------------------------------- scale mode: community split
@@ -722,7 +712,8 @@ def _split_communities(
         )
     )
     tp = _time.time()
-    intra = (
+    frames = Frames()
+    intra = frames.own(
         sym.join(a_dst, "dst")
         .join(src_side, "src")
         .where(F.col("c_src") == F.col("c_dst"))
@@ -741,15 +732,12 @@ def _split_communities(
 
     if top > giant_threshold:
         _dbg(f"split: giant community ({top} intra rows) → distributed split")
-        lm_sym = intra.select("src", "dst", "weight")
-        cache = None if bcast else EdgeCache(lm_sym, "dst", eager=True)
         out = _distributed_local_moving(
-            lm_sym if bcast else cache.df, node_w, None,
-            resolution2, seed ^ 0x5BD1E995, max_sweeps, gamma, quality,
-            True, two_m, bcast=bcast, m_l=intra_count,
+            _sweep_edges(frames, intra.select("src", "dst", "weight"), bcast),
+            node_w, None, resolution2, seed ^ 0x5BD1E995, max_sweeps, gamma,
+            quality, True, two_m, bcast=bcast, m_l=intra_count,
         )
-        if cache is not None:
-            cache.free()
+        frames.retain(intra)  # the sweeps' edge cache is done
         # labels are already canonical min-member ids; vertices with no
         # intra edges kept their singleton id — the kernel semantics
         tp = _phase(level, "split_distributed", tp)
@@ -801,7 +789,7 @@ def _split_communities(
             .transform(materialize)
         )
     tp = _phase(level, "split_parent_map", tp)
-    intra.unpersist()
+    frames.retain()
     return out, parent_map
 
 
@@ -815,7 +803,6 @@ def slm_scale(
     seed: int = 0,
     max_levels: int = 12,
     max_sweeps: int = 12,
-    n_parts: int | None = None,
     exact_threshold: int = 200_000,
     q_guard: bool = True,
     checkpointer=None,
@@ -839,10 +826,6 @@ def slm_scale(
     pass chain from singletons under a start-specific seed offset; the
     argmax-Q assignment over all starts/passes is returned (mirrors
     exact mode's best-of-N restarts).
-
-    `n_parts` is accepted for API compatibility but unused: the sweep
-    is a Catalyst aggregation whose parallelism follows
-    spark.sql.shuffle.partitions / AQE, not a manual partition count.
 
     `broadcast_threshold`: levels whose vertex count fits under it run
     every vertex-side join map-side (broadcast) — the edge table is
@@ -873,14 +856,15 @@ def slm_scale(
     # exact regardless of accumulation order) — no separate count /
     # total_weight jobs.
     tp = _time.time()
+    frames = Frames()
     obs0 = Observation()
-    sym0 = materialize(
+    sym0 = frames.own(materialize(
         symmetrize(edges).observe(
             obs0,
             F.count(F.lit(1)).alias("m"),
             F.sum("weight").alias("tw"),
         )
-    )
+    ))
     v0 = obs0.get
     m0 = int(v0["m"] or 0)
     two_m = float(v0["tw"] or 0.0)
@@ -891,7 +875,7 @@ def slm_scale(
     else:
         resolution2 = gamma / two_m if two_m else 0.0
         nw0 = degrees(sym0).select("id", F.col("w_deg").alias("node_w"))
-    nw0 = materialize(nw0.observe(obs_n, F.count(F.lit(1)).alias("n")))
+    nw0 = frames.own(materialize(nw0.observe(obs_n, F.count(F.lit(1)).alias("n"))))
     nv0 = int(obs_n.get["n"] or 0)
     tp = _phase(-1, "setup", tp)
 
@@ -905,7 +889,7 @@ def slm_scale(
             LAST_RUN_STATS["passes"] += 1
             pass_seed = seed + 7919 * it + 104_729 * start
             prev = flat
-            flat = _scale_pass(
+            flat = frames.own(_scale_pass(
                 sym0, nw0, two_m, resolution2, gamma, quality,
                 pass_seed, max_levels, max_sweeps,
                 exact_threshold, q_guard, variant, checkpointer,
@@ -915,60 +899,38 @@ def slm_scale(
                 broadcast_threshold=broadcast_threshold,
                 giant_threshold=giant_threshold,
                 m0=m0, nv0=nv0,
-            )
+            ))
             if variant == "louvain_refine":
                 # multilevel refinement (§1.2(3)): one more LM pass on
                 # the ORIGINAL graph from the merged-down labels; the
                 # guard keeps it monotone, so the pass can only improve Q
                 nv0 = nw0.count()
                 bcast0 = nv0 <= broadcast_threshold
-                cache = None if bcast0 else EdgeCache(sym0, "dst", eager=True)
-                pre_refine = flat
-                flat = _distributed_local_moving(
-                    sym0 if bcast0 else cache.df, nw0, flat, resolution2,
+                flat = frames.own(_distributed_local_moving(
+                    _sweep_edges(frames, sym0, bcast0), nw0, flat, resolution2,
                     pass_seed + max_levels, max_sweeps, gamma, quality,
                     q_guard, two_m, checkpointer=checkpointer,
                     level=max_levels, bcast=bcast0,
-                )
-                if cache is not None:
-                    cache.free()
-                # identity guards (same rule as the best/prev frees
-                # below): an empty-graph _scale_pass can return its
-                # init_flat/warm-start unchanged, so pre_refine may BE
-                # prev or best_flat — freeing it would drop checkpoint
-                # blocks that have no lineage to recompute from
-                if (
-                    pre_refine is not prev
-                    and pre_refine is not best_flat
-                    and pre_refine is not flat
-                ):
-                    pre_refine.unpersist()
+                ))
+                # frees the refine cache and the merged-down labels —
+                # unless an empty-graph pass returned `prev` unchanged
+                frames.retain(sym0, nw0, prev, best_flat, flat)
             tq = _time.time()
             q = modularity(sym0, flat, gamma=gamma, quality=quality, two_m=two_m)
             tq = _phase(-1, "pass_q", tq)
             _dbg(f"start {start} pass {it}: q={q:.6f} (best {best_q})")
-            old_best = best_flat
-            if best_q is None or q > best_q + 1e-9:
+            improved = best_q is None or q > best_q + 1e-9
+            if improved:
                 best_q, best_flat = q, flat
-                if old_best is not None:
-                    old_best.unpersist()
-                if prev is not None and prev is not old_best:
-                    prev.unpersist()
-            else:
-                # pass didn't improve the global best: free it and stop
-                # iterating this start (further passes chase a local
-                # optimum the best already beat).  Identity guards: an
-                # empty-graph pass can return `prev` itself unchanged —
-                # never double-free or free the kept best.
-                if prev is not None and prev is not best_flat and prev is not flat:
-                    prev.unpersist()
-                if flat is not best_flat:
-                    flat.unpersist()
+            # only the best pass's labels outlive the pass; one that did
+            # not improve the global best also stops this start (further
+            # passes chase a local optimum the best already beat)
+            frames.retain(sym0, nw0, best_flat)
+            if not improved:
                 break
 
-    sym0.unpersist()
-    nw0.unpersist()
-    return best_flat.select("id", "community"), best_q
+    frames.retain(best_flat)
+    return owned_view(best_flat.select("id", "community"), best_flat), best_q
 
 
 def _scale_pass(
@@ -986,7 +948,13 @@ def _scale_pass(
     already knows them (observe-ridden on sym0/nw0's checkpoint jobs);
     levels > 0 carry both counts forward from the aggregation step's own
     observe metrics, so the steady-state level loop runs ZERO standalone
-    count jobs."""
+    count jobs.
+
+    Lifetimes: one Frames scope owns every frame the pass creates (and
+    the re-read snapshots of a resume); `sym0`, `nw0` and `init_flat`
+    are borrowed and never freed.  Each level ends by keeping only what
+    the next level reads, and every exit keeps only `flat`."""
+    frames = Frames()
     sym_l = sym0
     node_w_l = nw0
     # carried sizes: edge entries of sym_l / rows of node_w_l (None →
@@ -1004,10 +972,10 @@ def _scale_pass(
         k = checkpointer.latest_step("slm_supergraph")
         if k is not None and k >= step_offset:
             level_start = k + 1 - step_offset
-            sym_l = checkpointer.load_state("slm_supergraph", k).persist()
-            node_w_l = checkpointer.load_state("slm_node_w", k)
-            flat = checkpointer.load_state("slm_assign", k)
-            assign_l = checkpointer.load_state("slm_next_assign", k)
+            sym_l = frames.own(checkpointer.load_state("slm_supergraph", k).persist())
+            node_w_l = frames.own(checkpointer.load_state("slm_node_w", k))
+            flat = frames.own(checkpointer.load_state("slm_assign", k))
+            assign_l = frames.own(checkpointer.load_state("slm_next_assign", k))
             m_known = None
             nv_known = None
 
@@ -1017,7 +985,9 @@ def _scale_pass(
         _dbg(f"level {level}: m={m_l}")
         if m_l <= exact_threshold:
             _dbg(f"level {level}: exact finish (m={m_l})")
-            warm = assign_l
+            # returns its INPUT unchanged when the level's supergraph is
+            # empty (every community absorbed all its edges → aggregate
+            # dropped them as self-loops)
             assign_l = _exact_finish(
                 sym_l,
                 node_w_l,
@@ -1030,53 +1000,31 @@ def _scale_pass(
                 level=level,
             )
             tl = _phase(level, "exact_finish", tl)
-            # _exact_finish returns its INPUT unchanged when the level's
-            # supergraph is empty (every community absorbed all its
-            # edges → aggregate dropped them as self-loops): freeing
-            # `warm` then would free `assign_l` itself — materialize's
-            # unpersist frees real checkpoint blocks with no lineage to
-            # recompute from, so the merge-down below would abort with
-            # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
-            if warm is not None and warm is not init_flat and warm is not assign_l:
-                warm.unpersist()
             _dbg(f"level {level}: exact finish done")
-            prev_flat = flat
             flat = (
                 assign_l
                 if flat is None
-                else _merge_down(
+                else frames.own(_merge_down(
                     flat,
                     assign_l,
                     bcast=(nv_known is not None and nv_known <= broadcast_threshold),
-                )
+                ))
             )
-            if prev_flat is not None and prev_flat is not flat:
-                prev_flat.unpersist()
             break
 
         nv = nv_known if nv_known is not None else node_w_l.count()
         bcast = nv <= broadcast_threshold
         LAST_RUN_STATS["levels"] += 1
-        # level-owned edge cache at shuffle levels: ONE
-        # repartition("dst") + persist reused by every sweep's kic join,
-        # the split's intra join, and the aggregation — the level's edge
-        # table is shuffled into this layout exactly once (sym_l is
-        # already a leaf, so the cache builds no second one)
-        cache = None if bcast else EdgeCache(sym_l, "dst", eager=True)
-        sym_j = sym_l if bcast else cache.df
+        # level-owned edge cache at shuffle levels (sym_l is already a
+        # leaf, so the cache builds no second one)
+        sym_j = _sweep_edges(frames, sym_l, bcast)
         if not bcast:
             tl = _phase(level, "edge_cache", tl)
-        warm = assign_l
-        assign_l = _distributed_local_moving(
+        assign_l = frames.own(_distributed_local_moving(
             sym_j, node_w_l, assign_l, resolution2, seed + level, max_sweeps,
             gamma, quality, q_guard, two_m,
             checkpointer=checkpointer, level=level, bcast=bcast, m_l=m_l,
-        )
-        if warm is not None and warm is not init_flat:
-            # previous level's (materialized) warm-start map is consumed
-            # (LM materialized its own state) — free its blocks; never
-            # touches the caller's init_flat
-            warm.unpersist()
+        ))
         _dbg(f"level {level}: LM done (bcast={bcast}), splitting")
         if checkpointer is not None:
             # per-partition lineage (north star / SURVEY §2.1): which
@@ -1088,19 +1036,14 @@ def _scale_pass(
         parent_map = None
         tl = _time.time()
         if variant == "slm":
-            lm_out = assign_l
-            assign_l, parent_map = _split_communities(
+            assign_l, parent_map = map(frames.own, _split_communities(
                 sym_j, node_w_l, assign_l, resolution2, seed + level,
                 bcast=bcast, gamma=gamma, quality=quality, two_m=two_m,
                 max_sweeps=max_sweeps, giant_threshold=giant_threshold,
                 level=level,
-            )
-            lm_out.unpersist()  # split output (materialized) supersedes it
+            ))
 
-        prev_flat = flat
-        flat = assign_l if flat is None else _merge_down(flat, assign_l, bcast=bcast)
-        if prev_flat is not None and prev_flat is not flat:
-            prev_flat.unpersist()
+        flat = assign_l if flat is None else frames.own(_merge_down(flat, assign_l, bcast=bcast))
         tl = _phase(level, "merge_down", tl)
 
         _dbg(f"level {level}: split done, aggregating")
@@ -1110,7 +1053,7 @@ def _scale_pass(
         # as an observe metric — no standalone count job; it also
         # becomes the carried vertex count of the next level
         obs_nw = Observation()
-        node_w_next = materialize(
+        node_w_next = frames.own(materialize(
             node_w_l.join(
                 F.broadcast(assign_l) if bcast else assign_l, "id"
             )
@@ -1118,43 +1061,24 @@ def _scale_pass(
             .agg(F.sum("node_w").alias("node_w"))
             .select(F.col("community").alias("id"), "node_w")
             .observe(obs_nw, F.count(F.lit(1)).alias("n"))
-        )
+        ))
         n_vertices, n_comms = nv, int(obs_nw.get["n"] or 0)
         tl = _phase(level, "node_w_next", tl)
         if n_comms >= n_vertices:
-            node_w_next.unpersist()
-            if parent_map is not None:
-                parent_map.unpersist()  # materialized but never used
-            if cache is not None:
-                cache.free()
             break  # nothing merged at this level → converged
 
         super_edges, _sw = aggregate_graph(sym_j, assign_l, bcast=bcast)
         explain_to(super_edges, "slm_aggregate")
-        old_sym = sym_l
         # next level's edge-entry count rides the aggregation's own
         # checkpoint action (steady-state: zero standalone count jobs
         # per level)
         obs_m = Observation()
-        sym_l = materialize(
+        sym_l = frames.own(materialize(
             super_edges.observe(obs_m, F.count(F.lit(1)).alias("m"))
-        )
+        ))
         m_known = int(obs_m.get["m"] or 0)
         nv_known = n_comms
         tl = _phase(level, "aggregate", tl)
-        # the level's (materialized) assignment is now fully consumed —
-        # merge-down, node_w_next, and the aggregation above are all
-        # materialized over their own blocks — so its checkpoint blocks
-        # are dead weight.  At level 0 it IS `flat` (merge-down returns
-        # the first level unchanged): freeing it would free the result.
-        if assign_l is not flat and assign_l is not init_flat:
-            assign_l.unpersist()
-        if cache is not None:
-            cache.free()
-        if old_sym is not sym0:
-            old_sym.unpersist()
-        if node_w_l is not nw0:
-            node_w_l.unpersist()
         node_w_l = node_w_next
         _dbg(f"level {level}: aggregated, nv/nc={n_vertices}/{n_comms}")
         # next level's initial clustering: SLM groups subcommunities by
@@ -1166,9 +1090,7 @@ def _scale_pass(
             # weights, next level's warm-start clustering) — everything
             # `resume` needs to restart here
             step = step_offset + level
-            old_flat = flat
-            flat = checkpointer.save_state("slm_assign", step, flat)
-            old_flat.unpersist()
+            flat = frames.own(checkpointer.save_state("slm_assign", step, flat))
             checkpointer.save_state("slm_node_w", step, node_w_l)
             checkpointer.save_state("slm_supergraph", step, sym_l)
             if assign_l is not None:  # None = singletons (louvain)
@@ -1176,18 +1098,14 @@ def _scale_pass(
             checkpointer.log_metric(
                 op="slm", level=level, step=step, edges=m_l, communities=n_comms
             )
+        # the level's assignment, edge cache, supergraph and node
+        # weights are consumed: everything that read them (merge-down,
+        # node_w_next, the aggregation, the snapshot) is materialized
+        frames.retain(sym_l, node_w_l, assign_l, flat)
 
-    if sym_l is not sym0:
-        sym_l.unpersist()
-    # every loop exit (exact-finish break, converged break, max_levels
-    # exhaustion) lands here still holding the last level's node-weight
-    # leaf and possibly a dangling assignment (the converged break's
-    # split output, or an exhaustion pass's never-consumed warm-start
-    # parent map) — free both; `flat` and the caller's init_flat stay
-    if node_w_l is not nw0:
-        node_w_l.unpersist()
-    if assign_l is not None and assign_l is not flat and assign_l is not init_flat:
-        assign_l.unpersist()
+    # every exit (exact-finish break, converged break, max_levels
+    # exhaustion) keeps only the result
+    frames.retain(flat)
     return flat
 
 

@@ -140,6 +140,40 @@ class EdgeCache:
             self.leaf.unpersist()
 
 
+class Frames:
+    """One ownership scope for the frames a loop creates.
+
+    ``own(x)`` registers a materialized, persisted or re-read frame, or
+    an ``EdgeCache``, and returns it (registering it again, or ``None``,
+    is a no-op).  ``retain(*live)`` frees, newest first, every owned
+    object that is not one of `live` by identity, so a cache goes
+    before the leaf it was built over.  Callers state only what is
+    still live: a frame bound to several names is kept while any of
+    them is listed, and borrowed inputs are never owned, so never
+    freed.  Freed checkpoint blocks have no lineage to recompute from —
+    retain only once every frame derived from a dead one is
+    materialized."""
+
+    def __init__(self):
+        self._owned: list = []
+
+    def own(self, x):
+        if x is not None and not any(x is o for o in self._owned):
+            self._owned.append(x)
+        return x
+
+    def retain(self, *live) -> None:
+        kept = []
+        for x in reversed(self._owned):
+            if any(x is k for k in live):
+                kept.append(x)
+            elif isinstance(x, EdgeCache):
+                x.free()
+            else:
+                x.unpersist()
+        self._owned = kept[::-1]
+
+
 def owned_view(view: DataFrame, leaf: DataFrame) -> DataFrame:
     """Return `view` (a projection over the materialize() leaf `leaf`)
     with `.unpersist()` freeing the leaf's blocks: Dataset.unpersist only

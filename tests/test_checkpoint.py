@@ -134,7 +134,7 @@ def test_slm_scale_checkpoints_resumable(spark, tmp_path):
     and must produce the identical final assignment."""
     und = G.g_two_cliques()
     e = edges_df(spark, und)
-    kw = dict(seed=42, mode="scale", n_parts=2, exact_threshold=0, max_sweeps=4)
+    kw = dict(seed=42, mode="scale", exact_threshold=0, max_sweeps=4)
 
     ck = Checkpointer(spark, str(tmp_path), run_id="slm1")
     assign, q = engine.slm(e, checkpointer=ck, **kw)

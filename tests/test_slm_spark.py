@@ -68,7 +68,7 @@ def test_slm_scale_two_cliques_q_class(spark):
     a stable optimum (labels may differ in sequence, Q must match)."""
     e = edges_df(spark, G.g_two_cliques())
     assign, q = engine.slm(
-        e, seed=42, mode="scale", n_parts=2, exact_threshold=0, max_sweeps=6
+        e, seed=42, mode="scale", exact_threshold=0, max_sweeps=6
     )
     assert canon_df(assign) == [tuple(range(6)), tuple(range(6, 12))]
     oq = O.modularity_oracle(
@@ -80,7 +80,7 @@ def test_slm_scale_two_cliques_q_class(spark):
 def test_slm_scale_ring_cliques(spark):
     e = edges_df(spark, G.g_ring_cliques_4())
     assign, q = engine.slm(
-        e, seed=42, mode="scale", n_parts=3, exact_threshold=0, max_sweeps=8
+        e, seed=42, mode="scale", exact_threshold=0, max_sweeps=8
     )
     _, oq = O.slm_oracle(G.g_ring_cliques_4(), seed=42)
     assert q == pytest.approx(oq, abs=1e-6)
@@ -94,7 +94,7 @@ def test_slm_scale_powerlaw_reasonable_q(spark):
     # production path: distributed LM+split at level 0 (graph above the
     # exact threshold), exact kernel for the shrunken super-levels
     assign, q = engine.slm(
-        e, seed=42, mode="scale", n_parts=4, exact_threshold=600, max_sweeps=8
+        e, seed=42, mode="scale", exact_threshold=600, max_sweeps=8
     )
     _, oq = O.slm_oracle(und, seed=42)
     assert q >= oq - 0.03

@@ -1,6 +1,7 @@
-"""The shared superstep driver and edge-cache owner (slmpy_spark.util):
-result ownership of the iterative operators, the plan-audit dump names,
-and the edge cache's leaf ownership."""
+"""The shared superstep driver, edge-cache owner and frame-ownership
+scope (slmpy_spark.util): result ownership of the iterative operators
+and SLM, the plan-audit dump names, the edge cache's leaf ownership and
+the Frames scope."""
 
 import os
 
@@ -11,7 +12,8 @@ from slmpy_spark.checkpoint import Checkpointer
 from slmpy_spark.graph.components import connected_components
 from slmpy_spark.graph.labelprop import label_propagation
 from slmpy_spark.graph.pagerank import pagerank
-from slmpy_spark.util import EdgeCache, materialize
+from slmpy_spark.graph.slm import slm
+from slmpy_spark.util import EdgeCache, Frames, materialize
 
 from tests.conftest import edges_df
 
@@ -25,6 +27,20 @@ OPERATORS = {
     ),
     "components": lambda e, ck: connected_components(e, checkpointer=ck),
     "labelprop": lambda e, ck: label_propagation(e, max_iter=3, checkpointer=ck),
+    "slm-exact": lambda e, ck: slm(e, mode="exact", seed=1)[0],
+    # on FIVE_EDGES with exact_threshold=0 the level-1 supergraph is
+    # empty, so the exact finish hands its input back unchanged
+    "slm-scale-bcast": lambda e, ck: slm(
+        e, mode="scale", exact_threshold=0, seed=1, checkpointer=ck
+    )[0],
+    "slm-scale-shuffle": lambda e, ck: slm(
+        e, mode="scale", exact_threshold=0, broadcast_threshold=1, seed=1,
+        checkpointer=ck,
+    )[0],
+    "slm-louvain_refine": lambda e, ck: slm(
+        e, mode="scale", exact_threshold=0, variant="louvain_refine",
+        n_random_starts=2, n_iterations=2, seed=1, checkpointer=ck,
+    )[0],
 }
 
 
@@ -84,3 +100,45 @@ def test_edge_cache_frees_only_its_own_leaf(spark):
     assert leaf.count() == 5
     leaf.unpersist()
     assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_frames_retain_keeps_a_frame_live_under_any_name(spark):
+    """A frame bound to two names is one owned object: retaining it
+    under either name keeps its checkpoint blocks readable."""
+    edges = edges_df(spark, FIVE_EDGES)
+    before = _persistent_rdd_ids(spark)
+    frames = Frames()
+    a = frames.own(materialize(edges))
+    b = frames.own(a)
+    frames.own(materialize(edges.where(F.col("src") < 2)))
+    frames.retain(b)
+    assert len(_persistent_rdd_ids(spark) - before) == 1  # only `a` left
+    assert a.count() == 5
+    frames.retain()
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_frames_never_free_a_borrowed_frame(spark):
+    """retain() frees only what the scope owns: a frame it never owned
+    (a caller's input) keeps its blocks."""
+    edges = edges_df(spark, FIVE_EDGES)
+    borrowed = materialize(edges)
+    before = _persistent_rdd_ids(spark)
+    frames = Frames()
+    frames.own(materialize(edges.where(F.col("src") < 2)))
+    frames.retain()
+    assert _persistent_rdd_ids(spark) == before
+    assert borrowed.count() == 5
+    borrowed.unpersist()
+
+
+def test_frames_free_an_owned_edge_cache(spark):
+    """An owned EdgeCache is freed through free(): its cache and the
+    leaf it built both go."""
+    edges = edges_df(spark, FIVE_EDGES)
+    before = _persistent_rdd_ids(spark)
+    frames = Frames()
+    cache = frames.own(EdgeCache(edges.where(F.col("src") < 4), "dst", eager=True))
+    assert cache.df.count() == 4
+    frames.retain()
+    assert _persistent_rdd_ids(spark) == before
