@@ -33,17 +33,10 @@ REPO = os.path.dirname(HERE)
 WORKER = r"""
 import json, os, sys, time
 sys.path.insert(0, os.environ["SLMPY_REPO"])
-from pyspark.sql import SparkSession
+from slmpy_spark.util import local_session
 cpus = int(sys.argv[1]); n_nodes = int(sys.argv[2]); m_target = int(sys.argv[3])
 cache = sys.argv[4] if len(sys.argv) > 4 else ""
-spark = (SparkSession.builder.master(f"local[{cpus}]")
-    .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.driver.memory", "24g")
-    .config("spark.ui.enabled", "false").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+spark = local_session(cpus, "24g")
 import pandas as pd
 from tests.genfixtures import g_powerlaw_arrays
 from slmpy_spark import engine

@@ -31,8 +31,7 @@ REPO = os.path.dirname(HERE)
 WORKER = r"""
 import json, os, sys, time
 sys.path.insert(0, os.environ["SLMPY_REPO"])
-import numpy as np
-from pyspark.sql import SparkSession, functions as F
+from slmpy_spark.util import local_session
 
 cpus = int(sys.argv[1])
 n_nodes = int(sys.argv[2])
@@ -40,19 +39,7 @@ m_target = int(sys.argv[3])
 op = sys.argv[4]
 cache_path = sys.argv[5] if len(sys.argv) > 5 else ""
 
-spark = (SparkSession.builder.master(f"local[{cpus}]")
-    .appName(f"scaling-{cpus}")
-    .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-    .config("spark.sql.adaptive.enabled", "true")
-    # sandbox inputs are a few hundred MB; the default 64MB advisory
-    # size would coalesce every reduce stage to ~4 tasks and hide the
-    # core-count scaling that data volume provides in production
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.driver.memory", os.environ.get("SLMPY_DRIVER_MEM", "24g"))
-    .config("spark.ui.enabled", "false")
-    .getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+spark = local_session(cpus, os.environ.get("SLMPY_DRIVER_MEM", "24g"))
 
 from tests.genfixtures import g_powerlaw_arrays
 from slmpy_spark import engine
@@ -79,7 +66,7 @@ engine.degrees(engine.symmetrize(edges)).count()
 t0 = time.time()
 if op == "slm":
     from slmpy_spark.graph.slm import LAST_RUN_STATS
-    # generous sweep budget — the per-level q_tol stopping rule exits
+    # generous sweep budget — the per-level Q_TOL stopping rule exits
     # early once a level's Q gain flattens, so levels converge properly
     # and the hierarchy collapses in few levels
     assign, q = engine.slm(edges, seed=42, mode="scale", max_sweeps=16,

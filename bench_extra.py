@@ -28,21 +28,9 @@ def main() -> None:
     )
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    from pyspark.sql import SparkSession
+    from slmpy_spark.util import local_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("slmpy_spark-bench-extra")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(cpus, os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
 
     from slmpy_spark import engine
     from slmpy_spark.sources.docs import documents_to_edges

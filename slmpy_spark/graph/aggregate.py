@@ -2,8 +2,6 @@
 
 - aggregate_graph (G7): communities → super-nodes; inter-community
   weights summed, intra-community weight becomes super-node self-weight.
-- merge_down (G9): cluster[i] = clusterReduced[cluster[i]] — one
-  equi-join per hierarchy level unwind.
 - relabel_by_size (G10): renumber communities 0..k-1 ordered by
   (size desc, old id asc) — canonical form for permutation-invariant
   fixture comparison.
@@ -53,16 +51,6 @@ def aggregate_graph(sym: DataFrame, assign: DataFrame, bcast: bool = False):
         F.col("cs").alias("id"), F.col("weight").alias("self_weight")
     )
     return super_edges, self_weights
-
-
-def merge_down(assign: DataFrame, reduced_assign: DataFrame) -> DataFrame:
-    """cluster[i] := clusterReduced[cluster[i]]  (G9)."""
-    r = reduced_assign.select(
-        F.col("id").alias("community"), F.col("community").alias("new_community")
-    )
-    return assign.join(r, "community").select(
-        "id", F.col("new_community").alias("community")
-    )
 
 
 def relabel_by_size(assign: DataFrame) -> DataFrame:

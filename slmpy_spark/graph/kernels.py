@@ -23,8 +23,8 @@ family.  Pinned semantics (SURVEY.md §1.1–1.2; re-verify against
 Everything operates on CSR arrays (indptr, nbr, wgt) — contiguous,
 cache-friendly, built per Arrow batch with O(m) numpy sorts.  Graphs
 here are *symmetrized* and self-loop-free; self-loop weight created by
-aggregation is carried as the scalar ``total_self_w`` (it shifts Q by a
-constant and never affects a move decision).
+aggregation shifts Q by a constant and never affects a move decision, so
+the kernels drop it.
 """
 
 from __future__ import annotations
@@ -47,6 +47,23 @@ def build_csr(n: int, src: np.ndarray, dst: np.ndarray, wgt: np.ndarray):
         np.asarray(dst, dtype=np.int64)[order],
         np.asarray(wgt, dtype=np.float64)[order],
     )
+
+
+def dense_ids(src: np.ndarray, dst: np.ndarray, *more: np.ndarray):
+    """Map arbitrary int64 vertex ids to dense 0..n-1.  Returns
+    (ids, lsrc, ldst, *lmore): `ids` the sorted distinct ids over every
+    input, then each input as indices into `ids`."""
+    ids = np.unique(np.concatenate([src, dst, *more]))
+    return (ids, *(np.searchsorted(ids, x) for x in (src, dst, *more)))
+
+
+def min_member(ids: np.ndarray, cluster: np.ndarray) -> np.ndarray:
+    """Per node, the smallest id in its cluster (cluster labels are
+    dense indices ≥ 0) — the canonical, globally unique community label
+    of the scale mode."""
+    min_id = np.full(int(cluster.max()) + 1, np.iinfo(np.int64).max)
+    np.minimum.at(min_id, cluster, ids)
+    return min_id[cluster]
 
 
 def compactify(cluster: np.ndarray) -> int:
@@ -154,16 +171,14 @@ def local_moving_chunked(
     cluster: np.ndarray,
     resolution2: float,
     rng: np.random.Generator,
-    max_rounds: int = 16,
-    n_chunks: int = 64,
 ) -> bool:
     """Vectorized local moving for *large* subgraphs (the distributed
     split kernel's hot path): rounds of seeded-random chunks, each chunk
     deciding moves vectorized (lexsort + reduceat) against σ totals
-    updated between chunks.  Converges to the same Q-class as the
-    sequential `local_moving` but is ~50× faster per node on big
-    blocks; exact label-sequence parity is NOT preserved (exact mode
-    keeps the sequential kernel).
+    updated between chunks, for at most 16 rounds.  Converges to the
+    same Q-class as the sequential `local_moving` but is ~50× faster per
+    node on big blocks; exact label-sequence parity is NOT preserved
+    (exact mode keeps the sequential kernel).
 
     Singleton escapes use cluster slots n..2n-1 (slot n+j for node j);
     labels are compactified before returning.  Mutates `cluster`.
@@ -175,24 +190,21 @@ def local_moving_chunked(
     sigma = np.bincount(cluster, weights=node_w, minlength=2 * n).astype(np.float64)
     update = False
 
-    two_m = float(wgt.sum())
-    e_src = row_src  # alias for the intra-weight Q check
-
     def q_of(cl):
-        intra = float(wgt[cl[e_src] == cl[nbr]].sum())
+        intra = float(wgt[cl[row_src] == cl[nbr]].sum())
         tot = np.bincount(cl, weights=node_w)
         return intra - resolution2 * float(tot @ tot)  # monotone in Q
 
     best_cluster = cluster.copy()
     best_q = q_of(cluster)
 
-    for _ in range(max_rounds):
+    for _ in range(16):
         order = rng.permutation(n)
         # chunk count: small graphs need MANY small chunks (the chunks
         # are the sequentialism — one chunk = fully synchronous =
-        # husband-wife oscillation); huge graphs cap at `n_chunks` for
+        # husband-wife oscillation); huge graphs cap at 64 chunks for
         # vectorization width
-        k_chunks = int(min(n, max(16, min(n_chunks, n // 64 + 1))))
+        k_chunks = int(min(n, max(16, min(64, n // 64 + 1))))
         chunk_of = np.empty(n, dtype=np.int64)
         chunk_of[order] = np.arange(n, dtype=np.int64) * k_chunks // n
         row_chunk = chunk_of[row_src]
@@ -439,16 +451,15 @@ def quality_numpy(
     cluster,
     gamma: float = 1.0,
     quality: str = "modularity",
-    total_self_w: float = 0.0,
     two_m: float | None = None,
 ) -> float:
     """Q of a clustering on a CSR graph (§1.1). `two_m` lets callers pin
     the level-0 normalization when evaluating on reduced networks."""
     n = indptr.size - 1
     e_src = np.repeat(np.arange(n, dtype=np.int64), np.diff(indptr))
-    intra = float(wgt[cluster[e_src] == cluster[nbr]].sum()) + total_self_w
+    intra = float(wgt[cluster[e_src] == cluster[nbr]].sum())
     if two_m is None:
-        two_m = float(wgt.sum()) + total_self_w
+        two_m = float(wgt.sum())
     if two_m == 0:
         return 0.0
     if quality == "cpm":
@@ -459,6 +470,18 @@ def quality_numpy(
 
 
 # --------------------------------------------------- iterated wrappers
+
+
+def level_step(variant: str, fast: bool = False):
+    """One hierarchy pass of `variant` ("slm" | "louvain" |
+    "louvain_refine") as step(indptr, nbr, wgt, node_w, cluster,
+    resolution2, rng) -> changed.  The recursive kernel is looked up
+    when the step runs, so a patched module attribute is the one
+    called.  `fast`: see slm_recursive."""
+    if variant == "slm":
+        return lambda *a: slm_recursive(*a, fast=fast)
+    refine = {"louvain": False, "louvain_refine": True}[variant]
+    return lambda *a: louvain_recursive(*a, refine=refine, fast=fast)
 
 
 def run_slm(
@@ -488,12 +511,7 @@ def run_slm(
         two_m = float(w.sum())
         resolution2 = gamma / two_m if two_m else 0.0
 
-    step = {
-        "slm": slm_recursive,
-        "louvain": louvain_recursive,
-        "louvain_refine": lambda *a: louvain_recursive(*a, refine=True),
-    }[variant]
-
+    step = level_step(variant)
     best_cluster, best_q = None, -np.inf
     for start in range(max(1, n_random_starts)):
         rng = np.random.Generator(np.random.PCG64(seed + start))

@@ -73,7 +73,6 @@ def modularity(
     gamma: float = 1.0,
     quality: str = "modularity",
     self_weights: DataFrame | None = None,
-    total_self_weight: float = 0.0,
     two_m: float | None = None,
 ) -> float:
     """Compute Q for a given assignment (driver-side scalar).
@@ -81,16 +80,14 @@ def modularity(
     quality: "modularity" (standard, degree node weights) or "cpm"
     (constant Potts model, unit node weights, unnormalized γ).
 
-    `two_m`: pass the known total weight (Σ weight over `sym`, BEFORE
-    adding `total_self_weight`) to skip the edge-sized scan that
-    re-derives it — iterative callers (slm_scale's per-pass Q) already
+    `two_m`: pass the known total weight (Σ weight over `sym`) to skip
+    the edge-sized scan that re-derives it — iterative callers (slm_scale's per-pass Q) already
     hold it.
     """
     agg = community_aggregates(sym, assign, self_weights=self_weights)
     if two_m is None:
         row = sym.agg(F.sum("weight").alias("tw")).first()
         two_m = float(row["tw"] or 0.0)
-    two_m = two_m + total_self_weight
     if two_m == 0.0:
         return 0.0
     comm = agg.select(

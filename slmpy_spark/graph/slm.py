@@ -59,7 +59,7 @@ from pyspark.sql import functions as F
 
 from slmpy_spark.graph import kernels
 from slmpy_spark.graph.aggregate import aggregate_graph
-from slmpy_spark.graph.edges import degrees, symmetrize, total_weight, vertices
+from slmpy_spark.graph.edges import degrees, symmetrize, vertices
 from slmpy_spark.graph.modularity import modularity
 from slmpy_spark.util import EdgeCache, Frames, explain_to, materialize, owned_view
 
@@ -93,18 +93,6 @@ def _phase(level, name: str, t0: float) -> float:
 # ------------------------------------------------------------- helpers
 
 
-def _dense_run(pdf: pd.DataFrame, fn, **kw):
-    """Remap arbitrary long ids to dense 0..n-1, run a kernels.* entry
-    point, map back. Returns (ids, cluster, extra)."""
-    src = pdf["src"].to_numpy(dtype=np.int64)
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
-    w = pdf["weight"].to_numpy(dtype=np.float64)
-    ids = np.unique(np.concatenate([src, dst]))
-    lsrc = np.searchsorted(ids, src)
-    ldst = np.searchsorted(ids, dst)
-    return ids, fn(len(ids), lsrc, ldst, w, **kw)
-
-
 def _canonical_labels(assign: DataFrame, bcast: bool = False) -> DataFrame:
     """community → min member vertex id (stable, collision-free labels
     across sweeps; also the scale-mode community id convention).
@@ -134,9 +122,14 @@ def slm_exact(
     sym = symmetrize(edges)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids, (cluster, q) = _dense_run(
-            pdf,
-            kernels.run_slm,
+        ids, lsrc, ldst = kernels.dense_ids(
+            pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
+        )
+        cluster, q = kernels.run_slm(
+            len(ids),
+            lsrc,
+            ldst,
+            pdf["weight"].to_numpy(np.float64),
             gamma=gamma,
             quality=quality,
             n_random_starts=n_random_starts,
@@ -425,6 +418,20 @@ def _assign_quality(
     return _q_of(float(row["intra"] or 0.0), float(row["s2"] or 0.0), two_m, gamma, quality)
 
 
+#: the first sweep's mover fraction.  A full (1.0) synchronous sweep
+#: from a fresh state always overshoots (every boundary vertex jumps
+#: simultaneously — measured: the full-frac opening sweep was rejected
+#: at EVERY level of the 10M-edge ladder), so starting at 0.5 saves two
+#: wasted edge scans per level; the fraction relaxes as sweeps are
+#: accepted.
+INIT_FRAC = 0.5
+#: convergence tolerance — stop sweeping when an accepted sweep
+#: improved Q by less than this (the level's remaining gain belongs to
+#: cheaper, smaller levels above).  Generous `max_sweeps` budgets are
+#: safe with it.
+Q_TOL = 1e-4
+
+
 def _distributed_local_moving(
     sym: DataFrame,
     node_w: DataFrame,
@@ -434,29 +441,14 @@ def _distributed_local_moving(
     max_sweeps: int,
     gamma: float,
     quality: str,
-    q_guard: bool,
     two_m: float,
     checkpointer=None,
     level: int = 0,
     bcast: bool = False,
     m_l: int = 0,
-    init_frac: float = 0.5,
-    q_tol: float = 1e-4,
 ) -> DataFrame:
-    """Superstep local moving with adaptive damping and a *deferred*
-    monotone-Q guard.
-
-    `init_frac`: the first sweep's mover fraction.  A full (1.0)
-    synchronous sweep from a fresh state always overshoots (every
-    boundary vertex jumps simultaneously — measured: the full-frac
-    opening sweep was rejected at EVERY level of the 10M-edge ladder),
-    so starting at 0.5 saves two wasted edge scans per level; the
-    fraction relaxes to 1.0 as sweeps are accepted.
-
-    `q_tol`: convergence tolerance — stop sweeping when an accepted
-    sweep improved Q by less than this (the level's remaining gain
-    belongs to cheaper, smaller levels above).  Generous `max_sweeps`
-    budgets are safe with it.
+    """Superstep local moving with adaptive damping (starting at
+    INIT_FRAC, stopping at Q_TOL) and a *deferred* monotone-Q guard.
 
     Sweep t's decision job also yields (for free, see _propose_moves)
     the exact Q of the assignment it was proposed FROM.  So the guard
@@ -505,7 +497,7 @@ def _distributed_local_moving(
     tp = _phase(level, "lm_state_init", tp)
     best_state = state
     best_q = None
-    move_frac = init_frac
+    move_frac = INIT_FRAC
     patience = 4
     stall = 0
     pending = False  # does `state` hold an adopted-but-unevaluated proposal?
@@ -563,7 +555,7 @@ def _distributed_local_moving(
         adopt = True
         if best_q is None:
             best_q = q_prev  # q of the initial assignment
-        elif pending and q_guard and q_prev <= best_q + 1e-12:
+        elif pending and q_prev <= best_q + 1e-12:
             # the state sweep t built on was NOT an improvement: discard
             # it and its speculative proposal, damp, retry from best
             stall += 1
@@ -580,7 +572,7 @@ def _distributed_local_moving(
             move_frac = min(0.75, move_frac * 1.5)
             # converged to tolerance: the pending proposal can only
             # chase diminishing returns — stop here, keep the best
-            stop = stop or (q_guard and gained < q_tol)
+            stop = stop or gained < Q_TOL
         pending = adopt and not stop
         if pending:
             state = prop
@@ -589,7 +581,7 @@ def _distributed_local_moving(
             break
 
     tp = _time.time()
-    if pending and q_guard:
+    if pending:
         # last adopted proposal was never revealed by a later sweep —
         # evaluate it once; keep it only if it beats the best
         q_final = _assign_quality(sym, state, two_m, gamma, quality, bcast=bcast)
@@ -597,8 +589,6 @@ def _distributed_local_moving(
         if best_q is None or q_final > best_q + 1e-12:
             best_state = state
         tp = _phase(level, "lm_final_eval", tp)
-    elif pending:
-        best_state = state
 
     assign_out = _canonical_labels(
         best_state.select("id", "community"), bcast=bcast
@@ -630,13 +620,12 @@ def _split_kernel_factory(resolution2: float, seed: int):
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
         comm = int(key[0])
-        src = pdf["src"].to_numpy(np.int64)
-        dst = pdf["dst"].to_numpy(np.int64)
-        w = pdf["weight"].to_numpy(np.float64)
-        ids = np.unique(np.concatenate([src, dst]))
-        lsrc = np.searchsorted(ids, src)
-        ldst = np.searchsorted(ids, dst)
-        indptr, nbr, wgt = kernels.build_csr(len(ids), lsrc, ldst, w)
+        ids, lsrc, ldst = kernels.dense_ids(
+            pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
+        )
+        indptr, nbr, wgt = kernels.build_csr(
+            len(ids), lsrc, ldst, pdf["weight"].to_numpy(np.float64)
+        )
         # node weights: every id appears as src (sym table) — gather its
         # w_src from the first row of its CSR-sorted slice (vectorized;
         # ids without src rows keep 0, they have no edges here anyway)
@@ -649,17 +638,8 @@ def _split_kernel_factory(resolution2: float, seed: int):
         # the reference); chunked vectorized kernel for big ones
         # (a power-law hub community can hold most of the graph — a
         # per-node Python loop there would serialize the whole stage)
-        if len(ids) <= 4096:
-            kernels.local_moving(indptr, nbr, wgt, node_w, cluster, resolution2, rng)
-        else:
-            kernels.local_moving_chunked(
-                indptr, nbr, wgt, node_w, cluster, resolution2, rng
-            )
-        # local cluster index → min member vertex id (ids is sorted, so
-        # a min-scatter over cluster indices gives it vectorized)
-        min_id = np.full(int(cluster.max()) + 1, np.iinfo(np.int64).max)
-        np.minimum.at(min_id, cluster, ids)
-        return pd.DataFrame({"id": ids, "sub": min_id[cluster]})
+        kernels._lm_auto(indptr, nbr, wgt, node_w, cluster, resolution2, rng)
+        return pd.DataFrame({"id": ids, "sub": kernels.min_member(ids, cluster)})
 
     return kernel
 
@@ -735,7 +715,7 @@ def _split_communities(
         out = _distributed_local_moving(
             _sweep_edges(frames, intra.select("src", "dst", "weight"), bcast),
             node_w, None, resolution2, seed ^ 0x5BD1E995, max_sweeps, gamma,
-            quality, True, two_m, bcast=bcast, m_l=intra_count,
+            quality, two_m, bcast=bcast, m_l=intra_count,
         )
         frames.retain(intra)  # the sweeps' edge cache is done
         # labels are already canonical min-member ids; vertices with no
@@ -804,7 +784,6 @@ def slm_scale(
     max_levels: int = 12,
     max_sweeps: int = 12,
     exact_threshold: int = 200_000,
-    q_guard: bool = True,
     checkpointer=None,
     variant: str = "slm",
     resume: bool = False,
@@ -839,7 +818,6 @@ def slm_scale(
     start.  Per-level seeds are `seed + level`, so the remaining
     levels replay as the uninterrupted run would (modulo sweeps'
     snapshot timing)."""
-    spark = edges.sparkSession
     LAST_RUN_STATS.update(sweeps=0, levels=0, passes=0, edge_entries_swept=0)
 
     # materialize (checkpoint leaf), NOT persist: every level-0 sweep's
@@ -847,10 +825,11 @@ def slm_scale(
     # CacheManager.useCachedData + AQE replanning canonicalize those
     # embedded trees per sweep — measured ~1.0s/sweep of driver-side
     # 'optimization' phase against ~26ms of actual rule execution when
-    # sym0 carries the caller's full lineage (BENCH/qe_stage_probe.py:
-    # 1.06s → 0.085s with a leaf).  A leaf costs one checkpoint job up
-    # front (same price as persist+count) and collapses every
-    # downstream cache's embedded plan to scan-over-LogicalRDD.
+    # sym0 carries the caller's full lineage (BENCH/NOTES.md, "The
+    # planning floor localized": 1.06s → 0.085s with a leaf).  A leaf
+    # costs one checkpoint job up front (same price as persist+count)
+    # and collapses every downstream cache's embedded plan to
+    # scan-over-LogicalRDD.
     # The edge-entry count and 2m ride the checkpoint action as observe
     # metrics (weights are integral on web link graphs, so the sum is
     # exact regardless of accumulation order) — no separate count /
@@ -892,7 +871,7 @@ def slm_scale(
             flat = frames.own(_scale_pass(
                 sym0, nw0, two_m, resolution2, gamma, quality,
                 pass_seed, max_levels, max_sweeps,
-                exact_threshold, q_guard, variant, checkpointer,
+                exact_threshold, variant, checkpointer,
                 step_offset=(start * n_iters + it) * max_levels,
                 init_flat=prev,
                 resume=(resume and it == 0 and start == 0),
@@ -904,12 +883,11 @@ def slm_scale(
                 # multilevel refinement (§1.2(3)): one more LM pass on
                 # the ORIGINAL graph from the merged-down labels; the
                 # guard keeps it monotone, so the pass can only improve Q
-                nv0 = nw0.count()
                 bcast0 = nv0 <= broadcast_threshold
                 flat = frames.own(_distributed_local_moving(
                     _sweep_edges(frames, sym0, bcast0), nw0, flat, resolution2,
                     pass_seed + max_levels, max_sweeps, gamma, quality,
-                    q_guard, two_m, checkpointer=checkpointer,
+                    two_m, checkpointer=checkpointer,
                     level=max_levels, bcast=bcast0,
                 ))
                 # frees the refine cache and the merged-down labels —
@@ -935,7 +913,7 @@ def slm_scale(
 
 def _scale_pass(
     sym0, nw0, two_m, resolution2, gamma, quality, seed, max_levels,
-    max_sweeps, exact_threshold, q_guard, variant,
+    max_sweeps, exact_threshold, variant,
     checkpointer, step_offset, init_flat, resume,
     broadcast_threshold=250_000,
     giant_threshold: int = 1_000_000,
@@ -1022,7 +1000,7 @@ def _scale_pass(
             tl = _phase(level, "edge_cache", tl)
         assign_l = frames.own(_distributed_local_moving(
             sym_j, node_w_l, assign_l, resolution2, seed + level, max_sweeps,
-            gamma, quality, q_guard, two_m,
+            gamma, quality, two_m,
             checkpointer=checkpointer, level=level, bcast=bcast, m_l=m_l,
         ))
         _dbg(f"level {level}: LM done (bcast={bcast}), splitting")
@@ -1112,7 +1090,8 @@ def _scale_pass(
 def _merge_down(
     flat: DataFrame, level_assign: DataFrame, bcast: bool = False
 ) -> DataFrame:
-    """flat: orig_id → comm_k;  level_assign: comm_k → comm_{k+1}.
+    """Label merge-down (G9) — flat: orig_id → comm_k;  level_assign:
+    comm_k → comm_{k+1}.
     `bcast`: broadcast-hint the (level-vertex-sized) mapping so the
     original-vertex-sized `flat` never exchanges — gated on the level's
     carried vertex count by the caller."""
@@ -1160,21 +1139,17 @@ def _exact_finish(sym_l, node_w_l, assign_l, resolution2, seed, variant, level=-
     if pdf.empty:
         return assign_l
 
-    ids = np.unique(
-        np.concatenate(
-            [pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64),
-             a["id"].to_numpy(np.int64)]
-        )
+    ids, lsrc, ldst, la = kernels.dense_ids(
+        pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64),
+        a["id"].to_numpy(np.int64),
     )
-    lsrc = np.searchsorted(ids, pdf["src"].to_numpy(np.int64))
-    ldst = np.searchsorted(ids, pdf["dst"].to_numpy(np.int64))
     indptr, nbr, wgt = kernels.build_csr(len(ids), lsrc, ldst, pdf["weight"].to_numpy(np.float64))
 
     node_w = np.zeros(len(ids))
     node_w[np.searchsorted(ids, nw["id"].to_numpy(np.int64))] = nw["node_w"].to_numpy(np.float64)
 
     cluster = np.empty(len(ids), dtype=np.int64)
-    cluster[np.searchsorted(ids, a["id"].to_numpy(np.int64))] = a["community"].to_numpy(np.int64)
+    cluster[la] = a["community"].to_numpy(np.int64)
     # densify community labels
     kernels.compactify(cluster)
 
@@ -1184,22 +1159,14 @@ def _exact_finish(sym_l, node_w_l, assign_l, resolution2, seed, variant, level=-
     # visit loop would take minutes there; the chunked vectorized LM is
     # the same Q-class at ~1000× the visit rate (exact label parity is
     # slm_exact's job, not the scale-mode finisher's)
-    step = {
-        "slm": lambda *a: kernels.slm_recursive(*a, fast=True),
-        "louvain": lambda *a: kernels.louvain_recursive(*a, fast=True),
-        "louvain_refine": lambda *a: kernels.louvain_recursive(
-            *a, refine=True, fast=True
-        ),
-    }[variant]
+    step = kernels.level_step(variant, fast=True)
     for _ in range(32):
         if not step(indptr, nbr, wgt, node_w, cluster, resolution2, rng):
             break
     tp = _phase(level, "exact_kernel", tp)
-    out = pd.DataFrame({"id": ids, "community": cluster})
     # canonical min-member-id labels to stay in the global convention
-    rep = out.groupby("community")["id"].transform("min")
-    out["community"] = rep
-    res = spark.createDataFrame(out[["id", "community"]], ASSIGN_SCHEMA)
+    out = pd.DataFrame({"id": ids, "community": kernels.min_member(ids, cluster)})
+    res = spark.createDataFrame(out, ASSIGN_SCHEMA)
     tp = _phase(level, "exact_emit", tp)
     return res
 

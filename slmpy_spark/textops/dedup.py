@@ -185,6 +185,11 @@ def ngram_jaccard_pairs(
     without, it's the exact small-scale oracle (all co-shingled pairs).
     `shingles` shares a precomputed shingle frame (see verified_pairs).
 
+    Precondition on `candidates`: each pair is oriented a < b.  Rows with
+    a ≥ b are dropped, not flipped, and repeated (a, b) rows count once
+    (each copy would otherwise add its shingle matches to the pair's
+    intersection again).
+
     Verify-mode join order (r6): the r5 layout ran the full shingle
     self-join first and only then semi-joined the aggregated pairs down
     to the candidates — Spark pushes the semi-join below the aggregate
@@ -205,6 +210,7 @@ def ngram_jaccard_pairs(
         inter = (
             candidates.select("a", "b")
             .where(F.col("a") < F.col("b"))
+            .distinct()
             .join(sh.select(F.col("doc_id").alias("a"), "shingle"), "a")
             .join(
                 sh.select(F.col("doc_id").alias("b"), "shingle"),

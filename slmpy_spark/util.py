@@ -1,10 +1,33 @@
-"""Iteration utilities."""
+"""Iteration, frame-ownership and local-session utilities."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+
+def local_session(cpus: int, driver_mem: str) -> SparkSession:
+    """The local-mode session the measurement scripts run the engine in:
+    local[`cpus`] with a `driver_mem` heap (the 1g default OOMs), AQE on
+    with a 4m advisory partition size (the 64m default coalesces inputs
+    of a few hundred MB to ~4 tasks per reduce stage and hides
+    core-count scaling), Arrow for pandas conversions, no UI,
+    ERROR-level logs."""
+    spark = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName("slmpy_spark")
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.driver.memory", driver_mem)
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 def explain_to(df: DataFrame, name: str) -> None:

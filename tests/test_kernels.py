@@ -154,3 +154,66 @@ def test_cpm_quality_matches_oracle():
         G.g_ring_cliques_4(), {i: int(cl2[i]) for i in range(len(cl2))}, gamma=0.3
     )
     assert q2 == pytest.approx(oq2, abs=1e-9)
+
+
+def _sparse_id_graph(seed=11, n=300, m=1200):
+    """Random edges over n vertex ids scattered in [0, 10^12), plus ids
+    that only an assignment mentions (no edges)."""
+    rng = np.random.default_rng(seed)
+    pool = rng.choice(10**12, size=n + 20, replace=False).astype(np.int64)
+    src = pool[rng.integers(0, n, m)]
+    dst = pool[rng.integers(0, n, m)]
+    extra = pool[n:]
+    return rng, src, dst, extra
+
+
+def test_dense_ids_matches_unique_searchsorted():
+    _, src, dst, extra = _sparse_id_graph()
+    ids, lsrc, ldst = kernels.dense_ids(src, dst)
+    ref = np.unique(np.concatenate([src, dst]))
+    assert np.array_equal(ids, ref)
+    assert np.array_equal(lsrc, np.searchsorted(ref, src))
+    assert np.array_equal(ldst, np.searchsorted(ref, dst))
+    assert np.array_equal(ids[lsrc], src) and np.array_equal(ids[ldst], dst)
+    # extra arrays join the id set and come back as indices too
+    ids3, lsrc3, ldst3, lx = kernels.dense_ids(src, dst, extra)
+    ref3 = np.unique(np.concatenate([src, dst, extra]))
+    assert np.array_equal(ids3, ref3)
+    assert np.array_equal(lsrc3, np.searchsorted(ref3, src))
+    assert np.array_equal(ldst3, np.searchsorted(ref3, dst))
+    assert np.array_equal(ids3[lx], extra)
+
+
+def test_min_member_matches_scatter_and_groupby_min():
+    import pandas as pd
+
+    rng, src, dst, extra = _sparse_id_graph(seed=12)
+    ids = kernels.dense_ids(src, dst, extra)[0]
+    cluster = rng.integers(0, 40, ids.size).astype(np.int64)
+    got = kernels.min_member(ids, cluster)
+    # reference 1: a min-scatter over cluster indices
+    min_id = np.full(int(cluster.max()) + 1, np.iinfo(np.int64).max)
+    np.minimum.at(min_id, cluster, ids)
+    assert np.array_equal(got, min_id[cluster])
+    # reference 2: a pandas groupby-min
+    out = pd.DataFrame({"id": ids, "community": cluster})
+    ref = out.groupby("community")["id"].transform("min").to_numpy()
+    assert np.array_equal(got, ref)
+    assert got.dtype == np.int64
+
+
+def test_level_step_calls_patched_kernel_at_call_time(monkeypatch):
+    calls = []
+    step = kernels.level_step("slm", fast=True)  # built BEFORE the patch
+    monkeypatch.setattr(
+        kernels, "slm_recursive", lambda *a, **kw: calls.append((a, kw)) or True
+    )
+    assert step(1, 2, 3, 4, 5, 6, 7) is True
+    assert calls == [((1, 2, 3, 4, 5, 6, 7), {"fast": True})]
+    monkeypatch.setattr(
+        kernels, "louvain_recursive", lambda *a, **kw: calls.append((a, kw)) or False
+    )
+    assert kernels.level_step("louvain_refine")(1, 2, 3, 4, 5, 6, 7) is False
+    assert calls[-1] == ((1, 2, 3, 4, 5, 6, 7), {"refine": True, "fast": False})
+    with pytest.raises(KeyError):
+        kernels.level_step("leiden")

@@ -77,6 +77,17 @@ def test_jaccard_pairs_exact(spark):
     assert out[(0, 1)] == pytest.approx(expected, abs=1e-6)
 
 
+def test_jaccard_pairs_duplicate_candidates_count_once(spark):
+    # unigram shingle sets {a, b, c} and {a, b, d}: Jaccard 2/4 = 0.5;
+    # the (0, 1) candidate row appears twice
+    d = docs_df(spark, ["a b c", "a b d"])
+    cand = spark.createDataFrame([(0, 1), (0, 1)], "a long, b long")
+    out = dedup.ngram_jaccard_pairs(
+        d, threshold=0.0, shingle_n=1, candidates=cand
+    ).collect()
+    assert [(r.a, r.b, r.jaccard) for r in out] == [(0, 1, 0.5)]
+
+
 def test_lsh_candidates_find_near_dups(spark):
     rows = [BASE, NEAR, OTHER,
             "spark engines shuffle data across the cluster every stage",
