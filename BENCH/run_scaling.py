@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""N→4N scaling-efficiency evidence (BASELINE.md measurement plan).
+"""N→4N scaling-efficiency evidence: the one ladder runner.
 
 No multi-executor cluster exists in this sandbox, so the north rule's
 "N to 4N executors ≥ 0.8 efficiency" criterion is evidenced by running
@@ -9,10 +9,14 @@ throughput at both plus efficiency = (T_8 / T_32) / 4 ... expressed as
 speedup/4 where speedup = wall_8 / wall_32.
 
 Usage:  python BENCH/run_scaling.py [--edges 1000000] [--reps 3]
-Writes: BENCH/BASELINE.md (+ raw JSON lines to BENCH/scaling_raw.jsonl)
+Appends: raw JSON lines to BENCH/scaling_raw.jsonl.  An slm row
+carries SLM's run record (slm.LAST_RUN_STATS: per-level sweep jobs,
+per-phase seconds, top-community size per split) next to its wall time.
+BENCH/write_baseline.py builds BENCH/BASELINE.md from selected rows.
 
 Run each parallelism level in a separate process (a JVM can't change
-master); this script orchestrates via subprocess.
+master); this script orchestrates via subprocess.  BENCH/decompose.py
+runs its matched pair through `run_level` too.
 """
 
 from __future__ import annotations
@@ -65,7 +69,7 @@ engine.degrees(engine.symmetrize(edges)).count()
 
 t0 = time.time()
 if op == "slm":
-    from slmpy_spark.graph.slm import LAST_RUN_STATS
+    from slmpy_spark.graph.slm import LAST_RUN_STATS as stats
     # generous sweep budget — the per-level Q_TOL stopping rule exits
     # early once a level's Q gain flattens, so levels converge properly
     # and the hierarchy collapses in few levels
@@ -73,9 +77,12 @@ if op == "slm":
                            exact_threshold=200_000)
     dt = time.time() - t0
     out = {"op": op, "cpus": cpus, "edges": m, "secs": dt, "q": q,
-           "sweeps": LAST_RUN_STATS["sweeps"],
-           "work": LAST_RUN_STATS["edge_entries_swept"],
-           "throughput": LAST_RUN_STATS["edge_entries_swept"] / dt}
+           "sweeps": stats["sweeps"],
+           "work": stats["edge_entries_swept"],
+           "throughput": stats["edge_entries_swept"] / dt,
+           "sweep_jobs": stats["sweep_jobs"],
+           "phases": stats["phases"],
+           "split_top_rows": stats["split_top_rows"]}
 elif op == "pagerank":
     iters = 8
     engine.pagerank(edges, tol=0.0, max_iter=iters).count()
@@ -113,10 +120,49 @@ def _wait_for_quiet(threshold: float, max_wait: float, poll: float = 15.0) -> fl
     return load
 
 
+def graph_cache(path: str, nodes: int, edges: int) -> None:
+    """Make `path` hold the seed-42 power-law graph of this size: reuse
+    it when its sidecar metadata matches, generate it (numpy → pyarrow,
+    no Spark) when it is absent, and exit otherwise.  The sidecar
+    guards against silently benchmarking a stale cache from a previous
+    ladder at a different size/seed (only detectable after the fact via
+    recorded n_edges otherwise)."""
+    meta_path = path + ".meta.json"
+    want = {"nodes": nodes, "edges": edges, "seed": 42}
+    if os.path.exists(path):
+        if not os.path.exists(meta_path):
+            sys.exit(
+                f"graph cache {path} has no sidecar {meta_path}; refusing "
+                "to reuse an unverifiable cache — delete it or add the sidecar"
+            )
+        with open(meta_path) as f:
+            have = json.load(f)
+        if have != want:
+            sys.exit(
+                f"graph cache mismatch: {meta_path} says {have}, this run "
+                f"wants {want} — delete the cache or fix the flags"
+            )
+        return
+    sys.path.insert(0, REPO)
+    from tests.genfixtures import g_powerlaw_arrays
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = time.time()
+    gsrc, gdst, gw = g_powerlaw_arrays(n=nodes, m_target=edges, seed=42)
+    pq.write_table(pa.table({"src": gsrc, "dst": gdst, "weight": gw}), path)
+    with open(meta_path, "w") as f:
+        json.dump(want, f)
+    print(f"graph cache written: {path} "
+          f"({len(gsrc):,} rows, {time.time() - t0:.0f}s)", flush=True)
+
+
 def run_level(
     cpus: int, n_nodes: int, m_target: int, op: str, timeout: int = 3600,
     cache_path: str = "",
 ) -> dict:
+    """One quiet-gated worker process; returns its RESULT row plus the
+    host's 1-minute loadavg at the leg's start and end."""
     env = dict(os.environ, SLMPY_REPO=REPO)
     load0 = _wait_for_quiet(
         float(os.environ.get("SPARK_GRAFT_LOAD_MAX", "4.0")),
@@ -157,11 +203,6 @@ def main():
         "edges.  The file is left in place for reuse across invocations.",
     )
     ap.add_argument(
-        "--no-baseline", action="store_true",
-        help="append raw rows only; do not rewrite BASELINE.md "
-        "(the report is hand-authored between ladder passes)",
-    )
-    ap.add_argument(
         "--cpus", default="8,32",
         help="comma-separated core counts to run (default '8,32'); a "
         "single value runs one leg only — used to add extra reps of "
@@ -172,51 +213,12 @@ def main():
     cpu_levels = tuple(int(c) for c in args.cpus.split(","))
 
     if args.graph_cache:
-        # sidecar metadata guards against silently benchmarking a stale
-        # cache from a previous ladder at a different size/seed (only
-        # detectable after the fact via recorded n_edges otherwise)
-        meta_path = args.graph_cache + ".meta.json"
-        want = {"nodes": args.nodes, "edges": args.edges, "seed": 42}
-        if os.path.exists(args.graph_cache):
-            if not os.path.exists(meta_path):
-                sys.exit(
-                    f"graph cache {args.graph_cache} has no sidecar "
-                    f"{meta_path}; refusing to reuse an unverifiable "
-                    "cache — delete it or add the sidecar"
-                )
-            with open(meta_path) as f:
-                have = json.load(f)
-            if have != want:
-                sys.exit(
-                    f"graph cache mismatch: {meta_path} says {have}, "
-                    f"this run wants {want} — delete the cache or fix "
-                    "the flags"
-                )
-        else:
-            sys.path.insert(0, REPO)
-            from tests.genfixtures import g_powerlaw_arrays
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            t0 = time.time()
-            gsrc, gdst, gw = g_powerlaw_arrays(
-                n=args.nodes, m_target=args.edges, seed=42
-            )
-            pq.write_table(
-                pa.table({"src": gsrc, "dst": gdst, "weight": gw}),
-                args.graph_cache,
-            )
-            with open(meta_path, "w") as f:
-                json.dump(want, f)
-            print(f"graph cache written: {args.graph_cache} "
-                  f"({len(gsrc):,} rows, {time.time() - t0:.0f}s)", flush=True)
+        graph_cache(args.graph_cache, args.nodes, args.edges)
 
     raw_path = os.path.join(HERE, "scaling_raw.jsonl")
-    results = {}
     with open(raw_path, "a") as raw:
         for op in args.ops.split(","):
             secs = {c: [] for c in cpu_levels}
-            rec_last = {}
             # MATCHED PHASES: each rep runs the 8-core and 32-core
             # levels back-to-back before the next rep, so a drifting
             # host-load phase hits both levels of a pair equally
@@ -230,55 +232,13 @@ def main():
                     raw.write(json.dumps(rec) + "\n")
                     raw.flush()
                     secs[cpus].append(rec["secs"])
-                    rec_last[cpus] = rec
                     print(f"{op} local[{cpus}] rep {rep}: {rec['secs']:.1f}s",
                           flush=True)
             for cpus in cpu_levels:
-                med = statistics.median(secs[cpus])
-                # throughput from the worker-reported work counter
-                # (actual edge-entries processed), not a re-derived
-                # constant-factor guess
-                results[(op, cpus)] = {**rec_last[cpus], "secs": med,
-                                       "throughput": rec_last[cpus]["work"] / med}
-                print(f"{op} local[{cpus}]: median {med:.1f}s", flush=True)
-
-    if args.no_baseline or cpu_levels != (8, 32):
-        print("raw rows appended; BASELINE.md left untouched")
-        return
-
-    lines = [
-        "# BENCH/BASELINE.md — measured scaling (sandbox N→4N substitution)",
-        "",
-        f"Input: seed-42 Chung-Lu power-law graph, {args.nodes:,} nodes, "
-        f"~{args.edges:,} undirected edges (tests/genfixtures.g_powerlaw), "
-        f"planted 1% hub. Median of {args.reps} runs, AQE on, "
-        "shuffle partitions = max(cores, 8).",
-        "",
-        "| op | local[8] (N) secs | local[32] (4N) secs | speedup | efficiency (target ≥0.8) |",
-        "| --- | --- | --- | --- | --- |",
-    ]
-    for op in args.ops.split(","):
-        t8 = results[(op, 8)]["secs"]
-        t32 = results[(op, 32)]["secs"]
-        sp = t8 / t32
-        eff = sp / 4
-        lines.append(f"| {op} | {t8:.1f} | {t32:.1f} | {sp:.2f}× | {eff:.2f} |")
-    lines += [
-        "",
-        "Throughput (edge-entries processed / sec):",
-        "",
-        "| op | local[8] | local[32] |",
-        "| --- | --- | --- |",
-    ]
-    for op in args.ops.split(","):
-        r8, r32 = results[(op, 8)], results[(op, 32)]
-        lines.append(
-            f"| {op} | {r8['throughput']:,.0f} | {r32['throughput']:,.0f} |"
-        )
-    lines.append("")
-    with open(os.path.join(HERE, "BASELINE.md"), "w") as f:
-        f.write("\n".join(lines))
-    print("wrote BENCH/BASELINE.md")
+                print(f"{op} local[{cpus}]: median "
+                      f"{statistics.median(secs[cpus]):.1f}s", flush=True)
+    print(f"raw rows appended to {raw_path}; "
+          "BENCH/write_baseline.py builds BASELINE.md from them")
 
 
 if __name__ == "__main__":

@@ -5,10 +5,10 @@ Usage: python BENCH/write_baseline.py --since-line N [--raw PATH]
 
 Takes the raw jsonl rows from line N onward (1-based; use the first
 line produced by the code version being reported), groups by
-(op, cpus), writes medians + efficiency.  Exists because ladder
-passes for different ops may be (re)run in separate invocations when
-the code for one op changed — BENCH/run_scaling.py only writes the
-ops of its own invocation.
+(op, cpus), writes medians + efficiency.  The one BASELINE.md writer:
+BENCH/run_scaling.py only appends raw rows, and ladder passes for
+different ops may be (re)run in separate invocations when the code for
+one op changed.
 """
 
 from __future__ import annotations

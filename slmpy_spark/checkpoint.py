@@ -90,23 +90,26 @@ class Checkpointer:
         df.write.mode("overwrite").parquet(path)
         return self.spark.read.parquet(path)
 
+    def _append(self, tbl: str, df: DataFrame) -> None:
+        """Append `df` to table `tbl`, creating it on first use."""
+        try:
+            df.writeTo(tbl).append()
+        except Exception:
+            try:
+                df.write.insertInto(tbl)  # V1 session-catalog fallback
+            except Exception:
+                df.writeTo(tbl).using(self.table_format).create()
+
     def log_metric(self, **row) -> None:
         """Append one metrics row (op/level/iter/partition counts/...)."""
         row = {"run_id": self.run_id, "ts": time.time(), "seq": self._metrics_seq, **row}
         self._metrics_seq += 1
         if self.backend == "table":
-            tbl = self._table("metrics")
             mdf = self.spark.createDataFrame(
                 [(row["run_id"], row["ts"], row["seq"], json.dumps(row))],
                 "run_id string, ts double, seq long, payload string",
             )
-            try:
-                mdf.writeTo(tbl).append()
-            except Exception:
-                try:
-                    mdf.write.insertInto(tbl)  # V1 session-catalog fallback
-                except Exception:
-                    mdf.writeTo(tbl).using(self.table_format).create()
+            self._append(self._table("metrics"), mdf)
             return
         with open(f"{self._run_dir}/metrics.jsonl", "a") as f:
             f.write(json.dumps(row) + "\n")
@@ -181,14 +184,7 @@ class Checkpointer:
                 payload.alias("payload"),
             ).persist()
             n = mdf.count()
-            tbl = self._table("metrics")
-            try:
-                mdf.writeTo(tbl).append()
-            except Exception:
-                try:
-                    mdf.write.insertInto(tbl)  # V1 session-catalog fallback
-                except Exception:
-                    mdf.writeTo(tbl).using(self.table_format).create()
+            self._append(self._table("metrics"), mdf)
             mdf.unpersist()
             self._metrics_seq += n
             return n

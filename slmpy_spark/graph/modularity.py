@@ -6,8 +6,9 @@
 over the *symmetrized* table:  Σin(c) = total weight of intra-community
 directed-pair entries (each undirected intra edge counted twice, like
 the reference's CSR), Σtot(c) = Σ of weighted degrees of members.
-Self-loop weight accumulated by graph aggregation is carried in
-`self_weight` and added to Σin and Σtot.
+Q is always taken on an original (non-aggregated) edge table — slm_scale
+scores the flat labels against its level-0 graph — so the self-loop
+weight graph aggregation accumulates never enters it.
 
 Spark plan: two equi-joins of sym against the assignment (broadcast
 when the assignment is small — Catalyst picks it; at web scale assign
@@ -24,9 +25,7 @@ from pyspark.sql import functions as F
 from slmpy_spark.graph.edges import degrees
 
 
-def community_aggregates(
-    sym: DataFrame, assign: DataFrame, self_weights: DataFrame | None = None
-) -> DataFrame:
+def community_aggregates(sym: DataFrame, assign: DataFrame) -> DataFrame:
     """Per-community (community, sigma_in, sigma_tot, n_nodes).
 
     sigma_in counts each intra-community undirected edge twice (both
@@ -46,25 +45,12 @@ def community_aggregates(
         .groupBy("community")
         .agg(F.sum("w_deg").alias("sigma_tot"), F.count("*").alias("n_nodes"))
     )
-    out = sigma_tot.join(sigma_in, "community", "left").select(
+    return sigma_tot.join(sigma_in, "community", "left").select(
         "community",
         F.coalesce(F.col("sigma_in"), F.lit(0.0)).alias("sigma_in"),
         "sigma_tot",
         "n_nodes",
     )
-    if self_weights is not None:
-        sw = (
-            self_weights.join(assign, "id")
-            .groupBy("community")
-            .agg(F.sum("self_weight").alias("sw"))
-        )
-        out = out.join(sw, "community", "left").select(
-            "community",
-            (F.col("sigma_in") + F.coalesce(F.col("sw"), F.lit(0.0))).alias("sigma_in"),
-            (F.col("sigma_tot") + F.coalesce(F.col("sw"), F.lit(0.0))).alias("sigma_tot"),
-            "n_nodes",
-        )
-    return out
 
 
 def modularity(
@@ -72,7 +58,6 @@ def modularity(
     assign: DataFrame,
     gamma: float = 1.0,
     quality: str = "modularity",
-    self_weights: DataFrame | None = None,
     two_m: float | None = None,
 ) -> float:
     """Compute Q for a given assignment (driver-side scalar).
@@ -84,7 +69,7 @@ def modularity(
     the edge-sized scan that re-derives it — iterative callers (slm_scale's per-pass Q) already
     hold it.
     """
-    agg = community_aggregates(sym, assign, self_weights=self_weights)
+    agg = community_aggregates(sym, assign)
     if two_m is None:
         row = sym.agg(F.sum("weight").alias("tw")).first()
         two_m = float(row["tw"] or 0.0)

@@ -69,11 +69,31 @@ import os as _os
 import sys as _sys
 import time as _time
 
-#: diagnostics from the most recent slm_scale() run on this driver
-#: (single-threaded driver assumption): actual sweep/level/pass counts,
-#: consumed by bench.py / BENCH/run_scaling.py to compute real
-#: edges-per-sweep throughput instead of assuming max_sweeps ran.
-LAST_RUN_STATS: dict = {"sweeps": 0, "levels": 0, "passes": 0, "edge_entries_swept": 0}
+def _new_run_stats() -> dict:
+    return {
+        "sweeps": 0, "levels": 0, "passes": 0, "edge_entries_swept": 0,
+        "sweep_jobs": [], "phases": [], "split_top_rows": [],
+    }
+
+
+#: the one record of the most recent slm_scale() run on this driver
+#: (single-threaded driver assumption), reset by every call:
+#:
+#: - ``sweeps``/``levels``/``passes``/``edge_entries_swept``: actual
+#:   counts — bench.py, perfbench and BENCH/run_scaling.py compute real
+#:   edges-per-sweep throughput from them instead of assuming
+#:   max_sweeps ran;
+#: - ``sweep_jobs``: one ``[level, secs]`` per LM sweep job;
+#: - ``phases``: one ``[level, name, secs]`` per non-sweep phase
+#:   (``_phase``; level -1 = outside the level loop).  Phases do not
+#:   overlap, except that ``split_distributed`` contains the sweep jobs
+#:   and ``lm_*`` phases of its own local moving;
+#: - ``split_top_rows``: one ``[level, rows]`` per community split — the
+#:   largest community's intra-edge rows, the size GIANT_ROWS gates on.
+#:
+#: Scripts read this dict (BENCH/run_scaling.py copies it into every
+#: ladder row); the SLMPY_DEBUG stderr lines are for people only.
+LAST_RUN_STATS: dict = _new_run_stats()
 
 
 def _dbg(msg: str) -> None:
@@ -82,10 +102,11 @@ def _dbg(msg: str) -> None:
 
 
 def _phase(level, name: str, t0: float) -> float:
-    """Emit a parseable non-sweep phase timing line (SLMPY_DEBUG) and
-    return a fresh t0 — BENCH/decompose.py aggregates these to attribute
-    the non-sweep serial floor per phase instead of one opaque bucket."""
+    """Record a non-sweep phase's seconds since `t0` in
+    LAST_RUN_STATS["phases"] (BENCH/decompose.py attributes the
+    non-sweep serial floor per phase from them) and return a fresh t0."""
     now = _time.time()
+    LAST_RUN_STATS["phases"].append([level, name, now - t0])
     _dbg(f"phase level={level} name={name} secs={now - t0:.3f}")
     return now
 
@@ -430,6 +451,16 @@ INIT_FRAC = 0.5
 #: cheaper, smaller levels above).  Generous `max_sweeps` budgets are
 #: safe with it.
 Q_TOL = 1e-4
+#: the split's strategy cutoff — when the largest community holds more
+#: intra-edge rows than this, one applyInPandas kernel task would be the
+#: split stage's straggler, so every community is re-clustered by the
+#: distributed JVM-side sweeps instead.  Never tripped on the measured
+#: ladder: the top community is 6.5–25k intra rows at 10M edges, and
+#: cutoffs down to 50k did not trip either (BENCH/NOTES.md,
+#: "split_kernel straggler A/B").  Ladder rows record the top size of
+#: every split (LAST_RUN_STATS["split_top_rows"]), the evidence that
+#: decides this branch at 40M/100M.
+GIANT_ROWS = 1_000_000
 
 
 def _distributed_local_moving(
@@ -533,6 +564,7 @@ def _distributed_local_moving(
         t1 = _time.time()
         LAST_RUN_STATS["sweeps"] += 1
         LAST_RUN_STATS["edge_entries_swept"] += m_l
+        LAST_RUN_STATS["sweep_jobs"].append([level, t1 - t0])
         # pre-sweep state's Q + this sweep's move count, observed on the
         # materialize action itself — one Spark job per sweep, total
         vals = obs.get
@@ -655,7 +687,6 @@ def _split_communities(
     quality: str = "modularity",
     two_m: float = 0.0,
     max_sweeps: int = 8,
-    giant_threshold: int = 1_000_000,
     level: int = -1,
 ) -> DataFrame:
     """Re-cluster every community from singletons (may split it).
@@ -671,7 +702,7 @@ def _split_communities(
       vectorized LM to local convergence — ideal when communities are
       many and bounded.
     - **distributed split**: when the LARGEST community holds more
-      intra-edge rows than `giant_threshold`, a single kernel task
+      intra-edge rows than GIANT_ROWS, a single kernel task
       would become the stage's straggler (a power-law giant component
       can hold most of the graph).  Splitting is just LM-from-
       singletons on the intra-edge graph — intra edges never cross
@@ -708,14 +739,15 @@ def _split_communities(
     )
     top = int(top_row["m"] or 0)
     intra_count = int(top_row["tot"] or 0)
+    LAST_RUN_STATS["split_top_rows"].append([level, top])
     tp = _phase(level, "split_intra", tp)
 
-    if top > giant_threshold:
+    if top > GIANT_ROWS:
         _dbg(f"split: giant community ({top} intra rows) → distributed split")
         out = _distributed_local_moving(
             _sweep_edges(frames, intra.select("src", "dst", "weight"), bcast),
             node_w, None, resolution2, seed ^ 0x5BD1E995, max_sweeps, gamma,
-            quality, two_m, bcast=bcast, m_l=intra_count,
+            quality, two_m, level=level, bcast=bcast, m_l=intra_count,
         )
         frames.retain(intra)  # the sweeps' edge cache is done
         # labels are already canonical min-member ids; vertices with no
@@ -734,7 +766,7 @@ def _split_communities(
             .transform(materialize)
         )
     else:
-        _dbg(f"split: top community {top} intra rows (≤ {giant_threshold}) → kernel split")
+        _dbg(f"split: top community {top} intra rows (≤ {GIANT_ROWS}) → kernel split")
         # the kernel already emits globally-unique min-member-id labels
         # (members are disjoint across parent communities), so the only
         # remaining join fills in intra-edge-less vertices as singletons
@@ -790,7 +822,6 @@ def slm_scale(
     n_iterations: int = 1,
     n_random_starts: int = 1,
     broadcast_threshold: int = 250_000,
-    giant_threshold: int = 1_000_000,
 ):
     """Distributed SLM (variant="slm") / Louvain (variant="louvain").
     Returns (assign, q) — q computed on the original graph.
@@ -818,7 +849,7 @@ def slm_scale(
     start.  Per-level seeds are `seed + level`, so the remaining
     levels replay as the uninterrupted run would (modulo sweeps'
     snapshot timing)."""
-    LAST_RUN_STATS.update(sweeps=0, levels=0, passes=0, edge_entries_swept=0)
+    LAST_RUN_STATS.update(_new_run_stats())
 
     # materialize (checkpoint leaf), NOT persist: every level-0 sweep's
     # plan embeds the edge cache's lineage at each reference, and
@@ -876,7 +907,6 @@ def slm_scale(
                 init_flat=prev,
                 resume=(resume and it == 0 and start == 0),
                 broadcast_threshold=broadcast_threshold,
-                giant_threshold=giant_threshold,
                 m0=m0, nv0=nv0,
             ))
             if variant == "louvain_refine":
@@ -916,7 +946,6 @@ def _scale_pass(
     max_sweeps, exact_threshold, variant,
     checkpointer, step_offset, init_flat, resume,
     broadcast_threshold=250_000,
-    giant_threshold: int = 1_000_000,
     m0: int | None = None, nv0: int | None = None,
 ):
     """One full SLM/Louvain hierarchy pass (level loop). Returns the
@@ -977,7 +1006,7 @@ def _scale_pass(
                 variant,
                 level=level,
             )
-            tl = _phase(level, "exact_finish", tl)
+            # (_exact_finish records its own exact_* phases)
             _dbg(f"level {level}: exact finish done")
             flat = (
                 assign_l
@@ -1012,15 +1041,14 @@ def _scale_pass(
                 sym_j, op="slm_lm_input", level=level, step=step_offset + level
             )
         parent_map = None
-        tl = _time.time()
         if variant == "slm":
             assign_l, parent_map = map(frames.own, _split_communities(
                 sym_j, node_w_l, assign_l, resolution2, seed + level,
                 bcast=bcast, gamma=gamma, quality=quality, two_m=two_m,
-                max_sweeps=max_sweeps, giant_threshold=giant_threshold,
-                level=level,
+                max_sweeps=max_sweeps, level=level,
             ))
-
+        # after the split, which records its own phases
+        tl = _time.time()
         flat = assign_l if flat is None else frames.own(_merge_down(flat, assign_l, bcast=bcast))
         tl = _phase(level, "merge_down", tl)
 

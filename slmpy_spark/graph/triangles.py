@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from slmpy_spark.graph.edges import symmetrize
-from slmpy_spark.util import explain_to
+from slmpy_spark.util import Frames, explain_to
 
 
 def _oriented(edges: DataFrame) -> DataFrame:
@@ -49,7 +49,12 @@ def _oriented(edges: DataFrame) -> DataFrame:
 
 def triangles(edges: DataFrame) -> DataFrame:
     """All triangles as (a, b, c) with a ≺ b ≺ c in degree-id order."""
-    o = _oriented(edges).persist()
+    return _closed_wedges(_oriented(edges).persist())
+
+
+def _closed_wedges(o: DataFrame) -> DataFrame:
+    """Triangles over the (persisted) oriented edges `o`: each wedge
+    closed by an oriented edge."""
     w1 = o.select(F.col("u").alias("a"), F.col("v").alias("b"), F.col("vdeg").alias("bdeg"))
     w2 = o.select(F.col("u").alias("a2"), F.col("v").alias("c"), F.col("vdeg").alias("cdeg"))
     # each unordered wedge {b, c} over middle vertex a is generated
@@ -70,10 +75,15 @@ def triangles(edges: DataFrame) -> DataFrame:
 def triangle_count(edges: DataFrame):
     """Returns (total:int, per_vertex: DataFrame(id, triangles)).
 
-    Per-vertex includes every vertex of the graph (0 for triangle-free).
+    Per-vertex includes every vertex of the graph (0 for triangle-free);
+    it is a lazy frame that recomputes the triangles when consumed — the
+    caches this count used are freed before returning.
     """
-    tris = triangles(edges).persist()
+    frames = Frames()
+    o = frames.own(_oriented(edges).persist())
+    tris = frames.own(_closed_wedges(o).persist())
     total = tris.count()
+    frames.retain()
     corners = (
         tris.select(F.col("a").alias("id"))
         .unionByName(tris.select(F.col("b").alias("id")))

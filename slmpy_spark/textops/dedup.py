@@ -146,24 +146,7 @@ def lsh_candidates(
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bh")
-    counts = banded.groupBy("band", "bh").agg(F.count("*").alias("n"))
-    keep = F.col("n") > 1
-    if max_bucket is not None:
-        keep = keep & (F.col("n") <= max_bucket)
-        counts = _record_dropped(counts, max_bucket, stats)
-    elif stats is not None:
-        # cap disabled: nothing can be dropped — report that explicitly
-        # instead of leaving the opt-in dict silently unfilled
-        stats["dropped_buckets"] = 0
-        stats["dropped_rows"] = 0
-    ok = counts.where(keep).select("band", "bh")
-    if stats is not None and max_bucket is not None:
-        # _record_dropped persisted `counts` for the stats action: pin
-        # the (much smaller) surviving-bucket list and free the full
-        # bucket table NOW — explicit, not left to ContextCleaner LRU
-        ok = materialize(ok)
-        counts.unpersist()
-    banded = banded.join(ok, ["band", "bh"], "left_semi")
+    banded = _capped_buckets(banded, ["band", "bh"], max_bucket, stats)
     l = banded.select(F.col("doc_id").alias("a"), "band", "bh")
     r = banded.select(F.col("doc_id").alias("b"), "band", "bh")
     return (
@@ -282,28 +265,39 @@ def verified_pairs(
     return out
 
 
-def _record_dropped(counts: DataFrame, max_bucket: int, stats: dict | None) -> DataFrame:
-    """No-silent-caps signal: when the caller passes a `stats` dict,
-    count the buckets/rows the `max_bucket` cap will drop, so recall
-    loss is detectable.  Returns the `counts` frame the caller should
-    keep using: the stats action would otherwise recompute the whole
-    signature/banding pipeline a second time, so `counts` is persisted
-    first and the action populates the cache the caller's main query
-    then reuses (the caller unpersists it explicitly once the
-    surviving-bucket list is pinned — no reliance on ContextCleaner).
-    Without `stats`, `counts` is returned untouched — no extra job,
-    no cache."""
-    if stats is None:
-        return counts
+def _capped_buckets(
+    rows: DataFrame, keys: list, max_bucket: int | None, stats: dict | None
+) -> DataFrame:
+    """`rows` semi-joined to the buckets (grouped by `keys`) that can
+    pair: more than one row and, unless `max_bucket` is None, at most
+    `max_bucket` rows.
+
+    No-silent-caps signal: a `stats` dict is filled with the
+    buckets/rows the cap drops (0/0 when the cap is disabled), so
+    recall loss is detectable.  The stats action would otherwise
+    recompute the whole signature/banding pipeline a second time, so
+    the bucket-count table is persisted first, the action populates the
+    cache, the (much smaller) surviving-bucket list is pinned from it,
+    and the full table is freed before returning — explicit, not left
+    to ContextCleaner LRU.  Without `stats`: no extra job, no cache."""
+    counts = rows.groupBy(*keys).agg(F.count("*").alias("n"))
+    keep = F.col("n") > 1
+    if max_bucket is not None:
+        keep = keep & (F.col("n") <= max_bucket)
+    if stats is None or max_bucket is None:
+        if stats is not None:  # cap disabled: nothing can be dropped
+            stats.update(dropped_buckets=0, dropped_rows=0)
+        return rows.join(counts.where(keep).select(*keys), keys, "left_semi")
     counts = counts.persist()
     r = (
         counts.where(F.col("n") > max_bucket)
         .agg(F.count("*").alias("b"), F.coalesce(F.sum("n"), F.lit(0)).alias("r"))
         .first()
     )
-    stats["dropped_buckets"] = int(r["b"] or 0)
-    stats["dropped_rows"] = int(r["r"] or 0)
-    return counts
+    stats.update(dropped_buckets=int(r["b"] or 0), dropped_rows=int(r["r"] or 0))
+    ok = materialize(counts.where(keep).select(*keys))
+    counts.unpersist()
+    return rows.join(ok, keys, "left_semi")
 
 
 # ------------------------------------------------------------ simhash
@@ -383,21 +377,7 @@ def simhash_candidates(
             )
         ).alias("bb"),
     ).select("doc_id", "simhash", "bb.blk", "bb.bv")
-    counts = blocks.groupBy("blk", "bv").agg(F.count("*").alias("n"))
-    keep = F.col("n") > 1
-    if max_bucket is not None:
-        keep = keep & (F.col("n") <= max_bucket)
-        counts = _record_dropped(counts, max_bucket, stats)
-    elif stats is not None:
-        stats["dropped_buckets"] = 0
-        stats["dropped_rows"] = 0
-    ok = counts.where(keep).select("blk", "bv")
-    if stats is not None and max_bucket is not None:
-        # same as lsh_candidates: free the persisted bucket table
-        # explicitly once the surviving-bucket list is pinned
-        ok = materialize(ok)
-        counts.unpersist()
-    blocks = blocks.join(ok, ["blk", "bv"], "left_semi")
+    blocks = _capped_buckets(blocks, ["blk", "bv"], max_bucket, stats)
     l = blocks.select(
         F.col("doc_id").alias("a"), F.col("simhash").alias("sa"), "blk", "bv"
     )

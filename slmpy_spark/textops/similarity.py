@@ -96,24 +96,8 @@ def lsh_buckets(emb: DataFrame, n_planes: int = 8) -> DataFrame:
     """(vec_id, bucket): sign-of-dot-product bucketing against
     `n_planes` deterministic integer hyperplanes
     w[p][d] = ((p*131 + d*197) % 7) - 3 — exactly reproducible in SQL.
-    """
-    def plane_bit(p: int):
-        dot = F.aggregate(
-            F.zip_with(
-                F.col("embedding"),
-                F.sequence(F.lit(0), F.size("embedding") - 1),
-                lambda x, d: x.cast("double")
-                * ((F.lit(p * 131) + d * 197) % 7 - 3).cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
-
-    bucket = plane_bit(0)
-    for p in range(1, n_planes):
-        bucket = bucket + plane_bit(p)
-    return emb.select("vec_id", bucket.cast("long").alias("bucket"))
+    Table 0 of lsh_bucket_tables."""
+    return lsh_bucket_tables(emb, 1, n_planes).select("vec_id", "bucket")
 
 
 def lsh_bucket_tables(
@@ -122,8 +106,9 @@ def lsh_bucket_tables(
     """(vec_id, table, bucket): `n_tables` independent hyperplane LSH
     tables of `n_planes` sign bits each — banded LSH, exactly the
     minhash banding shape.  Table t uses the deterministic plane family
-    at global indices [t·n_planes, (t+1)·n_planes) of the same integer
-    construction as lsh_buckets, so everything stays engine-reproducible.
+    at global indices [t·n_planes, (t+1)·n_planes) of the integer
+    construction w[p][d] = ((p*131 + d*197) % 7) - 3, each dot product
+    summed in dimension order, so everything stays engine-reproducible.
     """
     def plane_bit(gp: int, p: int):
         dot = F.aggregate(

@@ -142,3 +142,19 @@ def test_frames_free_an_owned_edge_cache(spark):
     assert cache.df.count() == 4
     frames.retain()
     assert _persistent_rdd_ids(spark) == before
+
+
+def test_triangle_count_frees_what_it_persists(spark):
+    """triangle_count persists the oriented edges and the triangles for
+    its count; both are freed before it returns, and the per-vertex
+    frame still recomputes from lineage."""
+    from slmpy_spark.graph.triangles import triangle_count
+
+    edges = edges_df(spark, FIVE_EDGES)
+    before = _persistent_rdd_ids(spark)
+    total, per_vertex = triangle_count(edges)
+    assert total == 1
+    assert _persistent_rdd_ids(spark) - before == set()
+    assert {r.id: r.triangles for r in per_vertex.collect()} == {
+        0: 1, 1: 1, 2: 1, 3: 0, 4: 0, 5: 0
+    }
