@@ -81,9 +81,7 @@ def report(nodes: int, edges: int, t8: dict, t32: dict) -> str:
     row("non-sweep (split+aggregate+exact finish+driver)",
         t8["secs"] - sweeps8, t32["secs"] - sweeps32)
     # per-phase attribution of the non-sweep bucket (summed over
-    # levels/passes).  Note: split_distributed (giant-path split)
-    # CONTAINS nested LM sweep jobs and lm_* phases already counted
-    # above — it is zero on graphs where the kernel split path runs.
+    # levels/passes; phases and sweep jobs do not overlap)
     for name in sorted(set(p8) | set(p32)):
         row(f"  phase {name}", p8.get(name, 0.0), p32.get(name, 0.0))
     instr8 = sum(p8.values()) + sweeps8
@@ -91,15 +89,13 @@ def report(nodes: int, edges: int, t8: dict, t32: dict) -> str:
     row("  uninstrumented driver glue",
         max(0.0, t8["secs"] - instr8), max(0.0, t32["secs"] - instr32))
     row("TOTAL", t8["secs"], t32["secs"])
-    tops = [r for _level, r in t32["split_top_rows"]]
     lines += [
         "",
         f"Efficiency this pair: {(t8['secs'] / t32['secs']) / 4:.2f}. "
         "Per-sweep serial floor ≈ s(LM)/sweeps = "
         f"{max(0.0, (4 * sweeps32 - sweeps8) / 3) / max(1, t32['sweeps']):.2f}s "
         "(driver job submission + Catalyst/AQE planning + stage scheduling "
-        "waves — constant per sweep, independent of cores). "
-        f"Top community per split (intra rows): {tops}.",
+        "waves — constant per sweep, independent of cores).",
         "",
     ]
     return "\n".join(lines)

@@ -81,8 +81,7 @@ if op == "slm":
            "work": stats["edge_entries_swept"],
            "throughput": stats["edge_entries_swept"] / dt,
            "sweep_jobs": stats["sweep_jobs"],
-           "phases": stats["phases"],
-           "split_top_rows": stats["split_top_rows"]}
+           "phases": stats["phases"]}
 elif op == "pagerank":
     iters = 8
     engine.pagerank(edges, tol=0.0, max_iter=iters).count()

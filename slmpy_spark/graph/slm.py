@@ -72,7 +72,7 @@ import time as _time
 def _new_run_stats() -> dict:
     return {
         "sweeps": 0, "levels": 0, "passes": 0, "edge_entries_swept": 0,
-        "sweep_jobs": [], "phases": [], "split_top_rows": [],
+        "sweep_jobs": [], "phases": [],
     }
 
 
@@ -86,10 +86,7 @@ def _new_run_stats() -> dict:
 #: - ``sweep_jobs``: one ``[level, secs]`` per LM sweep job;
 #: - ``phases``: one ``[level, name, secs]`` per non-sweep phase
 #:   (``_phase``; level -1 = outside the level loop).  Phases do not
-#:   overlap, except that ``split_distributed`` contains the sweep jobs
-#:   and ``lm_*`` phases of its own local moving;
-#: - ``split_top_rows``: one ``[level, rows]`` per community split — the
-#:   largest community's intra-edge rows, the size GIANT_ROWS gates on.
+#:   overlap, and no sweep job falls inside a phase.
 #:
 #: Scripts read this dict (BENCH/run_scaling.py copies it into every
 #: ladder row); the SLMPY_DEBUG stderr lines are for people only.
@@ -451,16 +448,6 @@ INIT_FRAC = 0.5
 #: cheaper, smaller levels above).  Generous `max_sweeps` budgets are
 #: safe with it.
 Q_TOL = 1e-4
-#: the split's strategy cutoff — when the largest community holds more
-#: intra-edge rows than this, one applyInPandas kernel task would be the
-#: split stage's straggler, so every community is re-clustered by the
-#: distributed JVM-side sweeps instead.  Never tripped on the measured
-#: ladder: the top community is 6.5–25k intra rows at 10M edges, and
-#: cutoffs down to 50k did not trip either (BENCH/NOTES.md,
-#: "split_kernel straggler A/B").  Ladder rows record the top size of
-#: every split (LAST_RUN_STATS["split_top_rows"]), the evidence that
-#: decides this branch at 40M/100M.
-GIANT_ROWS = 1_000_000
 
 
 def _distributed_local_moving(
@@ -683,10 +670,6 @@ def _split_communities(
     resolution2: float,
     seed: int,
     bcast: bool = False,
-    gamma: float = 1.0,
-    quality: str = "modularity",
-    two_m: float = 0.0,
-    max_sweeps: int = 8,
     level: int = -1,
 ) -> DataFrame:
     """Re-cluster every community from singletons (may split it).
@@ -695,19 +678,12 @@ def _split_communities(
     the sequential semantics: no neighbors in subnetwork → no positive
     gain → stays alone).
 
-    Two physical strategies on the intra-community edge table:
-
-    - **per-community Arrow kernel** (default): communities are
-      embarrassingly parallel ``applyInPandas`` groups, each running
-      vectorized LM to local convergence — ideal when communities are
-      many and bounded.
-    - **distributed split**: when the LARGEST community holds more
-      intra-edge rows than GIANT_ROWS, a single kernel task
-      would become the stage's straggler (a power-law giant component
-      can hold most of the graph).  Splitting is just LM-from-
-      singletons on the intra-edge graph — intra edges never cross
-      parents, so the same JVM-side sweep engine re-clusters EVERY
-      community at once, fully distributed, with identical semantics.
+    Communities are embarrassingly parallel ``applyInPandas`` groups
+    over the intra-community edge table, each running LM to local
+    convergence in the per-community Arrow kernel.  A community of any
+    size is safe there: ``kernels._lm_auto`` switches to the chunked
+    vectorized kernel above 4096 nodes (BENCH/NOTES.md, "split_kernel
+    straggler A/B", on why there is no second strategy).
     """
     hint = F.broadcast if bcast else _ident
     a_dst = hint(assign.select(F.col("id").alias("dst"), F.col("community").alias("c_dst")))
@@ -723,85 +699,53 @@ def _split_communities(
         )
     )
     tp = _time.time()
-    frames = Frames()
-    intra = frames.own(
+    # read once, by the applyInPandas group below: no persist needed
+    intra = (
         sym.join(a_dst, "dst")
         .join(src_side, "src")
         .where(F.col("c_src") == F.col("c_dst"))
         .select("src", "dst", "weight", "w_src", F.col("c_src").alias("community"))
-        .persist()
     )
-    top_row = (
-        intra.groupBy("community")
-        .count()
-        .agg(F.max("count").alias("m"), F.sum("count").alias("tot"))
-        .first()
+    # the kernel already emits globally-unique min-member-id labels
+    # (members are disjoint across parent communities), so the only
+    # remaining join fills in intra-edge-less vertices as singletons
+    # of their own id.  The step-a parent community rides along as a
+    # third column on the SAME materialized leaf (it is exactly the
+    # left side's `community`), so the warm-start parent map below
+    # is a distinct over checkpoint blocks — no second vertex-sized
+    # join per level (the r4 layout re-joined `out` against `assign`
+    # to recover the parent it had just projected away).
+    sub = intra.groupBy("community").applyInPandas(
+        _split_kernel_factory(resolution2, seed), "id long, sub long"
     )
-    top = int(top_row["m"] or 0)
-    intra_count = int(top_row["tot"] or 0)
-    LAST_RUN_STATS["split_top_rows"].append([level, top])
-    tp = _phase(level, "split_intra", tp)
-
-    if top > GIANT_ROWS:
-        _dbg(f"split: giant community ({top} intra rows) → distributed split")
-        out = _distributed_local_moving(
-            _sweep_edges(frames, intra.select("src", "dst", "weight"), bcast),
-            node_w, None, resolution2, seed ^ 0x5BD1E995, max_sweeps, gamma,
-            quality, two_m, level=level, bcast=bcast, m_l=intra_count,
+    out_full = (
+        assign.alias("o")
+        .join(sub.alias("r"), "id", "left")
+        .select(
+            "id",
+            F.coalesce(F.col("r.sub"), F.col("id")).alias("community"),
+            F.col("o.community").alias("parent"),
         )
-        frames.retain(intra)  # the sweeps' edge cache is done
-        # labels are already canonical min-member ids; vertices with no
-        # intra edges kept their singleton id — the kernel semantics
-        tp = _phase(level, "split_distributed", tp)
-        # parent map (subcommunity → step-a parent community) — the SLM
-        # §1.2(4c) warm start for the next level's initial clustering.
-        # Materialized HERE, before the caller unpersists `assign` (the
-        # LM output): materialize()'s unpersist frees real checkpoint
-        # blocks now, so lazily holding a reference to `assign` past its
-        # free would be a use-after-free.
-        parent_map = (
-            out.join(assign.select("id", F.col("community").alias("parent")), "id")
-            .select(F.col("community").alias("id"), F.col("parent").alias("community"))
-            .distinct()
-            .transform(materialize)
+        .transform(materialize)
+    )
+    # a projection view over out_full's checkpoint leaf whose
+    # unpersist frees the leaf's blocks
+    out = owned_view(out_full.select("id", "community"), out_full)
+    tp = _phase(level, "split_kernel", tp)
+    # parent map (subcommunity → step-a parent community) — the SLM
+    # §1.2(4c) warm start for the next level's initial clustering.
+    # Materialized HERE, before the caller unpersists `assign` (the
+    # LM output): materialize()'s unpersist frees real checkpoint
+    # blocks now, so lazily holding a reference to `assign` past its
+    # free would be a use-after-free.
+    parent_map = (
+        out_full.select(
+            F.col("community").alias("id"), F.col("parent").alias("community")
         )
-    else:
-        _dbg(f"split: top community {top} intra rows (≤ {GIANT_ROWS}) → kernel split")
-        # the kernel already emits globally-unique min-member-id labels
-        # (members are disjoint across parent communities), so the only
-        # remaining join fills in intra-edge-less vertices as singletons
-        # of their own id.  The step-a parent community rides along as a
-        # third column on the SAME materialized leaf (it is exactly the
-        # left side's `community`), so the warm-start parent map below
-        # is a distinct over checkpoint blocks — no second vertex-sized
-        # join per level (the r4 layout re-joined `out` against `assign`
-        # to recover the parent it had just projected away).
-        sub = intra.groupBy("community").applyInPandas(
-            _split_kernel_factory(resolution2, seed), "id long, sub long"
-        )
-        out_full = (
-            assign.alias("o")
-            .join(sub.alias("r"), "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("r.sub"), F.col("id")).alias("community"),
-                F.col("o.community").alias("parent"),
-            )
-            .transform(materialize)
-        )
-        # a projection view over out_full's checkpoint leaf whose
-        # unpersist frees the leaf's blocks
-        out = owned_view(out_full.select("id", "community"), out_full)
-        tp = _phase(level, "split_kernel", tp)
-        parent_map = (
-            out_full.select(
-                F.col("community").alias("id"), F.col("parent").alias("community")
-            )
-            .distinct()
-            .transform(materialize)
-        )
+        .distinct()
+        .transform(materialize)
+    )
     tp = _phase(level, "split_parent_map", tp)
-    frames.retain()
     return out, parent_map
 
 
@@ -1044,8 +988,7 @@ def _scale_pass(
         if variant == "slm":
             assign_l, parent_map = map(frames.own, _split_communities(
                 sym_j, node_w_l, assign_l, resolution2, seed + level,
-                bcast=bcast, gamma=gamma, quality=quality, two_m=two_m,
-                max_sweeps=max_sweeps, level=level,
+                bcast=bcast, level=level,
             ))
         # after the split, which records its own phases
         tl = _time.time()

@@ -48,13 +48,14 @@ def _oriented(edges: DataFrame) -> DataFrame:
 
 
 def triangles(edges: DataFrame) -> DataFrame:
-    """All triangles as (a, b, c) with a ≺ b ≺ c in degree-id order."""
-    return _closed_wedges(_oriented(edges).persist())
+    """All triangles as (a, b, c) with a ≺ b ≺ c in degree-id order — a
+    lazy frame that caches nothing, so it pins no storage."""
+    return _closed_wedges(_oriented(edges))
 
 
 def _closed_wedges(o: DataFrame) -> DataFrame:
-    """Triangles over the (persisted) oriented edges `o`: each wedge
-    closed by an oriented edge."""
+    """Triangles over the oriented edges `o`: each wedge closed by an
+    oriented edge."""
     w1 = o.select(F.col("u").alias("a"), F.col("v").alias("b"), F.col("vdeg").alias("bdeg"))
     w2 = o.select(F.col("u").alias("a2"), F.col("v").alias("c"), F.col("vdeg").alias("cdeg"))
     # each unordered wedge {b, c} over middle vertex a is generated

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from slmpy_spark.util import materialize
+from slmpy_spark.util import Frames, materialize
 
 # Mersenne prime 2^31-1 for minhash permutations: keeps every product
 # a_i * hx + b_i under 2^38, far from int64 overflow (Spark 4 runs
@@ -248,20 +248,20 @@ def verified_pairs(
     be freed deterministically before returning; per
     ``util.materialize``, derived frames are pinned before parents are
     unpersisted."""
-    sh = _shingles(docs, shingle_n).persist()
-    cand = materialize(
+    frames = Frames()
+    sh = frames.own(_shingles(docs, shingle_n).persist())
+    cand = frames.own(materialize(
         lsh_candidates(
             docs, k=k, bands=bands, max_bucket=max_bucket, stats=stats,
             shingles=sh,
         )
-    )
+    ))
     out = materialize(
         ngram_jaccard_pairs(
             docs, threshold=threshold, candidates=cand, shingles=sh
         )
     )
-    cand.unpersist()
-    sh.unpersist()
+    frames.retain()
     return out
 
 
@@ -359,8 +359,7 @@ def simhash_candidates(
     homogeneous >max_bucket near-dup cluster can saturate all four
     blocks and lose pairs entirely, which is exactly what the signal
     is for."""
-    sig = simhash_signatures(docs).persist()
-    blocks = sig.select(
+    blocks = simhash_signatures(docs).select(
         "doc_id",
         "simhash",
         F.explode(

@@ -17,7 +17,6 @@ def _row(secs, sweep_jobs, phases, load):
     return {
         "op": "slm", "secs": secs, "q": 0.5, "sweeps": len(sweep_jobs),
         "sweep_jobs": sweep_jobs, "phases": phases,
-        "split_top_rows": [[0, 120], [1, 30]],
         "loadavg_1m_start": load, "loadavg_1m_end": load + 1,
     }
 
@@ -51,4 +50,3 @@ def test_decompose_report_from_two_rows():
     assert t["TOTAL"] == (40.0, 16.0, 8.0)
     assert "bit-identical" in text
     assert "local[8] 0.50/1.50" in text
-    assert "[120, 30]" in text

@@ -90,6 +90,23 @@ def test_lsh_stats_bucket_table_freed(spark):
     assert "dropped_buckets" in stats2
 
 
+def test_simhash_candidates_pins_no_signatures(spark):
+    """simhash_candidates caches no signatures: without stats nothing
+    outlives the count, and with stats only the pinned surviving-bucket
+    list of _capped_buckets does (as for lsh_candidates)."""
+    d = docs_df(spark, [BASE, NEAR, OTHER])
+    before = _persistent_rdd_ids(spark)
+    out = dedup.simhash_candidates(d, max_bucket=10)
+    out.count()
+    out.unpersist()
+    assert _persistent_rdd_ids(spark) - before == set()
+    stats = {}
+    out = dedup.simhash_candidates(d, max_bucket=10, stats=stats)
+    out.count()
+    assert "dropped_buckets" in stats
+    assert len(_persistent_rdd_ids(spark) - before) <= 1  # the ok-list only
+
+
 def test_cc_empty_graph_no_cache_leak(spark):
     empty = spark.createDataFrame([], "src long, dst long, weight double")
     before = _persistent_rdd_ids(spark)
@@ -196,7 +213,7 @@ def test_split_parent_map_matches_join(spark):
     )
     two_m = float(sym.agg(F.sum("weight")).first()[0])
     out, parent_map = _split_communities(
-        sym, node_w, assign, resolution2=1.0 / two_m, seed=3, two_m=two_m
+        sym, node_w, assign, resolution2=1.0 / two_m, seed=3
     )
     got = {(r.id, r.community) for r in parent_map.collect()}
     expect = {

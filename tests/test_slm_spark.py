@@ -147,37 +147,35 @@ def test_slm_auto_picks_exact_for_small(spark):
 
 def test_slm_scale_run_record_filled_and_reset(spark):
     """LAST_RUN_STATS is the one record of an slm_scale run: one
-    sweep_jobs entry per sweep, the setup phase, one split_top_rows
-    entry per split; every call starts from empty lists."""
+    sweep_jobs entry per sweep, the setup phase, one split_kernel phase
+    per level; every call starts from empty lists."""
     from slmpy_spark.graph.slm import LAST_RUN_STATS as stats
 
     edges = edges_df(spark, G.g_two_cliques())
     engine.slm(edges, seed=1, mode="scale", exact_threshold=0, max_levels=1)
-    lengths = {k: len(stats[k]) for k in ("sweep_jobs", "phases", "split_top_rows")}
+    lengths = {k: len(stats[k]) for k in ("sweep_jobs", "phases")}
     assert stats["sweeps"] > 0
     assert len(stats["sweep_jobs"]) == stats["sweeps"]
     assert all(s >= 0 for _level, s in stats["sweep_jobs"])
     assert stats["phases"][0][:2] == [-1, "setup"]
-    assert lengths["split_top_rows"] == stats["levels"] > 0
-    assert stats["split_top_rows"][0][1] > 0  # level 0 splits communities
+    splits = sum(name == "split_kernel" for _level, name, _s in stats["phases"])
+    assert splits == stats["levels"] > 0
 
     engine.slm(edges, seed=1, mode="scale", exact_threshold=0, max_levels=1)
     assert len(stats["sweep_jobs"]) == stats["sweeps"]
     assert {k: len(stats[k]) for k in lengths} == lengths
 
 
-def test_slm_scale_giant_split_distributed(spark, monkeypatch):
-    """The distributed split branch (taken when the largest community
-    holds more than GIANT_ROWS intra-edge rows): same Q at both
-    broadcast settings, Q equal to the modularity recompute, every
+def test_slm_scale_split_same_q_both_broadcast_settings(spark):
+    """The community split at both broadcast settings: one split_kernel
+    phase per level, same Q, Q equal to the modularity recompute, every
     vertex labelled, nothing left pinned after unpersist.  Two levels:
-    the second starts from the first distributed split's parent map."""
+    the second starts from the first split's parent map."""
     from slmpy_spark.graph import slm as slm_mod
 
     def persistent():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
-    monkeypatch.setattr(slm_mod, "GIANT_ROWS", 0)
     und = G.gnp(40, 0.12, seed=5)
     edges = edges_df(spark, und)
     ids = {v for s, d, _w in und for v in (s, d)}
@@ -190,9 +188,9 @@ def test_slm_scale_giant_split_distributed(spark, monkeypatch):
         )
         splits = [
             (level, name) for level, name, _s in slm_mod.LAST_RUN_STATS["phases"]
-            if name in ("split_distributed", "split_kernel")
+            if name.startswith("split_") and name != "split_parent_map"
         ]
-        assert splits == [(0, "split_distributed"), (1, "split_distributed")]
+        assert splits == [(0, "split_kernel"), (1, "split_kernel")]
         rows = assign.collect()
         assert sorted(r.id for r in rows) == sorted(ids)
         assert engine.modularity(edges, assign) == pytest.approx(q, abs=1e-12)

@@ -4,6 +4,7 @@ and SLM, the plan-audit dump names, the edge cache's leaf ownership and
 the Frames scope."""
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -48,6 +49,12 @@ def _persistent_rdd_ids(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
+def _cached_rdd_ids(spark):
+    """Ids of the RDDs the block manager holds cached partitions of."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+
 @pytest.mark.parametrize("with_checkpointer", [False, True])
 @pytest.mark.parametrize("op", sorted(OPERATORS))
 def test_operator_result_unpersist_frees_everything(spark, tmp_path, op, with_checkpointer):
@@ -57,10 +64,17 @@ def test_operator_result_unpersist_frees_everything(spark, tmp_path, op, with_ch
     edges = edges_df(spark, FIVE_EDGES)
     ck = Checkpointer(spark, str(tmp_path), run_id=op) if with_checkpointer else None
     before = _persistent_rdd_ids(spark)
+    cached_before = _cached_rdd_ids(spark)
     out = OPERATORS[op](edges, ck)
     assert out.count() == 6
     out.unpersist()
     assert _persistent_rdd_ids(spark) - before == set()
+    # storage-level probe: no RDD beyond the baseline still holds cached
+    # partitions (unpersist frees blocks asynchronously, so poll)
+    deadline = time.time() + 5
+    while _cached_rdd_ids(spark) - cached_before and time.time() < deadline:
+        time.sleep(0.1)
+    assert _cached_rdd_ids(spark) - cached_before == set()
 
 
 def test_plan_audit_dump_names(spark, tmp_path, monkeypatch):
@@ -147,8 +161,9 @@ def test_frames_free_an_owned_edge_cache(spark):
 def test_triangle_count_frees_what_it_persists(spark):
     """triangle_count persists the oriented edges and the triangles for
     its count; both are freed before it returns, and the per-vertex
-    frame still recomputes from lineage."""
-    from slmpy_spark.graph.triangles import triangle_count
+    frame still recomputes from lineage.  The public triangles() frame
+    pins nothing."""
+    from slmpy_spark.graph.triangles import triangle_count, triangles
 
     edges = edges_df(spark, FIVE_EDGES)
     before = _persistent_rdd_ids(spark)
@@ -158,3 +173,5 @@ def test_triangle_count_frees_what_it_persists(spark):
     assert {r.id: r.triangles for r in per_vertex.collect()} == {
         0: 1, 1: 1, 2: 1, 3: 0, 4: 0, 5: 0
     }
+    assert triangles(edges).count() == 1
+    assert _persistent_rdd_ids(spark) - before == set()
