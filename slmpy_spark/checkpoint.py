@@ -100,19 +100,29 @@ class Checkpointer:
             except Exception:
                 df.writeTo(tbl).using(self.table_format).create()
 
-    def log_metric(self, **row) -> None:
-        """Append one metrics row (op/level/iter/partition counts/...)."""
-        row = {"run_id": self.run_id, "ts": time.time(), "seq": self._metrics_seq, **row}
-        self._metrics_seq += 1
+    def _log_rows(self, rows: list[dict]) -> None:
+        """The one metrics writer: stamps `run_id`, one `ts` and
+        consecutive `seq` numbers on `rows`, then appends them with one
+        table append (table backend) or one metrics.jsonl write."""
+        ts = time.time()
+        rows = [
+            {"run_id": self.run_id, "ts": ts, "seq": self._metrics_seq + i, **row}
+            for i, row in enumerate(rows)
+        ]
+        self._metrics_seq += len(rows)
         if self.backend == "table":
             mdf = self.spark.createDataFrame(
-                [(row["run_id"], row["ts"], row["seq"], json.dumps(row))],
+                [(r["run_id"], r["ts"], r["seq"], json.dumps(r)) for r in rows],
                 "run_id string, ts double, seq long, payload string",
             )
             self._append(self._table("metrics"), mdf)
             return
         with open(f"{self._run_dir}/metrics.jsonl", "a") as f:
-            f.write(json.dumps(row) + "\n")
+            f.writelines(json.dumps(r) + "\n" for r in rows)
+
+    def log_metric(self, **row) -> None:
+        """Append one metrics row (op/level/iter/partition counts/...)."""
+        self._log_rows([row])
 
     def log_partition_metrics(self, df: DataFrame, op: str, **ctx) -> int:
         """Per-partition lineage rows (north star; SURVEY §2.1 metrics
@@ -121,16 +131,8 @@ class Checkpointer:
         wall_ms), and appends them as metrics rows tagged with `op` and
         any extra context.  Returns the number of partitions seen.
         The pass is a separate cheap action — call it on a materialized
-        frame, at per-level (not per-sweep) granularity.
-
-        Scale: the table backend appends the stats frame as ONE
-        DataFrame write — the rows never funnel through a driver-side
-        loop, so 10^5–10^6 partitions on a real cluster cost one small
-        distributed append (seq = running base + partition_id keeps the
-        global metrics ordering).  The parquet backend is the hermetic
-        local-file path and collects (its metrics sink IS a driver-side
-        jsonl file), in one buffered write."""
-        import pandas as pd  # noqa: F401  (worker-side import kept local)
+        frame, at per-level (not per-sweep) granularity.  Its one small
+        row per partition is collected and written like log_metric's."""
 
         def _stats(batches):
             from pyspark import TaskContext
@@ -155,59 +157,8 @@ class Checkpointer:
         stats = df.mapInPandas(
             _stats, "partition_id int, edges_processed long, wall_ms double"
         )
-        if self.backend == "table":
-            from pyspark.sql import functions as F
-
-            base, ts = self._metrics_seq, time.time()
-            # clamp: the mapInPandas fallback emits partition_id = -1
-            # when TaskContext is absent, and base - 1 would collide
-            # with the previous metric row's seq (metrics() sorts by it)
-            seq = (
-                F.lit(base) + F.greatest(F.col("partition_id"), F.lit(0))
-            ).cast("long")
-            payload = F.to_json(
-                F.struct(
-                    F.lit(self.run_id).alias("run_id"),
-                    F.lit(ts).alias("ts"),
-                    seq.alias("seq"),
-                    F.lit(op).alias("op"),
-                    F.col("partition_id"),
-                    F.col("edges_processed"),
-                    F.col("wall_ms"),
-                    *[F.lit(v).alias(k) for k, v in ctx.items()],
-                )
-            )
-            mdf = stats.select(
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(ts).alias("ts"),
-                seq.alias("seq"),
-                payload.alias("payload"),
-            ).persist()
-            n = mdf.count()
-            self._append(self._table("metrics"), mdf)
-            mdf.unpersist()
-            self._metrics_seq += n
-            return n
-        rows = stats.collect()
-        base, ts = self._metrics_seq, time.time()
-        with open(f"{self._run_dir}/metrics.jsonl", "a") as f:
-            for r in rows:
-                f.write(
-                    json.dumps(
-                        {
-                            "run_id": self.run_id,
-                            "ts": ts,
-                            "seq": base + int(r["partition_id"]),
-                            "op": op,
-                            "partition_id": int(r["partition_id"]),
-                            "edges_processed": int(r["edges_processed"]),
-                            "wall_ms": float(r["wall_ms"]),
-                            **ctx,
-                        }
-                    )
-                    + "\n"
-                )
-        self._metrics_seq += len(rows)
+        rows = sorted(stats.collect(), key=lambda r: r["partition_id"])
+        self._log_rows([{"op": op, **r.asDict(), **ctx} for r in rows])
         return len(rows)
 
     # ---------------------------------------------------------- resume

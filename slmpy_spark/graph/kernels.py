@@ -315,22 +315,20 @@ def _intra_edges_by_cluster(
 
 
 def _reduced_network(indptr, nbr, wgt, node_w, cluster, n_clusters):
-    """Aggregate to the super-graph: inter-cluster weights summed; the
-    intra weight folds into the returned self-weight scalar; super node
-    weights = member node-weight sums. Returns
-    (r_indptr, r_nbr, r_wgt, r_node_w, intra_w_total)."""
+    """Aggregate to the super-graph: inter-cluster weights summed, intra
+    weight dropped; super node weights = member node-weight sums.
+    Returns (r_indptr, r_nbr, r_wgt, r_node_w)."""
     n = indptr.size - 1
     e_src = np.repeat(np.arange(n, dtype=np.int64), np.diff(indptr))
     cs, cd, w = cluster[e_src], cluster[nbr], wgt
     inter = cs != cd
-    intra_w_total = float(w[~inter].sum())
     key = cs[inter].astype(np.int64) * n_clusters + cd[inter]
     uk, inv = np.unique(key, return_inverse=True)
     rw = np.bincount(inv, weights=w[inter])
     rs, rd = (uk // n_clusters), (uk % n_clusters)
     r_indptr, r_nbr, r_wgt = build_csr(n_clusters, rs, rd, rw)
     r_node_w = np.bincount(cluster, weights=node_w, minlength=n_clusters)
-    return r_indptr, r_nbr, r_wgt, r_node_w, intra_w_total
+    return r_indptr, r_nbr, r_wgt, r_node_w
 
 
 # ------------------------------------------------------------- SLM
@@ -395,8 +393,9 @@ def slm_recursive(
         next_id += kc
     cluster[:] = new_cluster
 
-    r = _reduced_network(indptr, nbr, wgt, node_w, cluster, next_id)
-    r_indptr, r_nbr, r_wgt, r_node_w, _ = r
+    r_indptr, r_nbr, r_wgt, r_node_w = _reduced_network(
+        indptr, nbr, wgt, node_w, cluster, next_id
+    )
     # initial clustering of the reduced network: subcommunity → parent
     r_cluster = np.repeat(np.arange(n_clusters, dtype=np.int64), n_sub)
     update |= slm_recursive(
@@ -421,7 +420,7 @@ def louvain_recursive(
     update = lm(indptr, nbr, wgt, node_w, cluster, resolution2, rng)
     n_clusters = int(cluster.max()) + 1 if n else 0
     if n_clusters < n:
-        r_indptr, r_nbr, r_wgt, r_node_w, _ = _reduced_network(
+        r_indptr, r_nbr, r_wgt, r_node_w = _reduced_network(
             indptr, nbr, wgt, node_w, cluster, n_clusters
         )
         r_cluster = np.arange(n_clusters, dtype=np.int64)
@@ -451,15 +450,12 @@ def quality_numpy(
     cluster,
     gamma: float = 1.0,
     quality: str = "modularity",
-    two_m: float | None = None,
 ) -> float:
-    """Q of a clustering on a CSR graph (§1.1). `two_m` lets callers pin
-    the level-0 normalization when evaluating on reduced networks."""
+    """Q of a clustering on a CSR graph (§1.1)."""
     n = indptr.size - 1
     e_src = np.repeat(np.arange(n, dtype=np.int64), np.diff(indptr))
     intra = float(wgt[cluster[e_src] == cluster[nbr]].sum())
-    if two_m is None:
-        two_m = float(wgt.sum())
+    two_m = float(wgt.sum())
     if two_m == 0:
         return 0.0
     if quality == "cpm":

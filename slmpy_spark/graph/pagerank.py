@@ -42,7 +42,7 @@ Scale notes (100 TB / 1000 executors):
   rides its materialize action as observe metrics — the r5 layout ran
   four separate jobs (verts.count, has_in.count, has_out.count, the
   observed ranks init) to learn the same numbers.
-- `broadcast_threshold` (same knob and default as slm_scale) gates
+- `BROADCAST_THRESHOLD` (slm_scale's default `broadcast_threshold`) gates
   broadcast hints on the ONE-TIME setup joins (edges ⋈ src_info, the
   flat-unit attach) so small inputs skip those shuffle waves.  The
   per-iteration join deliberately does NOT broadcast the rank state:
@@ -61,6 +61,8 @@ from pyspark.sql import functions as F
 
 from slmpy_spark.util import EdgeCache, materialize, owned_view, supersteps
 
+BROADCAST_THRESHOLD = 250_000
+
 
 def pagerank(
     edges: DataFrame,
@@ -70,7 +72,6 @@ def pagerank(
     checkpoint_interval: int = 5,
     checkpointer=None,
     weighted: bool = False,
-    broadcast_threshold: int = 250_000,
 ) -> DataFrame:
     """Return ranks(id long, rank double), Σ rank = 1; its
     `.unpersist()` frees the result's blocks.
@@ -84,8 +85,8 @@ def pagerank(
     given, per-iteration state is persisted (resumable); otherwise
     localCheckpoint truncates lineage in-memory.
 
-    `broadcast_threshold`: when the vertex count fits under it, the
-    one-time setup joins take broadcast hints (see module docstring —
+    When the vertex count fits under BROADCAST_THRESHOLD, the one-time
+    setup joins take broadcast hints (see module docstring —
     per-iteration joins are NOT affected).
     """
     spark = edges.sparkSession
@@ -134,7 +135,7 @@ def pagerank(
     n_dangling_dyn = int(v0["n_dang_dyn"] or 0)
     n_flat = n - n_dyn
     n_dangling_flat = (n - n_out) - n_dangling_dyn
-    hint = F.broadcast if n <= broadcast_threshold else (lambda f: f)
+    hint = F.broadcast if n <= BROADCAST_THRESHOLD else (lambda f: f)
 
     # out-edge contribution fraction, fixed across iterations: per-edge
     # weight share (weighted) or the uniform 1/out_deg split.  The dyn

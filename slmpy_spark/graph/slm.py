@@ -45,9 +45,13 @@ Scale-mode results match the reference's *Q-class* (same modularity to
 sequential visit order is inherently unparallelizable (SURVEY §8-H1);
 exact mode is the label-parity path.
 
-Vertex ids are assumed non-negative (the ingest layer guarantees it):
-scale mode labels an escaped singleton ``-(id+1)`` during sweeps, which
-must not collide with any real vertex id.
+Scale mode labels an escaped singleton ``-(id+1)`` during sweeps, which
+must not collide with any real vertex id: it assumes no id equals
+``-(id'+1)`` for another id' (and no id is 2^63-1, whose ``id+1``
+overflows).  Non-negative ids always satisfy it; the ingest layer does
+not guarantee that — ``pages_to_edges`` emits signed ``xxhash64`` ids —
+and for n hashed ids about n²/2^64 ordered pairs violate it (~5·10^-4
+at n = 10^8), which is not checked.
 """
 
 from __future__ import annotations
@@ -533,14 +537,11 @@ def _distributed_local_moving(
     for sweep in range(max_sweeps):
         t0 = _time.time()
         obs = Observation()
+        prop = _propose_moves(sym, state, resolution2, seed, sweep, move_frac, bcast)
         if sweep == 0:
-            explain_to(
-                _propose_moves(sym, state, resolution2, seed, sweep, move_frac, bcast),
-                f"slm_sweep_{'bcast' if bcast else 'shuffle'}",
-            )
+            explain_to(prop, f"slm_sweep_{'bcast' if bcast else 'shuffle'}")
         prop = frames.own(
-            _propose_moves(sym, state, resolution2, seed, sweep, move_frac, bcast)
-            .observe(
+            prop.observe(
                 obs,
                 F.sum("kic_cur").alias("intra"),
                 F.sum(F.col("node_w") * F.col("sigma_o")).alias("s2"),

@@ -84,9 +84,32 @@ def test_table_backend_roundtrip(spark, tmp_path):
         m = ck.metrics()
         assert [row["seq"] for row in m] == [0, 1]
         assert m[0]["n_moves"] == 3
+
+        # per-partition rows interleave with plain rows exactly as on
+        # the parquet backend (ts and wall_ms are timings)
+        def logged(c):
+            c.log_metric(op="x", level=0)
+            frame = spark.range(100).repartition(4)
+            assert c.log_partition_metrics(frame, op="probe", level=3) == 4
+            c.log_metric(op="y", level=1)
+            return [
+                {k: v for k, v in row.items() if k not in ("ts", "wall_ms")}
+                for row in c.metrics()
+            ]
+
+        tbl = logged(Checkpointer(
+            spark, "", run_id="tb2", backend="table",
+            namespace="spark_catalog.default", table_format="parquet",
+        ))
+        assert tbl == logged(Checkpointer(spark, str(tmp_path), run_id="tb2"))
+        assert [row["seq"] for row in tbl] == list(range(6))
+        assert [row["op"] for row in tbl] == ["x"] + ["probe"] * 4 + ["y"]
+        assert [row["level"] for row in tbl] == [0, 3, 3, 3, 3, 1]
+        assert [row["partition_id"] for row in tbl[1:5]] == [0, 1, 2, 3]
+        assert sum(row["edges_processed"] for row in tbl[1:5]) == 100
     finally:
         for t in spark.catalog.listTables("default"):
-            if t.name.startswith("tb1_"):
+            if t.name.startswith(("tb1_", "tb2_")):
                 spark.sql(f"DROP TABLE IF EXISTS spark_catalog.default.{t.name}")
 
 

@@ -166,11 +166,13 @@ def test_slm_scale_run_record_filled_and_reset(spark):
     assert {k: len(stats[k]) for k in lengths} == lengths
 
 
-def test_slm_scale_split_same_q_both_broadcast_settings(spark):
+@pytest.mark.parametrize("quality,gamma", [("modularity", 1.0), ("cpm", 0.5)])
+def test_slm_scale_split_same_q_both_broadcast_settings(spark, quality, gamma):
     """The community split at both broadcast settings: one split_kernel
-    phase per level, same Q, Q equal to the modularity recompute, every
-    vertex labelled, nothing left pinned after unpersist.  Two levels:
-    the second starts from the first split's parent map."""
+    phase per level, same Q, Q equal to the quality recompute (and, for
+    CPM, to the independent oracle), every vertex labelled, nothing left
+    pinned after unpersist.  Two levels: the second starts from the
+    first split's parent map."""
     from slmpy_spark.graph import slm as slm_mod
 
     def persistent():
@@ -183,8 +185,8 @@ def test_slm_scale_split_same_q_both_broadcast_settings(spark):
     qs = []
     for bt in (1, 250_000):
         assign, q = engine.slm(
-            edges, seed=3, mode="scale", exact_threshold=0, max_sweeps=3,
-            max_levels=2, broadcast_threshold=bt,
+            edges, gamma=gamma, quality=quality, seed=3, mode="scale",
+            exact_threshold=0, max_sweeps=3, max_levels=2, broadcast_threshold=bt,
         )
         splits = [
             (level, name) for level, name, _s in slm_mod.LAST_RUN_STATS["phases"]
@@ -193,7 +195,12 @@ def test_slm_scale_split_same_q_both_broadcast_settings(spark):
         assert splits == [(0, "split_kernel"), (1, "split_kernel")]
         rows = assign.collect()
         assert sorted(r.id for r in rows) == sorted(ids)
-        assert engine.modularity(edges, assign) == pytest.approx(q, abs=1e-12)
+        assert engine.modularity(
+            edges, assign, gamma=gamma, quality=quality
+        ) == pytest.approx(q, abs=1e-12)
+        if quality == "cpm":
+            labels = {r.id: r.community for r in rows}
+            assert O.cpm_oracle(und, labels, gamma) == pytest.approx(q, abs=1e-9)
         assign.unpersist()
         assert persistent() - before == set()
         qs.append(q)
