@@ -10,8 +10,8 @@ speedup/4 where speedup = wall_8 / wall_32.
 
 Usage:  python BENCH/run_scaling.py [--edges 1000000] [--reps 3]
 Appends: raw JSON lines to BENCH/scaling_raw.jsonl.  An slm row
-carries SLM's run record (slm.LAST_RUN_STATS: per-level sweep jobs,
-per-phase seconds, top-community size per split) next to its wall time.
+carries SLM's run record (slm.LAST_RUN_STATS: per-level sweep jobs and
+per-phase seconds) next to its wall time.
 BENCH/write_baseline.py builds BENCH/BASELINE.md from selected rows.
 
 Run each parallelism level in a separate process (a JVM can't change

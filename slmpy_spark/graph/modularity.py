@@ -6,9 +6,12 @@
 over the *symmetrized* table:  Σin(c) = total weight of intra-community
 directed-pair entries (each undirected intra edge counted twice, like
 the reference's CSR), Σtot(c) = Σ of weighted degrees of members.
-Q is always taken on an original (non-aggregated) edge table — slm_scale
-scores the flat labels against its level-0 graph — so the self-loop
-weight graph aggregation accumulates never enters it.
+Q is always taken on an original (non-aggregated) edge table, so the
+self-loop weight graph aggregation accumulates never enters it.
+slm_scale scores a pass with it only where the driver holds no final
+partition (an empty-supergraph, converged or max_levels exit, and the
+louvain_refine pass); a pass that ends in the exact finish is scored
+there from the collected supergraph, with no Spark job.
 
 Spark plan: two equi-joins of sym against the assignment (broadcast
 when the assignment is small — Catalyst picks it; at web scale assign
@@ -66,8 +69,8 @@ def modularity(
     (constant Potts model, unit node weights, unnormalized γ).
 
     `two_m`: pass the known total weight (Σ weight over `sym`) to skip
-    the edge-sized scan that re-derives it — iterative callers (slm_scale's per-pass Q) already
-    hold it.
+    the edge-sized scan that re-derives it — slm_scale's fallback pass
+    Q already holds it.
     """
     agg = community_aggregates(sym, assign)
     if two_m is None:

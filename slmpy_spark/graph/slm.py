@@ -46,12 +46,13 @@ sequential visit order is inherently unparallelizable (SURVEY §8-H1);
 exact mode is the label-parity path.
 
 Scale mode labels an escaped singleton ``-(id+1)`` during sweeps, which
-must not collide with any real vertex id: it assumes no id equals
-``-(id'+1)`` for another id' (and no id is 2^63-1, whose ``id+1``
-overflows).  Non-negative ids always satisfy it; the ingest layer does
-not guarantee that — ``pages_to_edges`` emits signed ``xxhash64`` ids —
-and for n hashed ids about n²/2^64 ordered pairs violate it (~5·10^-4
-at n = 10^8), which is not checked.
+must not collide with any real vertex id, so ``slm_scale`` requires
+every vertex id to be non-negative: the minimum id rides its setup
+checkpoint job as an observe metric, and a negative one raises
+``ValueError`` before any sweep.  (An id of 2^63-1 would overflow
+``id+1``; Spark's ANSI mode raises on that.)  The ingest layer's hashed
+ids satisfy the condition: ``pages_to_edges`` and ``url_ids`` mask
+``xxhash64`` to its low 62 bits.
 """
 
 from __future__ import annotations
@@ -818,9 +819,13 @@ def slm_scale(
             obs0,
             F.count(F.lit(1)).alias("m"),
             F.sum("weight").alias("tw"),
+            F.min("src").alias("min_id"),
         )
     ))
     v0 = obs0.get
+    if (v0["min_id"] or 0) < 0:
+        frames.retain()
+        raise ValueError(f"slm_scale needs non-negative vertex ids, got {v0['min_id']}")
     m0 = int(v0["m"] or 0)
     two_m = float(v0["tw"] or 0.0)
     obs_n = Observation()
@@ -844,7 +849,7 @@ def slm_scale(
             LAST_RUN_STATS["passes"] += 1
             pass_seed = seed + 7919 * it + 104_729 * start
             prev = flat
-            flat = frames.own(_scale_pass(
+            flat, q = _scale_pass(
                 sym0, nw0, two_m, resolution2, gamma, quality,
                 pass_seed, max_levels, max_sweeps,
                 exact_threshold, variant, checkpointer,
@@ -853,7 +858,8 @@ def slm_scale(
                 resume=(resume and it == 0 and start == 0),
                 broadcast_threshold=broadcast_threshold,
                 m0=m0, nv0=nv0,
-            ))
+            )
+            frames.own(flat)
             if variant == "louvain_refine":
                 # multilevel refinement (§1.2(3)): one more LM pass on
                 # the ORIGINAL graph from the merged-down labels; the
@@ -868,9 +874,13 @@ def slm_scale(
                 # frees the refine cache and the merged-down labels —
                 # unless an empty-graph pass returned `prev` unchanged
                 frames.retain(sym0, nw0, prev, best_flat, flat)
-            tq = _time.time()
-            q = modularity(sym0, flat, gamma=gamma, quality=quality, two_m=two_m)
-            tq = _phase(-1, "pass_q", tq)
+                q = None  # the refinement moved labels after the finish
+            if q is None:
+                # the pass ended where the driver holds no final
+                # partition: one recompute over the original graph
+                tq = _time.time()
+                q = modularity(sym0, flat, gamma=gamma, quality=quality, two_m=two_m)
+                tq = _phase(-1, "pass_q", tq)
             _dbg(f"start {start} pass {it}: q={q:.6f} (best {best_q})")
             improved = best_q is None or q > best_q + 1e-9
             if improved:
@@ -893,8 +903,11 @@ def _scale_pass(
     broadcast_threshold=250_000,
     m0: int | None = None, nv0: int | None = None,
 ):
-    """One full SLM/Louvain hierarchy pass (level loop). Returns the
-    flat original-vertex → community assignment.
+    """One full SLM/Louvain hierarchy pass (level loop). Returns (flat,
+    q): the flat original-vertex → community assignment and its Q on the
+    original graph as the exact finish scored it on the driver — None
+    on the exits that hold no final partition there (empty supergraph,
+    converged, `max_levels`).
 
     `m0`/`nv0`: the level-0 edge-entry and vertex counts when the caller
     already knows them (observe-ridden on sym0/nw0's checkpoint jobs);
@@ -918,6 +931,7 @@ def _scale_pass(
     # state init then skips the vertex join entirely, r6)
     assign_l = init_flat
     flat = None  # original-vertex → current-level community
+    q = None  # the pass's Q, when the exact finish scored it
     level_start = 0
 
     if resume and checkpointer is not None:
@@ -940,7 +954,7 @@ def _scale_pass(
             # returns its INPUT unchanged when the level's supergraph is
             # empty (every community absorbed all its edges → aggregate
             # dropped them as self-loops)
-            assign_l = _exact_finish(
+            assign_l, q = _exact_finish(
                 sym_l,
                 node_w_l,
                 assign_l
@@ -949,6 +963,7 @@ def _scale_pass(
                 resolution2,
                 seed + level,
                 variant,
+                two_m, gamma, quality,
                 level=level,
             )
             # (_exact_finish records its own exact_* phases)
@@ -1056,7 +1071,7 @@ def _scale_pass(
     # every exit (exact-finish break, converged break, max_levels
     # exhaustion) keeps only the result
     frames.retain(flat)
-    return flat
+    return flat, q
 
 
 def _merge_down(
@@ -1075,9 +1090,24 @@ def _merge_down(
     return out.transform(materialize)
 
 
-def _exact_finish(sym_l, node_w_l, assign_l, resolution2, seed, variant, level=-1):
+def _exact_finish(
+    sym_l, node_w_l, assign_l, resolution2, seed, variant, two_m, gamma, quality, level=-1
+):
     """Collect the (now small) super-graph and run the sequential kernel
-    to convergence, starting from the current assignment."""
+    to convergence, starting from the current assignment.  Returns
+    (assign, q): q is the pass's Q on the ORIGINAL graph, scored from the
+    collected arrays with no Spark job — or None when the supergraph is
+    empty and `assign_l` comes back unchanged (the caller recomputes).
+
+    ``s_in = two_m − w_cross`` holds at any level, with w_cross the
+    weight of collected entries whose endpoints end in different final
+    communities: an original entry that crosses final communities
+    survives every aggregation inside such a crossing supergraph entry,
+    and every other original entry's weight was either dropped as a
+    supernode self-loop or sits in an intra supergraph entry.  Σtot² is
+    Σ_c (Σ node_w)² over the level's node weights (aggregated vertex
+    counts for CPM, so Σ n_c²).  On integral weights every sum is exact,
+    so q equals ``modularity()`` bit for bit."""
     tp = _time.time()
     # ONE tagged-union collect instead of three separate toPandas
     # actions (r6) — the exact finish runs once per pass and each
@@ -1109,13 +1139,14 @@ def _exact_finish(sym_l, node_w_l, assign_l, resolution2, seed, variant, level=-
     spark = sym_l.sparkSession
     tp = _phase(level, "exact_collect", tp)
     if pdf.empty:
-        return assign_l
+        return assign_l, None
 
     ids, lsrc, ldst, la = kernels.dense_ids(
         pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64),
         a["id"].to_numpy(np.int64),
     )
-    indptr, nbr, wgt = kernels.build_csr(len(ids), lsrc, ldst, pdf["weight"].to_numpy(np.float64))
+    w = pdf["weight"].to_numpy(np.float64)
+    indptr, nbr, wgt = kernels.build_csr(len(ids), lsrc, ldst, w)
 
     node_w = np.zeros(len(ids))
     node_w[np.searchsorted(ids, nw["id"].to_numpy(np.int64))] = nw["node_w"].to_numpy(np.float64)
@@ -1135,12 +1166,15 @@ def _exact_finish(sym_l, node_w_l, assign_l, resolution2, seed, variant, level=-
     for _ in range(32):
         if not step(indptr, nbr, wgt, node_w, cluster, resolution2, rng):
             break
+    s_in = two_m - w[cluster[lsrc] != cluster[ldst]].sum()
+    s2 = (np.bincount(cluster, weights=node_w) ** 2).sum()
+    q = _q_of(float(s_in), float(s2), two_m, gamma, quality)
     tp = _phase(level, "exact_kernel", tp)
     # canonical min-member-id labels to stay in the global convention
     out = pd.DataFrame({"id": ids, "community": kernels.min_member(ids, cluster)})
     res = spark.createDataFrame(out, ASSIGN_SCHEMA)
     tp = _phase(level, "exact_emit", tp)
-    return res
+    return res, q
 
 
 # -------------------------------------------------------------- facade

@@ -11,16 +11,17 @@ vectorized equivalent — that loop is per *href*, bounded by outlink
 count, not a hidden per-row UDF):
 
   pages ──mapInPandas──▶ (url, link) pairs        [extract.extract_links]
-        ──select xxhash64(url), xxhash64(link)──▶ JVM-side stable 64-bit ids
+        ──select url_id(url), url_id(link)──▶ JVM-side stable 62-bit ids
+                                              (xxhash64 & (2^62 − 1))
         ──groupBy(src,dst).count──▶ weight = link multiplicity
         ──filter src != dst──▶ edges
 
 Scale notes: the Iceberg/parquet scan prunes to (url, html) only —
 `html` is the wide binary column and is the *only* payload the kernel
 reads; everything downstream is long/double.  The groupBy is the single
-shuffle.  xxhash64 is Spark's built-in (JVM codegen); collisions at
-10^12 urls are ~3·10^-8 per pair (birthday bound ~2.7% aggregate at
-1e12 keys — acceptable for link statistics; an exact-id variant can
+shuffle.  xxhash64 is Spark's built-in (JVM codegen); masked to 62
+bits, n urls hash to about n²/2^63 colliding pairs (about one at
+3·10^9 urls — acceptable for link statistics; an exact-id variant can
 join back through a url dimension table).
 """
 
@@ -64,14 +65,18 @@ def page_links(pages: DataFrame) -> DataFrame:
     )
 
 
+def url_id(col: str):
+    """The vertex id of a url column: xxhash64 masked to its low 62 bits,
+    so ids are non-negative (scale-mode SLM requires it)."""
+    return F.xxhash64(col).bitwiseAND((1 << 62) - 1)
+
+
 def pages_to_edges(pages: DataFrame) -> DataFrame:
-    """edges(src, dst, weight) with src/dst = xxhash64 of normalized
+    """edges(src, dst, weight) with src/dst = url_id of normalized
     urls and weight = link multiplicity; self-edges dropped."""
     links = page_links(pages)
     return (
-        links.select(
-            F.xxhash64("url").alias("src"), F.xxhash64("link").alias("dst")
-        )
+        links.select(url_id("url").alias("src"), url_id("link").alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.count("*").cast("double").alias("weight"))
@@ -95,6 +100,6 @@ def pages_text(pages: DataFrame) -> DataFrame:
 
 
 def url_ids(pages: DataFrame) -> DataFrame:
-    """url dimension table (id = xxhash64(url)) for joining ranks /
-    communities back to urls."""
-    return pages.select(F.xxhash64("url").alias("id"), "url").distinct()
+    """url dimension table (id = url_id(url), the ids pages_to_edges
+    emits) for joining ranks / communities back to urls."""
+    return pages.select(url_id("url").alias("id"), "url").distinct()

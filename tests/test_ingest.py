@@ -12,6 +12,7 @@ from slmpy_spark.sources.pages import (
     page_links,
     pages_text,
     pages_to_edges,
+    url_ids,
 )
 
 # ---------------------------------------------------------- fixtures
@@ -124,7 +125,9 @@ def test_pages_to_edges_golden(spark):
     urls = {p["url"] for p in PAGES}
     hashes = {
         r.url: r.id
-        for r in pdf.select(F.xxhash64("url").alias("id"), "url").collect()
+        for r in pdf.select(
+            F.xxhash64("url").bitwiseAND((1 << 62) - 1).alias("id"), "url"
+        ).collect()
     }
     expected = {}
     for p in PAGES:
@@ -141,3 +144,7 @@ def test_pages_to_edges_golden(spark):
     assert (h["https://ex0.test/p0"], h["https://ex0.test/p0"]) not in got
     # total edge count: p0→p1(x2 → one row), p0→/p2, p1→p0, p3→p0
     assert edges.count() == 4
+    # ids are the low 62 bits of xxhash64: non-negative, so scale-mode
+    # SLM accepts them, and url_ids joins back on the same ids
+    assert min(min(s, d) for s, d in got) >= 0
+    assert set(h.values()) == {r.id for r in url_ids(pdf).collect()}

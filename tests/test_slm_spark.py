@@ -205,3 +205,77 @@ def test_slm_scale_split_same_q_both_broadcast_settings(spark, quality, gamma):
         assert persistent() - before == set()
         qs.append(q)
     assert qs[0] == qs[1]
+
+
+def _no_recompute(*_a, **_k):
+    raise AssertionError("slm_scale recomputed Q with modularity()")
+
+
+@pytest.mark.parametrize("exact_threshold,finish_level", [(10_000, 0), (120, 2)])
+@pytest.mark.parametrize("quality,gamma", [("modularity", 1.0), ("cpm", 0.5)])
+def test_slm_scale_pass_q_scored_at_exact_finish(
+    spark, monkeypatch, quality, gamma, exact_threshold, finish_level
+):
+    """A pass that ends in the exact finish gets its Q from the driver's
+    collected arrays: modularity() is never called, no pass_q phase is
+    recorded, and on integral weights the Q equals the independent
+    recompute bit for bit (and, for CPM, the oracle)."""
+    from slmpy_spark.graph import slm as slm_mod
+
+    monkeypatch.setattr(slm_mod, "modularity", _no_recompute)
+    und = G.gnp(40, 0.12, seed=5)
+    edges = edges_df(spark, und)
+    assign, q = engine.slm(
+        edges, gamma=gamma, quality=quality, seed=3, mode="scale",
+        exact_threshold=exact_threshold, max_sweeps=3,
+    )
+    phases = slm_mod.LAST_RUN_STATS["phases"]
+    assert [lvl for lvl, name, _s in phases if name == "exact_collect"] == [finish_level]
+    assert not [p for p in phases if p[1] == "pass_q"]
+    assert q == engine.modularity(edges, assign, gamma=gamma, quality=quality)
+    if quality == "cpm":
+        labels = {r.id: r.community for r in assign.collect()}
+        assert O.cpm_oracle(und, labels, gamma) == pytest.approx(q, abs=1e-9)
+    assign.unpersist()
+
+
+def test_slm_scale_pass_q_fallback_without_exact_finish(spark):
+    """With no exact finish (exact_threshold=0) the pass holds no final
+    partition on the driver: exactly one modularity() recompute, timed
+    as one pass_q phase."""
+    from slmpy_spark.graph import slm as slm_mod
+
+    edges = edges_df(spark, G.gnp(40, 0.12, seed=5))
+    assign, q = engine.slm(edges, seed=3, mode="scale", exact_threshold=0, max_sweeps=3)
+    phases = slm_mod.LAST_RUN_STATS["phases"]
+    assert [p[:2] for p in phases if p[1] == "pass_q"] == [[-1, "pass_q"]]
+    assert q == pytest.approx(engine.modularity(edges, assign), abs=1e-12)
+    assign.unpersist()
+
+
+def test_slm_scale_pass_q_non_integral_weights(spark, monkeypatch):
+    """Non-integral weights: the driver-side Q sums in a different order
+    than the recompute, so the two agree to rounding, not bit for bit."""
+    from slmpy_spark.graph import slm as slm_mod
+
+    monkeypatch.setattr(slm_mod, "modularity", _no_recompute)
+    und = [(s, d, w * 0.01 + 0.003 * ((s + d) % 7)) for s, d, w in G.gnp(40, 0.12, seed=5)]
+    edges = edges_df(spark, und)
+    assign, q = engine.slm(edges, seed=3, mode="scale", exact_threshold=120, max_sweeps=3)
+    assert q == pytest.approx(engine.modularity(edges, assign), abs=1e-12)
+    assign.unpersist()
+
+
+def test_slm_scale_rejects_negative_ids(spark):
+    """A sweep labels an escaped singleton -(id+1), so scale mode
+    refuses a negative id up front — from the setup job's observed
+    minimum, leaving nothing persisted."""
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persistent()
+    edges = edges_df(spark, [(0, 1, 1.0), (1, 2, 1.0), (-5, 2, 1.0)])
+    with pytest.raises(ValueError, match="non-negative"):
+        engine.slm(edges, seed=0, mode="scale", exact_threshold=0)
+    assert persistent() - before == set()
