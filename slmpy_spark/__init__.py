@@ -14,9 +14,11 @@ Architecture is Spark-first (see SURVEY.md):
   Catalyst + AQE do pruning, broadcast selection, skew-join splitting.
 - iteration: Python *driver loops* with checkpoint-truncated lineage
   (Catalyst has no fixpoint operator).
-- hot kernels (local moving): per-partition CSR blocks inside
-  Arrow-vectorized ``applyInPandas`` kernels — numpy gather/scatter,
-  zero row-at-a-time Python.
+- hot kernels (local moving): the scale-mode sweep is JVM-side
+  aggregation; community splits and the exact finish run numpy CSR
+  kernels inside Arrow-vectorized ``applyInPandas`` / on the driver,
+  whose sequential visit loop is compiled C (``graph/_lm.c``, through
+  ctypes) with a bit-identical plain-Python fallback.
 
 Public API (SURVEY.md §3.5):
 

@@ -25,9 +25,25 @@ cache-friendly, built per Arrow batch with O(m) numpy sorts.  Graphs
 here are *symmetrized* and self-loop-free; self-loop weight created by
 aggregation shifts Q by a constant and never affects a move decision, so
 the kernels drop it.
+
+The one inherently sequential part — the visit loop of `local_moving` —
+is C (`_lm.c`, compiled on first use and called through ctypes); numpy
+does its setup (visit order, cluster weights, unused-id stack).
+`_local_moving_py` is the same loop in plain Python: the reference the
+compiled loop is held to bit for bit, and the fallback when no C
+compiler is available.
 """
 
 from __future__ import annotations
+
+import ctypes
+import functools
+import hashlib
+import os
+import subprocess
+import threading
+import warnings
+from pathlib import Path
 
 import numpy as np
 
@@ -79,6 +95,52 @@ def compactify(cluster: np.ndarray) -> int:
 # ------------------------------------------------------- local moving
 
 
+_LM_SRC = Path(__file__).with_name("_lm.c")
+_LM_DIR = _LM_SRC.parent / "__pycache__"
+# no -ffast-math / -march=native: both may reorder or fuse the gain
+# arithmetic and break bit-identical labels
+_LM_FLAGS = ("-O2", "-ffp-contract=off", "-fPIC", "-shared")
+
+
+@functools.cache
+def _lm_lib():
+    """The compiled visit loop, built on first use into
+    ``__pycache__/_lm-<sha256(source+flags)[:16]>.so`` (written to a
+    pid-unique temp file, then atomically renamed into place, so
+    concurrent worker processes can build at once) and loaded once per
+    process.  None, after one warning, when it cannot be built or
+    loaded: callers then run ``_local_moving_py``."""
+    try:
+        src = _LM_SRC.read_bytes()
+        tag = hashlib.sha256(src + " ".join(_LM_FLAGS).encode()).hexdigest()[:16]
+        so = _LM_DIR / f"_lm-{tag}.so"
+        if not so.exists():
+            _LM_DIR.mkdir(exist_ok=True)
+            tmp = _LM_DIR / f"_lm-{tag}.{os.getpid()}.{threading.get_ident()}.tmp"
+            try:
+                subprocess.run(
+                    ["cc", *_LM_FLAGS, "-o", str(tmp), str(_LM_SRC)],
+                    check=True, capture_output=True,
+                )
+                os.replace(tmp, so)
+            finally:
+                tmp.unlink(missing_ok=True)
+        loop = ctypes.CDLL(str(so)).lm_visit_loop
+    except Exception as e:  # no cc, read-only package dir, failed load
+        warnings.warn(
+            f"compiled local-moving loop unavailable ({e}); "
+            "running the Python visit loop",
+            RuntimeWarning,
+        )
+        return None
+    i64, f64, ptr = ctypes.c_int64, ctypes.c_double, ctypes.c_void_p
+    loop.restype = ctypes.c_int
+    # (n, indptr, nbr, wgt, node_w, order, resolution2, cl, cluster_w,
+    #  n_per, unused, n_unused, k_ids, acc, cand, seen) — see _lm.c
+    loop.argtypes = [i64, *[ptr] * 5, f64, *[ptr] * 4, i64, i64, *[ptr] * 3]
+    return loop
+
+
 def local_moving(
     indptr: np.ndarray,
     nbr: np.ndarray,
@@ -92,21 +154,79 @@ def local_moving(
 
     Mutates `cluster` in place; returns True iff any node moved.
     `resolution2` = γ/2m (standard) or γ (CPM); `node_w` = degree or 1s.
+    The visit loop runs compiled (_lm.c); labels, return value and RNG
+    stream are bit-identical to `_local_moving_py`, which runs instead
+    when the C loop cannot be built.
     """
     n = indptr.size - 1
     if n <= 1:
         return False
-    # r6: the visit loop runs on plain-Python lists/dicts.  The per-visit
-    # numpy path (fancy-index + unique + bincount + argmax on a ~degree-
-    # sized slice) costs ~1 ms/visit in array-op constant overhead — the
-    # measured 99%-serial straggler of the split stage.  Python scalar
-    # float arithmetic is the same IEEE double as numpy float64, the kic
-    # accumulation below adds weights in the identical (CSR-slice) order
-    # bincount does, candidates are scanned in the same ascending order
-    # np.unique yields, first-strict-max keeps the same lowest-id
-    # tie-break, and the RNG stream is untouched — so the labels are
-    # bit-identical to the r5 numpy loop at ~20× the visit rate
-    # (verified by the kernel/fixture parity tests).
+    loop = _lm_lib()
+    if loop is None:
+        return _local_moving_py(indptr, nbr, wgt, node_w, cluster, resolution2, rng)
+    indptr = np.ascontiguousarray(indptr, dtype=np.int64)
+    nbr = np.ascontiguousarray(nbr, dtype=np.int64)
+    wgt = np.ascontiguousarray(wgt, dtype=np.float64)
+    node_w = np.ascontiguousarray(node_w, dtype=np.float64)
+    m = int(indptr[-1])
+    if (
+        indptr[0] != 0 or (np.diff(indptr) < 0).any() or nbr.size < m
+        or wgt.size < m or node_w.size < n or cluster.size < n
+        or (m and not 0 <= nbr[:m].min() <= nbr[:m].max() < n)
+    ):
+        raise ValueError("local_moving: malformed CSR arrays")
+    # the same setup as _local_moving_py, as arrays C mutates in place;
+    # every cluster id stays below k_ids = len(cluster_w)
+    cluster_w = np.bincount(cluster, weights=node_w, minlength=n)
+    n_per = np.bincount(cluster, minlength=n).astype(np.int64, copy=False)
+    k_ids = cluster_w.size
+    unused = np.flatnonzero(n_per == 0)  # ascending; the stack's top = largest
+    stack = np.empty(k_ids, dtype=np.int64)
+    stack[: unused.size] = unused
+    cl = cluster.astype(np.int64)
+    state = rng.bit_generator.state
+    order = rng.permutation(n)
+    acc = np.empty(k_ids, dtype=np.float64)
+    cand = np.empty(k_ids, dtype=np.int64)
+    seen = np.zeros(k_ids, dtype=np.uint8)
+    rc = loop(
+        n, indptr.ctypes.data, nbr.ctypes.data, wgt.ctypes.data,
+        node_w.ctypes.data, order.ctypes.data, float(resolution2),
+        cl.ctypes.data, cluster_w.ctypes.data, n_per.ctypes.data,
+        stack.ctypes.data, unused.size, k_ids,
+        acc.ctypes.data, cand.ctypes.data, seen.ctypes.data,
+    )
+    if rc < 0:
+        # the unused stack outgrew k_ids (self-loops only): rerun the
+        # reference loop from the untouched inputs and RNG state
+        rng.bit_generator.state = state
+        return _local_moving_py(indptr, nbr, wgt, node_w, cluster, resolution2, rng)
+    cluster[:] = cl
+    compactify(cluster)
+    return bool(rc)
+
+
+def _local_moving_py(
+    indptr: np.ndarray,
+    nbr: np.ndarray,
+    wgt: np.ndarray,
+    node_w: np.ndarray,
+    cluster: np.ndarray,
+    resolution2: float,
+    rng: np.random.Generator,
+) -> bool:
+    """`local_moving` with the visit loop in plain Python: the reference
+    for the compiled loop and its fallback.  Same signature and result."""
+    n = indptr.size - 1
+    if n <= 1:
+        return False
+    # Python scalar float arithmetic is the same IEEE double as numpy
+    # float64 and C double: the kic accumulation below adds weights in
+    # CSR-slice order, the ascending scan with a strict > picks the
+    # lowest id among the largest positive gains, and the RNG draws one
+    # permutation — _lm.c makes the same sums and the same choice (with
+    # an explicit lower-id tie-break instead of a sort), so its labels
+    # are bit-identical (tests/test_lm_compiled.py).
     cluster_w = np.bincount(cluster, weights=node_w, minlength=n).tolist()
     n_per_np = np.bincount(cluster, minlength=n)
     unused = np.flatnonzero(n_per_np == 0).tolist()  # ascending; pop() = largest
@@ -336,10 +456,12 @@ def _reduced_network(indptr, nbr, wgt, node_w, cluster, n_clusters):
 
 def _lm_auto(indptr, nbr, wgt, node_w, cluster, resolution2, rng) -> bool:
     """Sequential LM for small graphs (reference-faithful), chunked
-    vectorized LM for big ones (the per-node Python visit loop is
-    ~10³ nodes/s — minutes at 10⁵ nodes; the vectorized kernel is the
-    same Q-class at ~10⁶ node-visits/s).  Used by scale-mode callers
-    (exact label parity keeps the sequential kernel via run_slm)."""
+    vectorized LM for big ones (same Q-class; the sequential loop's
+    visit count grows with sweeps to stability, the chunked kernel's
+    rounds are capped at 16).  The 4096-node switch stays where it is
+    even with the compiled visit loop: moving it changes labels.  Used
+    by scale-mode callers (exact label parity keeps the sequential
+    kernel via run_slm)."""
     if indptr.size - 1 <= 4096:
         return local_moving(indptr, nbr, wgt, node_w, cluster, resolution2, rng)
     return local_moving_chunked(indptr, nbr, wgt, node_w, cluster, resolution2, rng)

@@ -639,7 +639,9 @@ def _split_kernel_factory(resolution2: float, seed: int):
     globally unique with zero coordination (members are disjoint across
     communities), so the caller needs no relabel join afterwards."""
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # unannotated on purpose: partial hints make applyInPandas' eval-type
+    # inference raise and warn on every split; grouped-map is the default
+    def kernel(key, pdf):
         comm = int(key[0])
         ids, lsrc, ldst = kernels.dense_ids(
             pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
@@ -968,15 +970,16 @@ def _scale_pass(
             )
             # (_exact_finish records its own exact_* phases)
             _dbg(f"level {level}: exact finish done")
-            flat = (
-                assign_l
-                if flat is None
-                else frames.own(_merge_down(
+            if flat is None:
+                flat = assign_l
+            else:
+                tl = _time.time()
+                flat = frames.own(_merge_down(
                     flat,
                     assign_l,
                     bcast=(nv_known is not None and nv_known <= broadcast_threshold),
                 ))
-            )
+                _phase(level, "merge_down", tl)
             break
 
         nv = nv_known if nv_known is not None else node_w_l.count()
@@ -1158,9 +1161,9 @@ def _exact_finish(
 
     rng = np.random.Generator(np.random.PCG64(seed))
     # fast=True: the collected super-graph can hold up to
-    # exact_threshold edges (~10^5 nodes) — the sequential per-node
-    # visit loop would take minutes there; the chunked vectorized LM is
-    # the same Q-class at ~1000× the visit rate (exact label parity is
+    # exact_threshold edges (~10^5 nodes) — above 4096 nodes the chunked
+    # vectorized LM (same Q-class) runs instead of the sequential visit
+    # loop, which takes every smaller (sub)network (exact label parity is
     # slm_exact's job, not the scale-mode finisher's)
     step = kernels.level_step(variant, fast=True)
     for _ in range(32):

@@ -232,6 +232,12 @@ def test_slm_scale_pass_q_scored_at_exact_finish(
     phases = slm_mod.LAST_RUN_STATS["phases"]
     assert [lvl for lvl, name, _s in phases if name == "exact_collect"] == [finish_level]
     assert not [p for p in phases if p[1] == "pass_q"]
+    # a finish above level 0 merges its labels down onto the original
+    # vertices: that job is the run's last phase
+    tail = [[finish_level, "exact_emit"]] + (
+        [[finish_level, "merge_down"]] if finish_level else []
+    )
+    assert [p[:2] for p in phases[-len(tail):]] == tail
     assert q == engine.modularity(edges, assign, gamma=gamma, quality=quality)
     if quality == "cpm":
         labels = {r.id: r.community for r in assign.collect()}
@@ -279,3 +285,15 @@ def test_slm_scale_rejects_negative_ids(spark):
     with pytest.raises(ValueError, match="non-negative"):
         engine.slm(edges, seed=0, mode="scale", exact_threshold=0)
     assert persistent() - before == set()
+
+
+def test_split_kernel_leaves_eval_type_to_the_default():
+    """The split kernel carries no (partial) type hints, so PySpark's
+    eval-type inference returns None instead of raising — applyInPandas
+    then uses grouped-map without a UserWarning on every split."""
+    from pyspark.sql.pandas.typehints import infer_group_pandas_eval_type_from_func
+
+    from slmpy_spark.graph import slm as slm_mod
+
+    kernel = slm_mod._split_kernel_factory(0.01, seed=1)
+    assert infer_group_pandas_eval_type_from_func(kernel) is None
