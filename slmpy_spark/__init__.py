@@ -15,10 +15,12 @@ Architecture is Spark-first (see SURVEY.md):
 - iteration: Python *driver loops* with checkpoint-truncated lineage
   (Catalyst has no fixpoint operator).
 - hot kernels (local moving): the scale-mode sweep is JVM-side
-  aggregation; community splits and the exact finish run numpy CSR
-  kernels inside Arrow-vectorized ``applyInPandas`` / on the driver,
-  whose sequential visit loop is compiled C (``graph/_lm.c``, through
-  ctypes) with a bit-identical plain-Python fallback.
+  aggregation; community splits run numpy CSR kernels inside
+  Arrow-vectorized ``applyInPandas`` groups, while exact mode and
+  scale mode's exact finish collect the small graph and run them on
+  the driver.  Their sequential visit loop is compiled C
+  (``graph/_lm.c``, through ctypes) with a bit-identical plain-Python
+  fallback.
 
 Public API (SURVEY.md §3.5):
 

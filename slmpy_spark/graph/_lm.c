@@ -7,6 +7,8 @@
  * sized to K = len(cluster_w).  This file only runs the visits, and
  * keeps the Python loop's floating-point order exactly:
  *
+ *   - a CSR entry whose neighbour is the visited node (a self-loop) is
+ *     skipped: it weighs the same on every candidate;
  *   - neighbour weights accumulate per cluster as acc[c] = 0.0 on first
  *     touch, then acc[c] + w, in CSR-slice order;
  *   - gain = acc[c] - w_j * cluster_w[c] * resolution2 (left to right);
@@ -20,8 +22,10 @@
  * -ffp-contract=off: a fused multiply-add changes the gains' rounding.
  *
  * Returns 1 if any node moved, 0 if none did, -1 if the unused stack
- * would over- or underflow (only a graph with self-loops can get there;
- * the caller then reruns the Python loop from the same state).
+ * would over- or underflow.  With self-loops skipped the stack holds
+ * exactly the empty cluster ids, and with K >= n one is always free, so
+ * local_moving's setup never gets -1: the checks stay as bounds checks,
+ * and the caller raises RuntimeError on -1.
  */
 #include <stdint.h>
 
@@ -51,6 +55,8 @@ int lm_visit_loop(int64_t n, const int64_t *indptr, const int64_t *nbr,
         if (hi > lo) {
             int64_t n_cand = 0;
             for (int64_t t = lo; t < hi; t++) {
+                if (nbr[t] == j)
+                    continue;
                 int64_t c = cl[nbr[t]];
                 if (!seen[c]) {
                     seen[c] = 1;

@@ -21,10 +21,12 @@ family.  Pinned semantics (SURVEY.md §1.1–1.2; re-verify against
   first-use order.
 
 Everything operates on CSR arrays (indptr, nbr, wgt) — contiguous,
-cache-friendly, built per Arrow batch with O(m) numpy sorts.  Graphs
-here are *symmetrized* and self-loop-free; self-loop weight created by
-aggregation shifts Q by a constant and never affects a move decision, so
-the kernels drop it.
+cache-friendly, built with O(m) numpy sorts.  Graphs here are
+*symmetrized*.  A self-loop adds the same weight to every candidate of
+its node, so it never decides a move: both local-moving visit loops
+skip a CSR entry whose neighbour is the visited node, and the reduced
+networks drop the self-loop weight aggregation creates.  Node weights
+and Q still count self-loop weight.
 
 The one inherently sequential part — the visit loop of `local_moving` —
 is C (`_lm.c`, compiled on first use and called through ctypes); numpy
@@ -184,7 +186,6 @@ def local_moving(
     stack = np.empty(k_ids, dtype=np.int64)
     stack[: unused.size] = unused
     cl = cluster.astype(np.int64)
-    state = rng.bit_generator.state
     order = rng.permutation(n)
     acc = np.empty(k_ids, dtype=np.float64)
     cand = np.empty(k_ids, dtype=np.int64)
@@ -197,10 +198,7 @@ def local_moving(
         acc.ctypes.data, cand.ctypes.data, seen.ctypes.data,
     )
     if rc < 0:
-        # the unused stack outgrew k_ids (self-loops only): rerun the
-        # reference loop from the untouched inputs and RNG state
-        rng.bit_generator.state = state
-        return _local_moving_py(indptr, nbr, wgt, node_w, cluster, resolution2, rng)
+        raise RuntimeError("local_moving: the unused-id stack over- or underflowed")
     cluster[:] = cl
     compactify(cluster)
     return bool(rc)
@@ -255,7 +253,10 @@ def _local_moving_py(
         if hi > lo:
             acc: dict = {}
             for t in range(lo, hi):
-                c = cl[nbr_l[t]]
+                v = nbr_l[t]
+                if v == j:  # a self-loop weighs the same on every candidate
+                    continue
+                c = cl[v]
                 acc[c] = acc.get(c, 0.0) + wgt_l[t]
             best_gain = 0.0
             for c in sorted(acc):
@@ -564,6 +565,26 @@ def louvain_recursive(
 # ------------------------------------------------------------ quality
 
 
+def q_of(intra: float, s2: float, two_m: float, gamma: float, quality: str) -> float:
+    """Q from its three sums (§1.1): `intra` = Σin over all communities,
+    `s2` = Σ_c Σtot(c)² (Σ_c n_c² under CPM, where node weights are 1),
+    `two_m` = total weight of the symmetrized graph.  The one final
+    expression every Q in the engine goes through."""
+    if two_m == 0:
+        return 0.0
+    if quality == "cpm":
+        return (intra - gamma * s2) / two_m
+    return intra / two_m - gamma * s2 / (two_m * two_m)
+
+
+def resolution2_of(gamma: float, quality: str, two_m: float) -> float:
+    """The gain's resolution γ': γ under CPM, γ/2m otherwise (0 on an
+    empty graph)."""
+    if quality == "cpm":
+        return gamma
+    return gamma / two_m if two_m else 0.0
+
+
 def quality_numpy(
     indptr,
     nbr,
@@ -573,18 +594,13 @@ def quality_numpy(
     gamma: float = 1.0,
     quality: str = "modularity",
 ) -> float:
-    """Q of a clustering on a CSR graph (§1.1)."""
+    """Q of a clustering on a CSR graph; `node_w` = weighted degrees, or
+    1s under CPM."""
     n = indptr.size - 1
     e_src = np.repeat(np.arange(n, dtype=np.int64), np.diff(indptr))
     intra = float(wgt[cluster[e_src] == cluster[nbr]].sum())
-    two_m = float(wgt.sum())
-    if two_m == 0:
-        return 0.0
-    if quality == "cpm":
-        sizes = np.bincount(cluster)
-        return (intra - gamma * float((sizes.astype(np.float64) ** 2).sum())) / two_m
-    tot = np.bincount(cluster, weights=node_w)
-    return intra / two_m - gamma * float((tot / two_m) @ (tot / two_m))
+    s2 = float((np.bincount(cluster, weights=node_w) ** 2).sum())
+    return q_of(intra, s2, float(wgt.sum()), gamma, quality)
 
 
 # --------------------------------------------------- iterated wrappers
@@ -622,12 +638,10 @@ def run_slm(
     indptr, nbr, w = build_csr(n, src, dst, wgt)
     if quality == "cpm":
         node_w = np.ones(n, dtype=np.float64)
-        resolution2 = gamma
     else:
         node_w = np.zeros(n, dtype=np.float64)
         np.add.at(node_w, src, wgt)
-        two_m = float(w.sum())
-        resolution2 = gamma / two_m if two_m else 0.0
+    resolution2 = resolution2_of(gamma, quality, float(w.sum()))
 
     step = level_step(variant)
     best_cluster, best_q = None, -np.inf

@@ -17,7 +17,8 @@ Spark plan: two equi-joins of sym against the assignment (broadcast
 when the assignment is small — Catalyst picks it; at web scale assign
 is big, so it's a shuffled hash join on src/dst which reuses the edge
 table's hash partitioning), one groupBy(community), then a driver-side
-fold over one small per-community frame.
+fold over one small per-community frame into ``kernels.q_of``, the
+final expression every Q in the engine shares.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from slmpy_spark.graph.edges import degrees
+from slmpy_spark.graph.kernels import q_of
 
 
 def community_aggregates(sym: DataFrame, assign: DataFrame) -> DataFrame:
@@ -83,7 +85,5 @@ def modularity(
         F.sum(F.col("sigma_tot") * F.col("sigma_tot")).alias("s_tot2"),
         F.sum(F.col("n_nodes") * F.col("n_nodes")).alias("n2"),
     ).first()
-    s_in = float(comm["s_in"] or 0.0)
-    if quality == "cpm":
-        return (s_in - gamma * float(comm["n2"])) / two_m
-    return s_in / two_m - gamma * float(comm["s_tot2"]) / (two_m * two_m)
+    s2 = comm["n2"] if quality == "cpm" else comm["s_tot2"]
+    return q_of(float(comm["s_in"] or 0.0), float(s2), two_m, gamma, quality)

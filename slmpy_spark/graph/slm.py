@@ -2,9 +2,10 @@
 
 Two execution modes (SURVEY.md §5.3):
 
-- **exact**: the whole (small) graph flows into ONE ``applyInPandas``
-  kernel that runs the sequential reference algorithm
-  (kernels.run_slm) — bitwise-deterministic given a seed; used for the
+- **exact**: the whole (small) symmetrized graph is collected to the
+  driver, which runs the sequential reference algorithm
+  (kernels.run_slm) on it — the same hand-off as scale mode's exact
+  finish; bitwise-deterministic given a seed; used for the
   golden-fixture parity gate.
 
 - **scale**: the distributed path for web-scale graphs.
@@ -35,8 +36,9 @@ Two execution modes (SURVEY.md §5.3):
     3. *aggregation* (G7/G8): join+groupBy builds the super-graph;
        subcommunities start the next level grouped by their parent.
     4. recurse until the super-graph stops shrinking; once it fits
-       under ``exact_threshold`` edges the remaining levels run in the
-       exact kernel (the graph has shrunk 100–10000× by then).
+       under ``exact_threshold`` edges it is collected and the remaining
+       levels run on the driver (the exact finish; the graph has shrunk
+       100–10000× by then).
   Every outer level checkpoints assign + supergraph + metrics through
   the Checkpointer (resumable mid-convergence).
 
@@ -141,36 +143,27 @@ def slm_exact(
     seed: int = 0,
     variant: str = "slm",
 ):
-    """Sequential SLM/Louvain in one Arrow kernel. Returns (assign, q)."""
-    sym = symmetrize(edges)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids, lsrc, ldst = kernels.dense_ids(
-            pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
-        )
-        cluster, q = kernels.run_slm(
-            len(ids),
-            lsrc,
-            ldst,
-            pdf["weight"].to_numpy(np.float64),
-            gamma=gamma,
-            quality=quality,
-            n_random_starts=n_random_starts,
-            n_iterations=n_iterations,
-            seed=seed,
-            variant=variant,
-        )
-        return pd.DataFrame({"id": ids, "community": cluster, "q": q})
-
-    out = (
-        sym.withColumn("g", F.lit(0))
-        .groupBy("g")
-        .applyInPandas(kernel, "id long, community long, q double")
-        .persist()
+    """Sequential SLM/Louvain on the driver: collect the symmetrized
+    graph, run kernels.run_slm over it.  Returns (assign, q); `assign`
+    is a local relation that pins no storage."""
+    pdf = symmetrize(edges).toPandas()
+    ids, lsrc, ldst = kernels.dense_ids(
+        pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
     )
-    first = out.select("q").first()
-    q = float(first["q"]) if first else 0.0
-    return owned_view(out.select("id", "community"), out), q
+    cluster, q = kernels.run_slm(
+        len(ids),
+        lsrc,
+        ldst,
+        pdf["weight"].to_numpy(np.float64),
+        gamma=gamma,
+        quality=quality,
+        n_random_starts=n_random_starts,
+        n_iterations=n_iterations,
+        seed=seed,
+        variant=variant,
+    )
+    out = pd.DataFrame({"id": ids, "community": cluster})
+    return edges.sparkSession.createDataFrame(out, ASSIGN_SCHEMA), q
 
 
 # ------------------------------------------------- scale mode: LM sweep
@@ -398,14 +391,6 @@ def _propose_moves(
     return _attach_sigma(out, bcast)
 
 
-def _q_of(intra: float, s2: float, two_m: float, gamma: float, quality: str) -> float:
-    if two_m == 0:
-        return 0.0
-    if quality == "cpm":
-        return (intra - gamma * s2) / two_m
-    return intra / two_m - gamma * s2 / (two_m * two_m)
-
-
 def _assign_quality(
     sym: DataFrame,
     state: DataFrame,
@@ -438,7 +423,9 @@ def _assign_quality(
         .agg(F.sum(F.col("sigma") * F.col("sigma")).alias("s2"))
     )
     row = intra_df.crossJoin(s2_df).first()
-    return _q_of(float(row["intra"] or 0.0), float(row["s2"] or 0.0), two_m, gamma, quality)
+    return kernels.q_of(
+        float(row["intra"] or 0.0), float(row["s2"] or 0.0), two_m, gamma, quality
+    )
 
 
 #: the first sweep's mover fraction.  A full (1.0) synchronous sweep
@@ -557,7 +544,7 @@ def _distributed_local_moving(
         # pre-sweep state's Q + this sweep's move count, observed on the
         # materialize action itself — one Spark job per sweep, total
         vals = obs.get
-        q_prev = _q_of(
+        q_prev = kernels.q_of(
             float(vals["intra"] or 0.0), float(vals["s2"] or 0.0),
             two_m, gamma, quality,
         )
@@ -831,11 +818,10 @@ def slm_scale(
     m0 = int(v0["m"] or 0)
     two_m = float(v0["tw"] or 0.0)
     obs_n = Observation()
+    resolution2 = kernels.resolution2_of(gamma, quality, two_m)
     if quality == "cpm":
-        resolution2 = gamma
         nw0 = vertices(edges).select("id", F.lit(1.0).alias("node_w"))
     else:
-        resolution2 = gamma / two_m if two_m else 0.0
         nw0 = degrees(sym0).select("id", F.col("w_deg").alias("node_w"))
     nw0 = frames.own(materialize(nw0.observe(obs_n, F.count(F.lit(1)).alias("n"))))
     nv0 = int(obs_n.get["n"] or 0)
@@ -1171,7 +1157,7 @@ def _exact_finish(
             break
     s_in = two_m - w[cluster[lsrc] != cluster[ldst]].sum()
     s2 = (np.bincount(cluster, weights=node_w) ** 2).sum()
-    q = _q_of(float(s_in), float(s2), two_m, gamma, quality)
+    q = kernels.q_of(float(s_in), float(s2), two_m, gamma, quality)
     tp = _phase(level, "exact_kernel", tp)
     # canonical min-member-id labels to stay in the global convention
     out = pd.DataFrame({"id": ids, "community": kernels.min_member(ids, cluster)})

@@ -82,7 +82,7 @@ def triangle_count(edges: DataFrame):
     """
     frames = Frames()
     o = frames.own(_oriented(edges).persist())
-    tris = frames.own(_closed_wedges(o).persist())
+    tris = _closed_wedges(o)
     total = tris.count()
     frames.retain()
     corners = (

@@ -125,27 +125,73 @@ def test_equal_gains_go_to_the_lowest_cluster_id(c_loop, seed, quality):
     assert c_cl[0] == c_cl[1] != c_cl[4]
 
 
+def with_self_loops(indptr, nbr, wgt, seed):
+    """The CSR graph plus a self-loop entry (weight 1..5) on every vertex
+    of a seeded random half, placed first in its slice: the other
+    entries keep their order, so dropping the loops gives the input."""
+    n = indptr.size - 1
+    rng = np.random.default_rng(seed)
+    loops = np.flatnonzero(rng.random(n) < 0.5)
+    rows = np.repeat(np.arange(n), np.diff(indptr))
+    return kernels.build_csr(
+        n, np.concatenate([loops, rows]), np.concatenate([loops, nbr]),
+        np.concatenate([rng.integers(1, 6, loops.size).astype(np.float64), wgt]),
+    )
+
+
 @needs_cc
 @pytest.mark.parametrize("quality", ["modularity", "cpm"])
-def test_self_loops_hand_the_run_to_the_python_loop(c_loop, monkeypatch, quality):
-    """A singleton held by its own self-loop re-pushes its id on every
-    visit, so the unused stack can outgrow len(cluster_w): the C loop
-    stops and local_moving reruns the Python loop from the same inputs
-    and RNG state — same labels as the Python loop alone."""
+@pytest.mark.parametrize("integral", [True, False])
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_c_loop_matches_python_loop_with_self_loops(c_loop, seed, integral, quality):
+    indptr, nbr, wgt = with_self_loops(*rand_csr(seed, integral=integral), seed)
+    node_w, res2 = weights(indptr, wgt, quality)
+    (c_cl, c_flag, c_rng), (p_cl, p_flag, p_rng) = both_paths(
+        (indptr, nbr, wgt, node_w, res2), start("warm", indptr.size - 1, seed), seed
+    )
+    assert np.array_equal(c_cl, p_cl) and c_flag == p_flag and c_rng == p_rng
+
+
+@pytest.mark.parametrize("lm", ["local_moving", "_local_moving_py"])
+@pytest.mark.parametrize("quality", ["modularity", "cpm"])
+@pytest.mark.parametrize("seed", [1, 2, 3, 4])
+def test_self_loop_entries_never_decide_a_move(lm, seed, quality):
+    """Each loop on a self-loop graph runs exactly as on the same graph
+    without its self-loop entries, given the same node weights (which
+    count the loops): labels, flag and RNG state."""
+    plain = rand_csr(seed)
+    looped = with_self_loops(*plain, seed)
+    node_w, res2 = weights(looped[0], looped[2], quality)
+    runs = []
+    for indptr, nbr, wgt in (looped, plain):
+        cl = start("singletons", indptr.size - 1, seed)
+        rng = np.random.Generator(np.random.PCG64(seed))
+        flag = getattr(kernels, lm)(indptr, nbr, wgt, node_w, cl, res2, rng)
+        runs.append((cl, flag, rng.bit_generator.state))
+    (l_cl, l_flag, l_rng), (p_cl, p_flag, p_rng) = runs
+    assert np.array_equal(l_cl, p_cl) and l_flag == p_flag and l_rng == p_rng
+
+
+@needs_cc
+@pytest.mark.parametrize("quality", ["modularity", "cpm"])
+def test_self_loops_stay_in_the_c_loop(c_loop, monkeypatch, quality):
+    """Singletons held by their own self-loops once made the C loop hand
+    the run back to the Python loop; now the C loop finishes it, with
+    the Python loop's labels, flag and RNG state."""
     und = [(i, i, 5.0) for i in range(20)] + G.clique(range(20, 30))
     indptr, nbr, wgt = sym_csr(30, *zip(*und))
     node_w, res2 = weights(indptr, wgt, quality)
-    reference = kernels._local_moving_py
-    reruns = []
-    monkeypatch.setattr(
-        kernels, "_local_moving_py", lambda *a: reruns.append(1) or reference(*a)
-    )
-    cl, rng = np.arange(30), np.random.Generator(np.random.PCG64(0))
-    flag = kernels.local_moving(indptr, nbr, wgt, node_w, cl, res2, rng)
-    assert reruns == [1]
     p_cl, p_rng = np.arange(30), np.random.Generator(np.random.PCG64(0))
-    assert flag == reference(indptr, nbr, wgt, node_w, p_cl, res2, p_rng)
+    p_flag = kernels._local_moving_py(indptr, nbr, wgt, node_w, p_cl, res2, p_rng)
+
+    def no_rerun(*_a):
+        raise AssertionError("local_moving reran the Python loop")
+
+    monkeypatch.setattr(kernels, "_local_moving_py", no_rerun)
+    cl, rng = np.arange(30), np.random.Generator(np.random.PCG64(0))
+    assert kernels.local_moving(indptr, nbr, wgt, node_w, cl, res2, rng) == p_flag
     assert np.array_equal(cl, p_cl) and rng.bit_generator.state == p_rng.bit_generator.state
+    assert len(set(cl[:20].tolist())) == 20  # each held singleton stays alone
 
 
 @pytest.mark.parametrize("n", [0, 1])

@@ -1,6 +1,8 @@
 """Spark-level SLM tests: exact mode vs golden partitions & oracle,
 scale mode Q-parity class, Louvain variant (SURVEY.md §6.2-1/2)."""
 
+import threading
+
 import numpy as np
 import pytest
 
@@ -61,6 +63,100 @@ def test_louvain_exact(spark):
         edges_df(spark, G.g_two_cliques()), seed=42, mode="exact"
     )
     assert canon_df(assign) == [tuple(range(6)), tuple(range(6, 12))]
+
+
+def _non_integral(und):
+    return [(u, v, w * 0.37 + 0.013 * ((u + v) % 7)) for u, v, w in und]
+
+
+EXACT_SETTINGS = {
+    "modularity": dict(seed=42),
+    "cpm": dict(seed=7, quality="cpm", gamma=0.5),
+    "louvain_refine": dict(
+        seed=3, variant="louvain_refine", n_random_starts=2, n_iterations=3
+    ),
+}
+
+
+@pytest.mark.parametrize("setting", sorted(EXACT_SETTINGS))
+@pytest.mark.parametrize("graph", ["ring_cliques_4", "gnp_non_integral"])
+def test_slm_exact_is_run_slm_on_the_collected_graph(spark, graph, setting):
+    """Exact mode is kernels.run_slm over the collected symmetrized graph
+    with dense ids: the same labels (as dense cluster indices) and the
+    same q, bit for bit."""
+    from slmpy_spark.graph import kernels
+
+    und = {
+        "ring_cliques_4": G.g_ring_cliques_4(),
+        "gnp_non_integral": _non_integral(G.gnp(80, 0.08, seed=3)),
+    }[graph]
+    edges = edges_df(spark, und)
+    kw = EXACT_SETTINGS[setting]
+    assign, q = engine.slm(edges, mode="exact", **kw)
+    pdf = engine.symmetrize(edges).toPandas()
+    ids, lsrc, ldst = kernels.dense_ids(
+        pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
+    )
+    cluster, rq = kernels.run_slm(
+        len(ids), lsrc, ldst, pdf["weight"].to_numpy(np.float64), **kw
+    )
+    assert sorted((r.id, r.community) for r in assign.collect()) == list(
+        zip(ids.tolist(), cluster.tolist())
+    )
+    assert q == rq
+
+
+@pytest.mark.parametrize(
+    "name,quality,gamma",
+    [
+        ("disjoint", "modularity", 1.0),
+        ("ring_cliques_4", "modularity", 1.0),
+        ("barbell", "modularity", 1.0),
+        ("powerlaw", "modularity", 1.0),
+        ("gnp", "modularity", 1.0),
+        ("disjoint", "cpm", 0.5),
+        ("gnp", "cpm", 0.5),
+    ],
+)
+def test_slm_exact_q_is_modularity_of_its_labels(spark, name, quality, gamma):
+    """Exact mode's q and engine.modularity go through the same final
+    expression (kernels.q_of); on integral weights every sum is exact,
+    so the two agree bit for bit."""
+    und = {
+        "disjoint": G.g_disjoint,
+        "ring_cliques_4": G.g_ring_cliques_4,
+        "barbell": G.g_barbell,
+        "powerlaw": G.g_powerlaw,
+        "gnp": lambda: G.gnp(40, 0.12, seed=8),
+    }[name]()
+    edges = edges_df(spark, und)
+    assign, q = engine.slm(edges, mode="exact", seed=42, quality=quality, gamma=gamma)
+    assert q == engine.modularity(edges, assign, gamma=gamma, quality=quality)
+
+
+def test_slm_exact_with_self_loops_returns(spark):
+    """Self-loops once let a singleton take back its own just-emptied id
+    while the id stayed on the unused stack; this call then never
+    returned.  Now it does, and its q counts the self-loop weight as
+    engine.modularity does."""
+    triples = [
+        (0, 3, 3.0), (0, 4, 1.0), (1, 2, 2.0), (1, 6, 1.0), (2, 6, 1.0),
+        (4, 6, 1.0), (1, 1, 3.0), (2, 2, 3.0), (5, 5, 3.0),
+    ]
+    edges = edges_df(spark, triples)
+    out = []
+    call = threading.Thread(
+        target=lambda: out.append(
+            engine.slm(edges, mode="exact", quality="cpm", gamma=0.5, seed=0)
+        ),
+        daemon=True,
+    )
+    call.start()
+    call.join(timeout=120)
+    assert not call.is_alive(), "exact-mode SLM did not return within 120 s"
+    assign, q = out[0]
+    assert assign.count() == 7
+    assert q == engine.modularity(edges, assign, gamma=0.5, quality="cpm")
 
 
 def test_slm_scale_two_cliques_q_class(spark):
