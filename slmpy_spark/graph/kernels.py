@@ -79,7 +79,7 @@ def min_member(ids: np.ndarray, cluster: np.ndarray) -> np.ndarray:
     """Per node, the smallest id in its cluster (cluster labels are
     dense indices ≥ 0) — the canonical, globally unique community label
     of the scale mode."""
-    min_id = np.full(int(cluster.max()) + 1, np.iinfo(np.int64).max)
+    min_id = np.full(int(cluster.max(initial=-1)) + 1, np.iinfo(np.int64).max)
     np.minimum.at(min_id, cluster, ids)
     return min_id[cluster]
 
@@ -308,6 +308,10 @@ def local_moving_chunked(
     if n <= 1:
         return False
     row_src = np.repeat(np.arange(n, dtype=np.int64), np.diff(indptr))
+    # the move decision reads no self-loop entry (it weighs the same on
+    # every candidate, as in the sequential loops); q_of counts them
+    keep = nbr != row_src
+    e_src, e_nbr, e_w = row_src[keep], nbr[keep], wgt[keep]
     sigma = np.bincount(cluster, weights=node_w, minlength=2 * n).astype(np.float64)
     update = False
 
@@ -328,7 +332,7 @@ def local_moving_chunked(
         k_chunks = int(min(n, max(16, min(64, n // 64 + 1))))
         chunk_of = np.empty(n, dtype=np.int64)
         chunk_of[order] = np.arange(n, dtype=np.int64) * k_chunks // n
-        row_chunk = chunk_of[row_src]
+        row_chunk = chunk_of[e_src]
         row_order = np.argsort(row_chunk, kind="stable")
         counts = np.bincount(row_chunk, minlength=k_chunks)
         cstarts = np.concatenate([[0], np.cumsum(counts)])
@@ -351,10 +355,10 @@ def local_moving_chunked(
             if nodes_k.size == 0:
                 continue
             if rows.size:
-                cand = cluster[nbr[rows]]
-                s_loc = row_src[rows]
+                cand = cluster[e_nbr[rows]]
+                s_loc = e_src[rows]
                 o2 = np.lexsort((cand, s_loc))
-                s2, c2, w2 = s_loc[o2], cand[o2], wgt[rows][o2]
+                s2, c2, w2 = s_loc[o2], cand[o2], e_w[rows][o2]
                 newseg = np.empty(s2.size, dtype=bool)
                 newseg[0] = True
                 newseg[1:] = (s2[1:] != s2[:-1]) | (c2[1:] != c2[:-1])

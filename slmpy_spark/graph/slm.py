@@ -8,8 +8,13 @@ Two execution modes (SURVEY.md §5.3):
   finish; bitwise-deterministic given a seed; used for the
   golden-fixture parity gate.
 
-- **scale**: the distributed path for web-scale graphs.
-  Per outer level:
+- **scale**: the distributed path for web-scale graphs.  A graph
+  whose symmetrized edge table fits under ``exact_threshold`` entries
+  never enters the level loop: ONE bounded collect (one Spark job, one
+  task, at most ``exact_threshold + 1`` rows) brings it to the driver,
+  and every pass runs the exact finish's numpy core on it
+  (``_driver_graph`` → ``_finish_core`` → one ``createDataFrame``).
+  Otherwise, per outer level:
     1. *distributed local moving*: a fully JVM-side synchronous sweep.
        Each sweep computes k_{i,c} (weight from every vertex i to every
        neighboring community c) as ``groupBy(src, cand).sum(weight)`` —
@@ -49,9 +54,10 @@ exact mode is the label-parity path.
 
 Scale mode labels an escaped singleton ``-(id+1)`` during sweeps, which
 must not collide with any real vertex id, so ``slm_scale`` requires
-every vertex id to be non-negative: the minimum id rides its setup
-checkpoint job as an observe metric, and a negative one raises
-``ValueError`` before any sweep.  (An id of 2^63-1 would overflow
+every vertex id to be non-negative: the minimum id is read from the
+driver-sized collect, or rides the Spark setup's checkpoint job as an
+observe metric, and a negative one raises ``ValueError`` before any
+sweep.  (An id of 2^63-1 would overflow
 ``id+1``; Spark's ANSI mode raises on that.)  The ingest layer's hashed
 ids satisfy the condition: ``pages_to_edges`` and ``url_ids`` mask
 ``xxhash64`` to its low 62 bits.
@@ -761,6 +767,12 @@ def slm_scale(
     """Distributed SLM (variant="slm") / Louvain (variant="louvain").
     Returns (assign, q) — q computed on the original graph.
 
+    A graph whose symmetrized edge table fits under `exact_threshold`
+    entries runs on the driver (see _driver_graph): every pass is the
+    exact finish on the collected arrays, and `assign` is one local
+    relation that pins no storage.  Otherwise the level loop runs in
+    Spark (`_scale_pass`).
+
     `n_iterations`: iterated SLM (G14) — each pass restarts the level
     hierarchy from the previous pass's flat assignment (never from
     singletons), monotonically refining Q; stops early when a pass
@@ -785,23 +797,154 @@ def slm_scale(
     levels replay as the uninterrupted run would (modulo sweeps'
     snapshot timing)."""
     LAST_RUN_STATS.update(_new_run_stats())
-
-    # materialize (checkpoint leaf), NOT persist: every level-0 sweep's
-    # plan embeds the edge cache's lineage at each reference, and
-    # CacheManager.useCachedData + AQE replanning canonicalize those
-    # embedded trees per sweep — measured ~1.0s/sweep of driver-side
-    # 'optimization' phase against ~26ms of actual rule execution when
-    # sym0 carries the caller's full lineage (BENCH/NOTES.md, "The
-    # planning floor localized": 1.06s → 0.085s with a leaf).  A leaf
-    # costs one checkpoint job up front (same price as persist+count)
-    # and collapses every downstream cache's embedded plan to
-    # scan-over-LogicalRDD.
-    # The edge-entry count and 2m ride the checkpoint action as observe
-    # metrics (weights are integral on web link graphs, so the sum is
-    # exact regardless of accumulation order) — no separate count /
-    # total_weight jobs.
     tp = _time.time()
     frames = Frames()
+    g = None
+    # louvain_refine sweeps the original graph in Spark after every
+    # pass; a resume restarts from its snapshots
+    if variant != "louvain_refine" and not (
+        resume and checkpointer is not None
+        and checkpointer.latest_step("slm_supergraph") is not None
+    ):
+        g = _driver_graph(edges, exact_threshold)
+    if g is not None:
+        ids, lsrc, ldst, w = g
+        two_m = float(w.sum())
+        if quality == "cpm":
+            node_w = np.ones(ids.size)
+        else:
+            node_w = np.bincount(lsrc, weights=w, minlength=ids.size)
+        sym0 = nw0 = None
+        _dbg(f"driver-sized: m={lsrc.size}")
+        _phase(0, "exact_collect", tp)
+    else:
+        sym0, nw0, two_m, m0, nv0 = _spark_setup(frames, edges, quality)
+        _phase(-1, "setup", tp)
+    resolution2 = kernels.resolution2_of(gamma, quality, two_m)
+
+    best_q = None
+    best_flat = None
+    n_starts = max(1, n_random_starts)
+    n_iters = max(1, n_iterations)
+    for start in range(n_starts):
+        flat = None  # each start rebuilds the hierarchy from singletons
+        for it in range(n_iters):
+            LAST_RUN_STATS["passes"] += 1
+            pass_seed = seed + 7919 * it + 104_729 * start
+            prev = flat
+            if g is not None:
+                # the level loop's exact finish at level 0, on the driver
+                flat, q = _finish_core(
+                    ids, lsrc, ldst, w, node_w, ids if prev is None else prev,
+                    resolution2, pass_seed, variant, two_m, gamma, quality, 0,
+                )
+            else:
+                flat, q = _scale_pass(
+                    sym0, nw0, two_m, resolution2, gamma, quality,
+                    pass_seed, max_levels, max_sweeps,
+                    exact_threshold, variant, checkpointer,
+                    step_offset=(start * n_iters + it) * max_levels,
+                    init_flat=prev,
+                    resume=(resume and it == 0 and start == 0),
+                    broadcast_threshold=broadcast_threshold,
+                    m0=m0, nv0=nv0,
+                )
+                frames.own(flat)
+                if variant == "louvain_refine":
+                    # multilevel refinement (§1.2(3)): one more LM pass on
+                    # the ORIGINAL graph from the merged-down labels; the
+                    # guard keeps it monotone, so it can only improve Q
+                    bcast0 = nv0 <= broadcast_threshold
+                    flat = frames.own(_distributed_local_moving(
+                        _sweep_edges(frames, sym0, bcast0), nw0, flat, resolution2,
+                        pass_seed + max_levels, max_sweeps, gamma, quality,
+                        two_m, checkpointer=checkpointer,
+                        level=max_levels, bcast=bcast0,
+                    ))
+                    # frees the refine cache and the merged-down labels —
+                    # unless an empty-graph pass returned `prev` unchanged
+                    frames.retain(sym0, nw0, prev, best_flat, flat)
+                    q = None  # the refinement moved labels after the finish
+                if q is None:
+                    # the pass ended where the driver holds no final
+                    # partition: one recompute over the original graph
+                    tq = _time.time()
+                    q = modularity(sym0, flat, gamma=gamma, quality=quality, two_m=two_m)
+                    _phase(-1, "pass_q", tq)
+            _dbg(f"start {start} pass {it}: q={q:.6f} (best {best_q})")
+            improved = best_q is None or q > best_q + 1e-9
+            if improved:
+                best_q, best_flat = q, flat
+            # only the best pass's labels outlive the pass; one that did
+            # not improve the global best also stops this start (further
+            # passes chase a local optimum the best already beat).  The
+            # driver-sized path owns no frames.
+            frames.retain(sym0, nw0, best_flat)
+            if not improved:
+                break
+
+    if g is not None:
+        tp = _time.time()
+        out = edges.sparkSession.createDataFrame(
+            pd.DataFrame({"id": ids, "community": best_flat}), ASSIGN_SCHEMA
+        )
+        _phase(0, "exact_emit", tp)
+        return out, best_q
+    frames.retain(best_flat)
+    return owned_view(best_flat.select("id", "community"), best_flat), best_q
+
+
+def _driver_graph(edges: DataFrame, exact_threshold: int):
+    """The symmetrized edge table as driver arrays (ids, lsrc, ldst, w)
+    — sorted distinct vertex ids, then each entry's endpoints as indices
+    into them and its weight — when it has at most `exact_threshold`
+    entries, the level loop's own exact-finish rule; else None.
+
+    ONE Spark job with ONE task: ``coalesce(1).limit(k)`` stops reading
+    after k = exact_threshold + 1 rows, so at most k rows reach the
+    driver (``limit(k)`` alone runs a task per input partition, and
+    ``head(k)`` converts every row to a Python Row).  Fewer than k rows
+    is the whole table; it is symmetrized here as ``symmetrize`` does
+    (reciprocal weights summed, a self-loop entry doubled).  A negative
+    vertex id raises ``ValueError``, as the Spark setup does."""
+    if not 0 <= exact_threshold < 2**31 - 1:  # Dataset.limit takes an int32
+        return None
+    pdf = (
+        edges.select("src", "dst", "weight")
+        .coalesce(1).limit(exact_threshold + 1).toPandas()
+    )
+    if len(pdf) > exact_threshold:
+        return None
+    src, dst = pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
+    ids, s, d = kernels.dense_ids(np.concatenate([src, dst]), np.concatenate([dst, src]))
+    if ids.size and ids[0] < 0:
+        raise ValueError(f"slm_scale needs non-negative vertex ids, got {ids[0]}")
+    key, inv = np.unique(s * ids.size + d, return_inverse=True)
+    if key.size > exact_threshold:
+        return None
+    w = pdf["weight"].to_numpy(np.float64)
+    return ids, key // ids.size, key % ids.size, np.bincount(inv, weights=np.concatenate([w, w]))
+
+
+def _spark_setup(frames: Frames, edges: DataFrame, quality: str):
+    """Level 0 of the Spark path: (sym0, nw0, two_m, m0, nv0) — the
+    symmetrized edge table and the node weights as checkpoint leaves
+    owned by `frames`, the total weight and both row counts.
+
+    materialize (checkpoint leaf), NOT persist: every level-0 sweep's
+    plan embeds the edge cache's lineage at each reference, and
+    CacheManager.useCachedData + AQE replanning canonicalize those
+    embedded trees per sweep — measured ~1.0s/sweep of driver-side
+    'optimization' phase against ~26ms of actual rule execution when
+    sym0 carries the caller's full lineage (BENCH/NOTES.md, "The
+    planning floor localized": 1.06s → 0.085s with a leaf).  A leaf
+    costs one checkpoint job up front (same price as persist+count)
+    and collapses every downstream cache's embedded plan to
+    scan-over-LogicalRDD.
+    The edge-entry count and 2m ride the checkpoint action as observe
+    metrics (weights are integral on web link graphs, so the sum is
+    exact regardless of accumulation order) — no separate count /
+    total_weight jobs."""
     obs0 = Observation()
     sym0 = frames.own(materialize(
         symmetrize(edges).observe(
@@ -815,73 +958,13 @@ def slm_scale(
     if (v0["min_id"] or 0) < 0:
         frames.retain()
         raise ValueError(f"slm_scale needs non-negative vertex ids, got {v0['min_id']}")
-    m0 = int(v0["m"] or 0)
-    two_m = float(v0["tw"] or 0.0)
     obs_n = Observation()
-    resolution2 = kernels.resolution2_of(gamma, quality, two_m)
     if quality == "cpm":
         nw0 = vertices(edges).select("id", F.lit(1.0).alias("node_w"))
     else:
         nw0 = degrees(sym0).select("id", F.col("w_deg").alias("node_w"))
     nw0 = frames.own(materialize(nw0.observe(obs_n, F.count(F.lit(1)).alias("n"))))
-    nv0 = int(obs_n.get["n"] or 0)
-    tp = _phase(-1, "setup", tp)
-
-    best_q = None
-    best_flat = None
-    n_starts = max(1, n_random_starts)
-    n_iters = max(1, n_iterations)
-    for start in range(n_starts):
-        flat = None  # each start rebuilds the hierarchy from singletons
-        for it in range(n_iters):
-            LAST_RUN_STATS["passes"] += 1
-            pass_seed = seed + 7919 * it + 104_729 * start
-            prev = flat
-            flat, q = _scale_pass(
-                sym0, nw0, two_m, resolution2, gamma, quality,
-                pass_seed, max_levels, max_sweeps,
-                exact_threshold, variant, checkpointer,
-                step_offset=(start * n_iters + it) * max_levels,
-                init_flat=prev,
-                resume=(resume and it == 0 and start == 0),
-                broadcast_threshold=broadcast_threshold,
-                m0=m0, nv0=nv0,
-            )
-            frames.own(flat)
-            if variant == "louvain_refine":
-                # multilevel refinement (§1.2(3)): one more LM pass on
-                # the ORIGINAL graph from the merged-down labels; the
-                # guard keeps it monotone, so the pass can only improve Q
-                bcast0 = nv0 <= broadcast_threshold
-                flat = frames.own(_distributed_local_moving(
-                    _sweep_edges(frames, sym0, bcast0), nw0, flat, resolution2,
-                    pass_seed + max_levels, max_sweeps, gamma, quality,
-                    two_m, checkpointer=checkpointer,
-                    level=max_levels, bcast=bcast0,
-                ))
-                # frees the refine cache and the merged-down labels —
-                # unless an empty-graph pass returned `prev` unchanged
-                frames.retain(sym0, nw0, prev, best_flat, flat)
-                q = None  # the refinement moved labels after the finish
-            if q is None:
-                # the pass ended where the driver holds no final
-                # partition: one recompute over the original graph
-                tq = _time.time()
-                q = modularity(sym0, flat, gamma=gamma, quality=quality, two_m=two_m)
-                tq = _phase(-1, "pass_q", tq)
-            _dbg(f"start {start} pass {it}: q={q:.6f} (best {best_q})")
-            improved = best_q is None or q > best_q + 1e-9
-            if improved:
-                best_q, best_flat = q, flat
-            # only the best pass's labels outlive the pass; one that did
-            # not improve the global best also stops this start (further
-            # passes chase a local optimum the best already beat)
-            frames.retain(sym0, nw0, best_flat)
-            if not improved:
-                break
-
-    frames.retain(best_flat)
-    return owned_view(best_flat.select("id", "community"), best_flat), best_q
+    return sym0, nw0, float(v0["tw"] or 0.0), int(v0["m"] or 0), int(obs_n.get["n"] or 0)
 
 
 def _scale_pass(
@@ -1083,20 +1166,11 @@ def _exact_finish(
     sym_l, node_w_l, assign_l, resolution2, seed, variant, two_m, gamma, quality, level=-1
 ):
     """Collect the (now small) super-graph and run the sequential kernel
-    to convergence, starting from the current assignment.  Returns
-    (assign, q): q is the pass's Q on the ORIGINAL graph, scored from the
-    collected arrays with no Spark job — or None when the supergraph is
-    empty and `assign_l` comes back unchanged (the caller recomputes).
-
-    ``s_in = two_m − w_cross`` holds at any level, with w_cross the
-    weight of collected entries whose endpoints end in different final
-    communities: an original entry that crosses final communities
-    survives every aggregation inside such a crossing supergraph entry,
-    and every other original entry's weight was either dropped as a
-    supernode self-loop or sits in an intra supergraph entry.  Σtot² is
-    Σ_c (Σ node_w)² over the level's node weights (aggregated vertex
-    counts for CPM, so Σ n_c²).  On integral weights every sum is exact,
-    so q equals ``modularity()`` bit for bit."""
+    to convergence, starting from the current assignment (the numpy part
+    is `_finish_core`).  Returns (assign, q): q is the pass's Q on the
+    ORIGINAL graph, scored from the collected arrays with no Spark job —
+    or None when the supergraph is empty and `assign_l` comes back
+    unchanged (the caller recomputes)."""
     tp = _time.time()
     # ONE tagged-union collect instead of three separate toPandas
     # actions (r6) — the exact finish runs once per pass and each
@@ -1125,8 +1199,7 @@ def _exact_finish(
     )
     nw = all_pdf[all_pdf["t"] == 1].rename(columns={"a": "id", "w": "node_w"})
     a = all_pdf[all_pdf["t"] == 2].rename(columns={"a": "id", "b": "community"})
-    spark = sym_l.sparkSession
-    tp = _phase(level, "exact_collect", tp)
+    _phase(level, "exact_collect", tp)
     if pdf.empty:
         return assign_l, None
 
@@ -1134,23 +1207,54 @@ def _exact_finish(
         pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64),
         a["id"].to_numpy(np.int64),
     )
-    w = pdf["weight"].to_numpy(np.float64)
-    indptr, nbr, wgt = kernels.build_csr(len(ids), lsrc, ldst, w)
-
     node_w = np.zeros(len(ids))
     node_w[np.searchsorted(ids, nw["id"].to_numpy(np.int64))] = nw["node_w"].to_numpy(np.float64)
+    labels = np.empty(len(ids), dtype=np.int64)
+    labels[la] = a["community"].to_numpy(np.int64)
+    labels, q = _finish_core(
+        ids, lsrc, ldst, pdf["weight"].to_numpy(np.float64), node_w, labels,
+        resolution2, seed, variant, two_m, gamma, quality, level,
+    )
+    tp = _time.time()
+    res = sym_l.sparkSession.createDataFrame(
+        pd.DataFrame({"id": ids, "community": labels}), ASSIGN_SCHEMA
+    )
+    _phase(level, "exact_emit", tp)
+    return res, q
 
-    cluster = np.empty(len(ids), dtype=np.int64)
-    cluster[la] = a["community"].to_numpy(np.int64)
-    # densify community labels
-    kernels.compactify(cluster)
 
+def _finish_core(
+    ids, lsrc, ldst, w, node_w, labels, resolution2, seed, variant, two_m, gamma,
+    quality, level,
+):
+    """The exact finish's numpy part, shared by `_exact_finish` and the
+    driver-sized path of `slm_scale`: the level's graph as sorted vertex
+    `ids` and symmetrized entries (`lsrc`, `ldst` index into `ids`; `w`
+    their weights), with `node_w` per vertex and `labels` (any int64
+    community labels, one per vertex) as the start.  Runs the level step
+    to convergence (at most 32 passes) and returns (min-member labels,
+    q), q the Q on the ORIGINAL graph.
+
+    ``s_in = two_m − w_cross`` holds at any level, with w_cross the
+    weight of entries whose endpoints end in different final
+    communities: an original entry that crosses final communities
+    survives every aggregation inside such a crossing supergraph entry,
+    and every other original entry's weight was either dropped as a
+    supernode self-loop or sits in an intra supergraph entry.  Σtot² is
+    Σ_c (Σ node_w)² over the level's node weights (aggregated vertex
+    counts for CPM, so Σ n_c²).  On integral weights every sum is exact,
+    so q equals ``modularity()`` bit for bit."""
+    tp = _time.time()
+    indptr, nbr, wgt = kernels.build_csr(len(ids), lsrc, ldst, w)
+    # dense community labels in ascending label order; np.unique, not an
+    # array indexed by label: labels are vertex ids, up to 2^62
+    cluster = np.unique(labels, return_inverse=True)[1]
     rng = np.random.Generator(np.random.PCG64(seed))
-    # fast=True: the collected super-graph can hold up to
-    # exact_threshold edges (~10^5 nodes) — above 4096 nodes the chunked
-    # vectorized LM (same Q-class) runs instead of the sequential visit
-    # loop, which takes every smaller (sub)network (exact label parity is
-    # slm_exact's job, not the scale-mode finisher's)
+    # fast=True: the graph can hold up to exact_threshold edges (~10^5
+    # nodes) — above 4096 nodes the chunked vectorized LM (same Q-class)
+    # runs instead of the sequential visit loop, which takes every
+    # smaller (sub)network (exact label parity is slm_exact's job, not
+    # the scale-mode finisher's)
     step = kernels.level_step(variant, fast=True)
     for _ in range(32):
         if not step(indptr, nbr, wgt, node_w, cluster, resolution2, rng):
@@ -1158,12 +1262,10 @@ def _exact_finish(
     s_in = two_m - w[cluster[lsrc] != cluster[ldst]].sum()
     s2 = (np.bincount(cluster, weights=node_w) ** 2).sum()
     q = kernels.q_of(float(s_in), float(s2), two_m, gamma, quality)
-    tp = _phase(level, "exact_kernel", tp)
     # canonical min-member-id labels to stay in the global convention
-    out = pd.DataFrame({"id": ids, "community": kernels.min_member(ids, cluster)})
-    res = spark.createDataFrame(out, ASSIGN_SCHEMA)
-    tp = _phase(level, "exact_emit", tp)
-    return res, q
+    labels = kernels.min_member(ids, cluster)
+    _phase(level, "exact_kernel", tp)
+    return labels, q
 
 
 # -------------------------------------------------------------- facade

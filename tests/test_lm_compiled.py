@@ -152,13 +152,14 @@ def test_c_loop_matches_python_loop_with_self_loops(c_loop, seed, integral, qual
     assert np.array_equal(c_cl, p_cl) and c_flag == p_flag and c_rng == p_rng
 
 
-@pytest.mark.parametrize("lm", ["local_moving", "_local_moving_py"])
+@pytest.mark.parametrize("lm", ["local_moving", "_local_moving_py", "local_moving_chunked"])
 @pytest.mark.parametrize("quality", ["modularity", "cpm"])
 @pytest.mark.parametrize("seed", [1, 2, 3, 4])
 def test_self_loop_entries_never_decide_a_move(lm, seed, quality):
-    """Each loop on a self-loop graph runs exactly as on the same graph
-    without its self-loop entries, given the same node weights (which
-    count the loops): labels, flag and RNG state."""
+    """Each loop, and the chunked kernel, on a self-loop graph runs
+    exactly as on the same graph without its self-loop entries, given
+    the same node weights (which count the loops): labels, flag and RNG
+    state."""
     plain = rand_csr(seed)
     looped = with_self_loops(*plain, seed)
     node_w, res2 = weights(looped[0], looped[2], quality)

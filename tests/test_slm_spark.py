@@ -393,3 +393,153 @@ def test_split_kernel_leaves_eval_type_to_the_default():
 
     kernel = slm_mod._split_kernel_factory(0.01, seed=1)
     assert infer_group_pandas_eval_type_from_func(kernel) is None
+
+
+# ------------------------------------------- driver-sized scale mode
+
+
+def _persistent(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def _scale_run(edges, spark_level0=False, **kw):
+    """engine.slm in scale mode → (sorted (id, community) rows, q, the
+    run's phase names).  `spark_level0` switches the driver-sized path
+    off, so level 0 runs in Spark and ends in the exact finish (the path
+    every driver-sized graph took before)."""
+    from slmpy_spark.graph import slm as slm_mod
+
+    with pytest.MonkeyPatch.context() as mp:
+        if spark_level0:
+            mp.setattr(slm_mod, "_driver_graph", lambda *_a: None)
+        assign, q = engine.slm(edges, mode="scale", **kw)
+        rows = sorted((r.id, r.community) for r in assign.collect())
+        assign.unpersist()
+    return rows, q, [p[1] for p in slm_mod.LAST_RUN_STATS["phases"]]
+
+
+def _big_sparse():
+    src, dst, w = G.g_powerlaw_arrays(6000, 12_000, seed=11)
+    assert np.unique(np.concatenate([src, dst])).size > 4096  # the chunked kernel runs
+    return list(zip(src.tolist(), dst.tolist(), w.tolist()))
+
+
+@pytest.mark.parametrize(
+    "graph,kw",
+    [
+        ("gnp", {}),
+        ("gnp", dict(quality="cpm", gamma=0.5)),
+        ("gnp", dict(n_iterations=2)),
+        ("gnp", dict(n_random_starts=2)),
+        ("powerlaw", dict(n_iterations=3)),
+        ("powerlaw", dict(variant="louvain")),
+        ("big", {}),
+    ],
+)
+def test_driver_sized_scale_equals_level0_exact_finish(spark, graph, kw):
+    """A graph under exact_threshold runs every pass on the driver with
+    the exact finish's numpy core: on integral weights its labels and Q
+    equal the Spark path's level-0 exact finish bit for bit (over >4096
+    nodes, the chunked kernel's)."""
+    und = {
+        "gnp": lambda: G.gnp(60, 0.1, seed=7),
+        "powerlaw": lambda: G.g_powerlaw(1000, 5000),
+        "big": _big_sparse,
+    }[graph]()
+    edges = edges_df(spark, und)
+    rows, q, phases = _scale_run(edges, seed=3, **kw)
+    ref_rows, ref_q, ref_phases = _scale_run(edges, spark_level0=True, seed=3, **kw)
+    assert "setup" in ref_phases and "setup" not in phases
+    assert phases.count("exact_collect") == 1  # one collect for every pass
+    assert rows == ref_rows
+    assert q == ref_q
+
+
+def test_driver_sized_scale_runs_one_job_and_pins_nothing(spark, monkeypatch):
+    """A driver-sized call makes one bounded collect: one Spark job, no
+    localCheckpoint, and a local result relation that pins no storage."""
+    import pyspark.sql
+
+    def no_checkpoint(*_a, **_k):
+        raise AssertionError("driver-sized slm_scale ran a localCheckpoint")
+
+    monkeypatch.setattr(pyspark.sql.DataFrame, "localCheckpoint", no_checkpoint)
+    edges = edges_df(spark, G.gnp(40, 0.12, seed=5))
+    edges.count()
+    sc = spark.sparkContext
+    before = _persistent(spark)
+    sc.setJobGroup("slm-driver-sized", "driver-sized slm_scale")
+    try:
+        assign, q = engine.slm(edges, seed=3, mode="scale")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("slm-driver-sized")) == 1
+    assert _persistent(spark) == before
+    assert assign.count() == 40
+    assert q == engine.modularity(edges, assign)
+
+
+@pytest.mark.parametrize("threshold_delta,driver", [(0, True), (-1, False)])
+def test_driver_sized_probe_boundary(spark, threshold_delta, driver):
+    """An input of |E| rows that is already symmetric (m0 = |E|) runs on
+    the driver at exact_threshold = |E| and in Spark at |E| − 1."""
+    und = G.gnp(30, 0.15, seed=2)
+    sym = G.directed(und)
+    _rows, _q, phases = _scale_run(
+        edges_df(spark, sym), seed=1, max_sweeps=3,
+        exact_threshold=len(sym) + threshold_delta,
+    )
+    assert ("setup" not in phases) == driver
+
+
+def test_driver_sized_probe_fits_but_symmetrization_does_not(spark):
+    """Every row fits the probe but the symmetrized table does not (one
+    direction given, m0 = 2|E| > exact_threshold): Spark path."""
+    und = G.gnp(30, 0.15, seed=2)
+    _rows, _q, phases = _scale_run(
+        edges_df(spark, und), seed=1, max_sweeps=3, exact_threshold=len(und)
+    )
+    assert phases[0] == "setup"
+
+
+def test_driver_sized_empty_edges(spark):
+    """An empty edge table at the default threshold: no rows, q 0.0,
+    nothing pinned."""
+    before = _persistent(spark)
+    empty = spark.createDataFrame([], "src long, dst long, weight double")
+    assign, q = engine.slm(empty, mode="scale", seed=1)
+    assert assign.count() == 0 and q == 0.0
+    assert _persistent(spark) == before
+
+
+def test_driver_sized_rejects_negative_ids(spark):
+    """The driver-sized path refuses a negative id too, before any kernel
+    runs and leaving nothing persisted."""
+    before = _persistent(spark)
+    edges = edges_df(spark, [(0, 1, 1.0), (1, 2, 1.0), (-5, 2, 1.0)])
+    with pytest.raises(ValueError, match="non-negative"):
+        engine.slm(edges, seed=0, mode="scale")
+    assert _persistent(spark) == before
+
+
+@pytest.mark.parametrize(
+    "kw,finish_level", [(dict(n_iterations=2), 0), (dict(exact_threshold=40), 1)]
+)
+def test_scale_mode_on_ids_near_2_pow_62(spark, kw, finish_level):
+    """Ingested ids are 62-bit hashes: the exact finish densifies raw
+    community labels without an array indexed by label.  Ids shifted by
+    2^61 give the unshifted run's Q and, shifted back, its labels — at a
+    level-0 finish whose second pass starts from raw labels, and at a
+    level ≥ 1 finish."""
+    from slmpy_spark.graph import slm as slm_mod
+
+    shift = 2**61
+    und = G.g_ring_cliques_4()
+    runs = []
+    for sh in (0, shift):
+        e = edges_df(spark, [(s + sh, d + sh, w) for s, d, w in und])
+        rows, q, _ = _scale_run(e, seed=3, max_sweeps=3, **kw)
+        levels = [p[0] for p in slm_mod.LAST_RUN_STATS["phases"] if p[1] == "exact_collect"]
+        assert levels == [finish_level]
+        runs.append(([(i - sh, c - sh) for i, c in rows], q))
+    assert runs[0] == runs[1]
