@@ -472,6 +472,33 @@ def _lm_auto(indptr, nbr, wgt, node_w, cluster, resolution2, rng) -> bool:
     return local_moving_chunked(indptr, nbr, wgt, node_w, cluster, resolution2, rng)
 
 
+def split_community(comm, src, dst, wgt, w_src, resolution2, seed):
+    """LM from singletons inside one community (SLM's subnetwork split,
+    G6) — the one per-community kernel of scale mode, called by the
+    ``applyInPandas`` split and by the driver-held split alike.
+
+    Input: the community label `comm` (it keys the RNG) and its intra
+    entries as parallel arrays — `src`, `dst` vertex ids, weight `wgt`,
+    and `w_src` the node weight of each entry's src.  Returns (ids,
+    sub): the sorted ids that occur in the entries and, per id, its
+    subcommunity's MIN MEMBER VERTEX ID — globally unique with zero
+    coordination, since communities are disjoint.  On integral weights
+    the result does not depend on the entries' order."""
+    ids, lsrc, ldst = dense_ids(src, dst)
+    indptr, nbr, w = build_csr(len(ids), lsrc, ldst, wgt)
+    # every id occurs as src (the table is symmetrized): its weight is
+    # the w_src of its first entry
+    node_w = np.zeros(len(ids))
+    uniq_pos, first_idx = np.unique(lsrc, return_index=True)
+    node_w[uniq_pos] = np.asarray(w_src, dtype=np.float64)[first_idx]
+    cluster = np.arange(len(ids), dtype=np.int64)
+    rng = np.random.Generator(np.random.PCG64(seed ^ (int(comm) * 2_654_435_761 % (1 << 63))))
+    # sequential kernel for small communities, chunked vectorized for
+    # big ones (a power-law hub community can hold most of the graph)
+    _lm_auto(indptr, nbr, w, node_w, cluster, resolution2, rng)
+    return ids, min_member(ids, cluster)
+
+
 def slm_recursive(
     indptr, nbr, wgt, node_w, cluster, resolution2, rng, fast: bool = False
 ) -> bool:

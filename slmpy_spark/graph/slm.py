@@ -14,7 +14,13 @@ Two execution modes (SURVEY.md §5.3):
   task, at most ``exact_threshold + 1`` rows) brings it to the driver,
   and every pass runs the exact finish's numpy core on it
   (``_driver_graph`` → ``_finish_core`` → one ``createDataFrame``).
-  Otherwise, per outer level:
+  When that collect holds the whole edge table but the symmetrized
+  table exceeds ``exact_threshold``, level 0 is *held*
+  (``_held_pass``): only step 1 below runs in Spark, over frames made
+  from the driver arrays, and steps 2–3, the canonical labels and the
+  merge-down are numpy (step 2 calls the same per-community kernel); an
+  aggregated level that fits goes to ``_finish_core`` with no collect,
+  a bigger one is held again.  Otherwise, per outer level:
     1. *distributed local moving*: a fully JVM-side synchronous sweep.
        Each sweep computes k_{i,c} (weight from every vertex i to every
        neighboring community c) as ``groupBy(src, cand).sum(weight)`` —
@@ -37,15 +43,16 @@ Two execution modes (SURVEY.md §5.3):
        summation order on non-integer weights).
     2. *subnetwork splitting* (G6): intra-community edges grouped by
        community; ``applyInPandas`` runs LM-from-singletons per
-       community — embarrassingly parallel.
+       community (``kernels.split_community``) — embarrassingly
+       parallel.
     3. *aggregation* (G7/G8): join+groupBy builds the super-graph;
        subcommunities start the next level grouped by their parent.
     4. recurse until the super-graph stops shrinking; once it fits
        under ``exact_threshold`` edges it is collected and the remaining
        levels run on the driver (the exact finish; the graph has shrunk
        100–10000× by then).
-  Every outer level checkpoints assign + supergraph + metrics through
-  the Checkpointer (resumable mid-convergence).
+  Every outer level, held or not, checkpoints assign + supergraph +
+  metrics through the Checkpointer (resumable mid-convergence).
 
 Scale-mode results match the reference's *Q-class* (same modularity to
 1e-6 on graphs with stable optima), not its exact label sequence — the
@@ -55,9 +62,9 @@ exact mode is the label-parity path.
 Scale mode labels an escaped singleton ``-(id+1)`` during sweeps, which
 must not collide with any real vertex id, so ``slm_scale`` requires
 every vertex id to be non-negative: the minimum id is read from the
-driver-sized collect, or rides the Spark setup's checkpoint job as an
-observe metric, and a negative one raises ``ValueError`` before any
-sweep.  (An id of 2^63-1 would overflow
+bounded collect (driver-sized and held runs), or rides the Spark
+setup's checkpoint job as an observe metric, and a negative one raises
+``ValueError`` before any sweep.  (An id of 2^63-1 would overflow
 ``id+1``; Spark's ANSI mode raises on that.)  The ingest layer's hashed
 ids satisfy the condition: ``pages_to_edges`` and ``url_ids`` mask
 ``xxhash64`` to its low 62 bits.
@@ -77,6 +84,8 @@ from slmpy_spark.graph.modularity import modularity
 from slmpy_spark.util import EdgeCache, Frames, explain_to, materialize, owned_view
 
 ASSIGN_SCHEMA = "id long, community long"
+SYM_SCHEMA = "src long, dst long, weight double"
+NODE_W_SCHEMA = "id long, node_w double"
 
 import os as _os
 import sys as _sys
@@ -168,8 +177,7 @@ def slm_exact(
         seed=seed,
         variant=variant,
     )
-    out = pd.DataFrame({"id": ids, "community": cluster})
-    return edges.sparkSession.createDataFrame(out, ASSIGN_SCHEMA), q
+    return _assign_frame(edges.sparkSession, ids, cluster), q
 
 
 # ------------------------------------------------- scale mode: LM sweep
@@ -462,7 +470,8 @@ def _distributed_local_moving(
     level: int = 0,
     bcast: bool = False,
     m_l: int = 0,
-) -> DataFrame:
+    on_driver: bool = False,
+):
     """Superstep local moving with adaptive damping (starting at
     INIT_FRAC, stopping at Q_TOL) and a *deferred* monotone-Q guard.
 
@@ -489,7 +498,12 @@ def _distributed_local_moving(
     At shuffle levels (`bcast=False`) `sym` must be the caller's
     dst-partitioned edge cache (util.EdgeCache): every sweep's first
     join (dst → candidate community) then reuses the cached layout and
-    only the vertex-sized state shuffles per sweep."""
+    only the vertex-sized state shuffles per sweep.
+
+    Returns the best state's canonical (min-member id) labels: a
+    materialized (id, community) frame, or — `on_driver`, for a level
+    the driver holds — one collect of the best state labelled in numpy,
+    an array over the vertices in ascending id order."""
     tp = _time.time()
     # state init — when the caller starts from singletons (assign=None)
     # the frame is a plain projection of the node-weight leaf: no
@@ -604,58 +618,64 @@ def _distributed_local_moving(
             best_state = state
         tp = _phase(level, "lm_final_eval", tp)
 
-    assign_out = _canonical_labels(
-        best_state.select("id", "community"), bcast=bcast
-    ).transform(materialize)
+    if on_driver:
+        # one collect of the best state; the min-member labels are numpy
+        pdf = best_state.select("id", "community").toPandas().sort_values("id")
+        assign_out = kernels.min_member(
+            pdf["id"].to_numpy(np.int64),
+            np.unique(pdf["community"].to_numpy(np.int64), return_inverse=True)[1],
+        )
+    else:
+        assign_out = _canonical_labels(
+            best_state.select("id", "community"), bcast=bcast
+        ).transform(materialize)
     tp = _phase(level, "lm_canonical", tp)
     frames.retain()
     return assign_out
 
 
 def _sweep_edges(frames: Frames, sym: DataFrame, bcast: bool) -> DataFrame:
-    """The edge table a level's sweeps read: `sym` itself at bcast
-    levels; at shuffle levels ONE repartition("dst") + persist of it
-    (util.EdgeCache, owned by `frames`) that every sweep's kic join
-    reuses — and, in the level loop, the split's intra join and the
-    aggregation too — so the edge table is shuffled into this layout
-    exactly once."""
-    return sym if bcast else frames.own(EdgeCache(sym, "dst", eager=True)).df
+    """The edge table a level's sweeps read: `sym` without its self-loop
+    rows — at bcast levels as a filter over `sym`, at shuffle levels as
+    ONE repartition("dst") + persist of that view (util.EdgeCache, owned
+    by `frames`) that every sweep's kic join reuses — and, in the level
+    loop, the split's intra join and the aggregation too — so the edge
+    table is shuffled into this layout exactly once.
+
+    A self-loop weighs the same on every candidate of its vertex, so it
+    never decides a move (the sequential LM loops skip it too); summed
+    into k_{i,c} of the vertex's own community it would bias the vertex
+    toward staying.  Dropping it here keeps the sweeps' observed Q and
+    ``_assign_quality`` on the same table (both then miss the same
+    constant self-loop weight, so the Q guard compares like with like);
+    node weights and the pass Q still count it.  The aggregation drops
+    self-loops anyway, so only level 0 can hold any."""
+
+    def loop_free(df):
+        return df.where(F.col("src") != F.col("dst"))
+
+    if bcast:
+        return loop_free(sym)
+    return frames.own(EdgeCache(sym, "dst", view=loop_free, eager=True)).df
 
 
 # ----------------------------------------- scale mode: community split
 
 
 def _split_kernel_factory(resolution2: float, seed: int):
-    """LM-from-singletons inside one community (G6). Input rows: the
-    community's intra edges (src, dst, weight, w_src). Output:
-    (id, sub) with sub = the subcommunity's MIN MEMBER VERTEX ID —
-    globally unique with zero coordination (members are disjoint across
-    communities), so the caller needs no relabel join afterwards."""
+    """The ``applyInPandas`` wrapper of ``kernels.split_community``:
+    input rows are one community's intra edges (src, dst, weight,
+    w_src), output (id, sub)."""
 
     # unannotated on purpose: partial hints make applyInPandas' eval-type
     # inference raise and warn on every split; grouped-map is the default
     def kernel(key, pdf):
-        comm = int(key[0])
-        ids, lsrc, ldst = kernels.dense_ids(
-            pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
+        ids, sub = kernels.split_community(
+            key[0], pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64),
+            pdf["weight"].to_numpy(np.float64), pdf["w_src"].to_numpy(np.float64),
+            resolution2, seed,
         )
-        indptr, nbr, wgt = kernels.build_csr(
-            len(ids), lsrc, ldst, pdf["weight"].to_numpy(np.float64)
-        )
-        # node weights: every id appears as src (sym table) — gather its
-        # w_src from the first row of its CSR-sorted slice (vectorized;
-        # ids without src rows keep 0, they have no edges here anyway)
-        node_w = np.zeros(len(ids))
-        uniq_pos, first_idx = np.unique(lsrc, return_index=True)
-        node_w[uniq_pos] = pdf["w_src"].to_numpy(np.float64)[first_idx]
-        cluster = np.arange(len(ids), dtype=np.int64)
-        rng = np.random.Generator(np.random.PCG64(seed ^ (comm * 2_654_435_761 % (1 << 63))))
-        # sequential kernel for small communities (cheap, closest to
-        # the reference); chunked vectorized kernel for big ones
-        # (a power-law hub community can hold most of the graph — a
-        # per-node Python loop there would serialize the whole stage)
-        kernels._lm_auto(indptr, nbr, wgt, node_w, cluster, resolution2, rng)
-        return pd.DataFrame({"id": ids, "sub": kernels.min_member(ids, cluster)})
+        return pd.DataFrame({"id": ids, "sub": sub})
 
     return kernel
 
@@ -770,8 +790,12 @@ def slm_scale(
     A graph whose symmetrized edge table fits under `exact_threshold`
     entries runs on the driver (see _driver_graph): every pass is the
     exact finish on the collected arrays, and `assign` is one local
-    relation that pins no storage.  Otherwise the level loop runs in
-    Spark (`_scale_pass`).
+    relation that pins no storage.  An input of at most
+    `exact_threshold` rows whose symmetrization does not fit is held on
+    the driver (`_held_pass`): only the sweeps run in Spark, and
+    `assign` is again a local relation.  Otherwise — more rows than
+    `exact_threshold`, `variant="louvain_refine"`, or a resume that
+    finds snapshots — the level loop runs in Spark (`_scale_pass`).
 
     `n_iterations`: iterated SLM (G14) — each pass restarts the level
     hierarchy from the previous pass's flat assignment (never from
@@ -793,7 +817,8 @@ def slm_scale(
     slm_next_assign — the next level's warm-start clustering); passing
     `resume=True` with a checkpointer holding the same run_id restarts
     the level loop after the last completed level from that warm
-    start.  Per-level seeds are `seed + level`, so the remaining
+    start (held levels write the same snapshots; the resume runs on
+    the Spark path).  Per-level seeds are `seed + level`, so the remaining
     levels replay as the uninterrupted run would (modulo sweeps'
     snapshot timing)."""
     LAST_RUN_STATS.update(_new_run_stats())
@@ -807,6 +832,7 @@ def slm_scale(
         and checkpointer.latest_step("slm_supergraph") is not None
     ):
         g = _driver_graph(edges, exact_threshold)
+    held = False
     if g is not None:
         ids, lsrc, ldst, w = g
         two_m = float(w.sum())
@@ -815,8 +841,14 @@ def slm_scale(
         else:
             node_w = np.bincount(lsrc, weights=w, minlength=ids.size)
         sym0 = nw0 = None
-        _dbg(f"driver-sized: m={lsrc.size}")
-        _phase(0, "exact_collect", tp)
+        # the probe holds the whole table; level 0 is the exact finish
+        # when it fits, else a held level (only its sweeps run in Spark)
+        held = lsrc.size > exact_threshold
+        _dbg(f"driver-{'held' if held else 'sized'}: m={lsrc.size}")
+        if held:
+            _phase(-1, "setup", tp)
+        else:
+            _phase(0, "exact_collect", tp)
     else:
         sym0, nw0, two_m, m0, nv0 = _spark_setup(frames, edges, quality)
         _phase(-1, "setup", tp)
@@ -824,6 +856,7 @@ def slm_scale(
 
     best_q = None
     best_flat = None
+    best_out = None  # a held pass's result relation
     n_starts = max(1, n_random_starts)
     n_iters = max(1, n_iterations)
     for start in range(n_starts):
@@ -832,7 +865,15 @@ def slm_scale(
             LAST_RUN_STATS["passes"] += 1
             pass_seed = seed + 7919 * it + 104_729 * start
             prev = flat
-            if g is not None:
+            if held:
+                flat, q, out = _held_pass(
+                    edges.sparkSession, g, node_w, two_m, resolution2, gamma,
+                    quality, pass_seed, max_levels, max_sweeps, exact_threshold,
+                    variant, checkpointer,
+                    step_offset=(start * n_iters + it) * max_levels,
+                    init_flat=prev, broadcast_threshold=broadcast_threshold,
+                )
+            elif g is not None:
                 # the level loop's exact finish at level 0, on the driver
                 flat, q = _finish_core(
                     ids, lsrc, ldst, w, node_w, ids if prev is None else prev,
@@ -875,19 +916,21 @@ def slm_scale(
             improved = best_q is None or q > best_q + 1e-9
             if improved:
                 best_q, best_flat = q, flat
+                if held:
+                    best_out = out
             # only the best pass's labels outlive the pass; one that did
             # not improve the global best also stops this start (further
             # passes chase a local optimum the best already beat).  The
-            # driver-sized path owns no frames.
+            # driver-sized and held paths own no frames.
             frames.retain(sym0, nw0, best_flat)
             if not improved:
                 break
 
+    if held:
+        return best_out, best_q
     if g is not None:
         tp = _time.time()
-        out = edges.sparkSession.createDataFrame(
-            pd.DataFrame({"id": ids, "community": best_flat}), ASSIGN_SCHEMA
-        )
+        out = _assign_frame(edges.sparkSession, ids, best_flat)
         _phase(0, "exact_emit", tp)
         return out, best_q
     frames.retain(best_flat)
@@ -897,8 +940,11 @@ def slm_scale(
 def _driver_graph(edges: DataFrame, exact_threshold: int):
     """The symmetrized edge table as driver arrays (ids, lsrc, ldst, w)
     — sorted distinct vertex ids, then each entry's endpoints as indices
-    into them and its weight — when it has at most `exact_threshold`
-    entries, the level loop's own exact-finish rule; else None.
+    into them and its weight — when the input has at most
+    `exact_threshold` rows; else None.  The caller compares the entry
+    count with `exact_threshold`, the level loop's own exact-finish
+    rule: at most that many, and every pass is the exact finish on these
+    arrays; more, and level 0 is held (see _held_pass).
 
     ONE Spark job with ONE task: ``coalesce(1).limit(k)`` stops reading
     after k = exact_threshold + 1 rows, so at most k rows reach the
@@ -920,10 +966,32 @@ def _driver_graph(edges: DataFrame, exact_threshold: int):
     if ids.size and ids[0] < 0:
         raise ValueError(f"slm_scale needs non-negative vertex ids, got {ids[0]}")
     key, inv = np.unique(s * ids.size + d, return_inverse=True)
-    if key.size > exact_threshold:
-        return None
     w = pdf["weight"].to_numpy(np.float64)
     return ids, key // ids.size, key % ids.size, np.bincount(inv, weights=np.concatenate([w, w]))
+
+
+def _driver_frame(spark, schema: str, *cols) -> DataFrame:
+    """A frame over driver arrays (`cols`, in `schema`'s column order)
+    whose plan is ONE LogicalRDD leaf, built without a Spark job.
+    ``createDataFrame`` alone gives a LocalRelation, which every plan
+    reading it inlines row by row (measured 0.1–0.16 s per bcast-level
+    sweep at 64k entries) and which ``EdgeCache`` (not a leaf to
+    ``util.is_plan_leaf``) would checkpoint in a job of its own; the
+    LocalRelation's own RDD (``toRdd``: a parallelized collection, no
+    job) is such a leaf, as in ``util.materialize``."""
+    names = [c.split()[0] for c in schema.split(",")]
+    local = spark.createDataFrame(pd.DataFrame(dict(zip(names, cols))), schema)._jdf
+    return DataFrame(spark._jsparkSession.internalCreateDataFrame(
+        local.queryExecution().toRdd(), local.schema(), False
+    ), spark)
+
+
+def _assign_frame(spark, ids, labels) -> DataFrame:
+    """An (id, community) result over driver arrays: one local relation
+    that pins no storage."""
+    return spark.createDataFrame(
+        pd.DataFrame({"id": ids, "community": labels}), ASSIGN_SCHEMA
+    )
 
 
 def _spark_setup(frames: Frames, edges: DataFrame, quality: str):
@@ -1146,6 +1214,156 @@ def _scale_pass(
     return flat, q
 
 
+def _held_pass(
+    spark, graph, node_w, two_m, resolution2, gamma, quality, seed, max_levels,
+    max_sweeps, exact_threshold, variant, checkpointer, step_offset, init_flat,
+    broadcast_threshold,
+):
+    """One hierarchy pass (the `_scale_pass` level loop) over a graph
+    the driver holds: the bounded probe returned the whole edge table,
+    but its `graph` arrays (ids, lsrc, ldst, w) exceed `exact_threshold`
+    entries.  Each held level runs only its sweeps (and the final
+    evaluation) in Spark, over frames made from the arrays; the
+    canonical labels, the split (``kernels.split_community``, the kernel
+    of the ``applyInPandas`` split), the parent map, node weights,
+    aggregation and merge-down are numpy.  An aggregated level of at
+    most `exact_threshold` entries goes to `_finish_core` with no
+    collect; a bigger one is held in turn.  `init_flat`: labels per
+    vertex of `graph` (None: singletons).
+
+    Returns (flat, q, out): the labels per vertex, the pass's Q on the
+    original graph, and the same labels as one local relation.  With a
+    `checkpointer`, every level writes the `_scale_pass` snapshots from
+    its arrays, so a resume restarts from them on the Spark path.  The
+    phases keep the level loop's names; at the finish, ``exact_collect``
+    and ``exact_emit`` are the array hand-off and hand-back (no Spark
+    job), and the last ``merge_down`` emits the result relation."""
+    ids0, lsrc0, ldst0, w0 = graph
+    ids, lsrc, ldst, w = graph
+    nw = node_w
+    labels = init_flat  # this level's warm start; None = singletons
+    flat = None  # per original vertex, its community (an id of this level)
+    q = None
+    finished = False
+    for level in range(max_levels):
+        tl = _time.time()
+        m_l = lsrc.size
+        _dbg(f"held level {level}: m={m_l}")
+        if m_l <= exact_threshold:
+            tl = _phase(level, "exact_collect", tl)
+            start = ids if labels is None else labels
+            if m_l:
+                labels, q = _finish_core(
+                    ids, lsrc, ldst, w, nw, start, resolution2, seed + level,
+                    variant, two_m, gamma, quality, level,
+                )
+            else:  # an empty supergraph keeps its warm start
+                labels = start
+            # the labels go back as arrays: an empty exact_emit
+            tl = _phase(level, "exact_emit", _time.time())
+            flat = labels if flat is None else labels[np.searchsorted(ids, flat)]
+            finished = True
+            break
+        bcast = ids.size <= broadcast_threshold
+        LAST_RUN_STATS["levels"] += 1
+        frames = Frames()
+        sym_j = _sweep_edges(
+            frames, _driver_frame(spark, SYM_SCHEMA, ids[lsrc], ids[ldst], w), bcast
+        )
+        tl = _phase(level, "edge_cache", tl)
+        comm = _distributed_local_moving(
+            sym_j, _driver_frame(spark, NODE_W_SCHEMA, ids, nw),
+            None if labels is None else _driver_frame(spark, ASSIGN_SCHEMA, ids, labels),
+            resolution2, seed + level, max_sweeps, gamma, quality, two_m,
+            checkpointer=checkpointer, level=level, bcast=bcast, m_l=m_l,
+            on_driver=True,
+        )
+        if checkpointer is not None:
+            checkpointer.log_partition_metrics(
+                sym_j, op="slm_lm_input", level=level, step=step_offset + level
+            )
+        frames.retain()
+        tl = _time.time()
+        sub = comm
+        if variant == "slm":
+            sub = _split_on_driver(ids, lsrc, ldst, w, nw, comm, resolution2, seed + level)
+            tl = _phase(level, "split_kernel", tl)
+        flat = sub if flat is None else sub[np.searchsorted(ids, flat)]
+        tl = _phase(level, "merge_down", tl)
+        cids, cidx = np.unique(sub, return_inverse=True)
+        nw_next = np.bincount(cidx, weights=nw, minlength=cids.size)
+        tl = _phase(level, "node_w_next", tl)
+        if cids.size >= ids.size:
+            break  # nothing merged at this level → converged
+        # supergraph: inter-community entries summed, intra weight dropped
+        cs, cd = cidx[lsrc], cidx[ldst]
+        inter = cs != cd
+        key, inv = np.unique(cs[inter] * cids.size + cd[inter], return_inverse=True)
+        lsrc, ldst = key // cids.size, key % cids.size
+        w = np.bincount(inv, weights=w[inter], minlength=key.size)
+        # next level's warm start: SLM groups subcommunities by their LM
+        # community (§1.2(4c)); Louvain starts from singletons
+        labels = None
+        if variant == "slm":
+            labels = np.empty(cids.size, dtype=np.int64)
+            labels[cidx] = comm
+        ids, nw = cids, nw_next
+        tl = _phase(level, "aggregate", tl)
+        if checkpointer is not None:
+            step = step_offset + level
+            checkpointer.save_state(
+                "slm_assign", step, _driver_frame(spark, ASSIGN_SCHEMA, ids0, flat)
+            )
+            checkpointer.save_state("slm_node_w", step, _driver_frame(spark, NODE_W_SCHEMA, ids, nw))
+            checkpointer.save_state(
+                "slm_supergraph", step, _driver_frame(spark, SYM_SCHEMA, ids[lsrc], ids[ldst], w)
+            )
+            if labels is not None:
+                checkpointer.save_state(
+                    "slm_next_assign", step, _driver_frame(spark, ASSIGN_SCHEMA, ids, labels)
+                )
+            checkpointer.log_metric(
+                op="slm", level=level, step=step, edges=m_l, communities=cids.size
+            )
+    if not finished:
+        tl = _time.time()
+    if q is None:
+        # no finish scored the pass (converged, max_levels, or an empty
+        # supergraph): score `flat` on the original graph
+        q = _partition_q(
+            lsrc0, ldst0, w0, node_w, np.unique(flat, return_inverse=True)[1],
+            two_m, gamma, quality,
+        )
+    out = _assign_frame(spark, ids0, flat)
+    if finished:
+        _phase(level, "merge_down", tl)
+    else:
+        _phase(-1, "pass_q", tl)
+    return flat, q, out
+
+
+def _split_on_driver(ids, lsrc, ldst, w, node_w, comm, resolution2, seed):
+    """`_split_communities` on a held level: `comm` (canonical labels per
+    vertex) re-clustered from singletons per community by the same
+    kernel over the same intra entries (self-loops dropped, as the
+    sweep table drops them, see _sweep_edges).  Returns the subcommunity
+    label per vertex; a vertex without intra entries stays a singleton
+    of its own id."""
+    cs = comm[lsrc]
+    intra = np.flatnonzero((cs == comm[ldst]) & (lsrc != ldst))
+    intra = intra[np.argsort(cs[intra], kind="stable")]
+    sub = ids.copy()
+    for part in np.split(intra, np.flatnonzero(np.diff(cs[intra])) + 1):
+        if part.size:
+            s = lsrc[part]
+            gids, gsub = kernels.split_community(
+                cs[part[0]], ids[s], ids[ldst[part]], w[part], node_w[s],
+                resolution2, seed,
+            )
+            sub[np.searchsorted(ids, gids)] = gsub
+    return sub
+
+
 def _merge_down(
     flat: DataFrame, level_assign: DataFrame, bcast: bool = False
 ) -> DataFrame:
@@ -1216,9 +1434,7 @@ def _exact_finish(
         resolution2, seed, variant, two_m, gamma, quality, level,
     )
     tp = _time.time()
-    res = sym_l.sparkSession.createDataFrame(
-        pd.DataFrame({"id": ids, "community": labels}), ASSIGN_SCHEMA
-    )
+    res = _assign_frame(sym_l.sparkSession, ids, labels)
     _phase(level, "exact_emit", tp)
     return res, q
 
@@ -1259,13 +1475,19 @@ def _finish_core(
     for _ in range(32):
         if not step(indptr, nbr, wgt, node_w, cluster, resolution2, rng):
             break
-    s_in = two_m - w[cluster[lsrc] != cluster[ldst]].sum()
-    s2 = (np.bincount(cluster, weights=node_w) ** 2).sum()
-    q = kernels.q_of(float(s_in), float(s2), two_m, gamma, quality)
+    q = _partition_q(lsrc, ldst, w, node_w, cluster, two_m, gamma, quality)
     # canonical min-member-id labels to stay in the global convention
     labels = kernels.min_member(ids, cluster)
     _phase(level, "exact_kernel", tp)
     return labels, q
+
+
+def _partition_q(lsrc, ldst, w, node_w, cluster, two_m, gamma, quality):
+    """The Q on the ORIGINAL graph of a final partition `cluster` (dense
+    indices) of a level's vertices; see `_finish_core`."""
+    s_in = two_m - w[cluster[lsrc] != cluster[ldst]].sum()
+    s2 = (np.bincount(cluster, weights=node_w) ** 2).sum()
+    return kernels.q_of(float(s_in), float(s2), two_m, gamma, quality)
 
 
 # -------------------------------------------------------------- facade

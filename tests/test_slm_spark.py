@@ -494,7 +494,8 @@ def test_driver_sized_probe_boundary(spark, threshold_delta, driver):
 
 def test_driver_sized_probe_fits_but_symmetrization_does_not(spark):
     """Every row fits the probe but the symmetrized table does not (one
-    direction given, m0 = 2|E| > exact_threshold): Spark path."""
+    direction given, m0 = 2|E| > exact_threshold): level 0 is held, and
+    the run record still starts with setup."""
     und = G.gnp(30, 0.15, seed=2)
     _rows, _q, phases = _scale_run(
         edges_df(spark, und), seed=1, max_sweeps=3, exact_threshold=len(und)
@@ -543,3 +544,152 @@ def test_scale_mode_on_ids_near_2_pow_62(spark, kw, finish_level):
         assert levels == [finish_level]
         runs.append(([(i - sh, c - sh) for i, c in rows], q))
     assert runs[0] == runs[1]
+
+
+# --------------------------------------------------- driver-held levels
+
+
+HELD_CASES = [
+    ("powerlaw", {}),
+    ("powerlaw", dict(broadcast_threshold=1)),  # shuffle-level sweeps
+    ("powerlaw", dict(quality="cpm", gamma=0.5)),
+    ("powerlaw", dict(variant="louvain")),
+    ("powerlaw", dict(n_iterations=2)),
+    ("powerlaw", dict(n_random_starts=2)),
+    ("gnp", {}),  # level 1 is held again; the finish runs at level 2
+]
+
+
+def _held_graph(graph):
+    """(undirected triples, exact_threshold) with |E| ≤ threshold < 2|E|:
+    the probe holds the whole table, its symmetrization does not fit."""
+    if graph == "gnp":
+        return G.gnp(40, 0.12, seed=5), 120
+    return G.g_powerlaw(1000, 5000), 6000
+
+
+@pytest.mark.parametrize("graph,kw", HELD_CASES)
+def test_held_level_equals_spark_level(spark, graph, kw):
+    """A graph in the held band runs only its sweeps in Spark: on
+    integral weights its labels and Q equal the Spark level loop's bit
+    for bit, with the same level count."""
+    from slmpy_spark.graph import slm as slm_mod
+
+    und, threshold = _held_graph(graph)
+    assert len(und) <= threshold < 2 * len(und)
+    edges = edges_df(spark, und)
+    kw = dict(seed=3, max_sweeps=3, exact_threshold=threshold, **kw)
+    rows, q, phases = _scale_run(edges, **kw)
+    levels = slm_mod.LAST_RUN_STATS["levels"]
+    finish = {lvl for lvl, name, _s in slm_mod.LAST_RUN_STATS["phases"]
+              if name == "exact_collect"}
+    ref_rows, ref_q, ref_phases = _scale_run(edges, spark_level0=True, **kw)
+    assert phases[0] == ref_phases[0] == "setup"
+    # the Spark path's parent map is a Spark job; the held one is numpy
+    assert "split_parent_map" not in phases
+    assert rows == ref_rows
+    assert q == ref_q
+    assert levels == slm_mod.LAST_RUN_STATS["levels"]
+    if graph == "gnp":
+        assert finish == {2}  # level 1 held again
+
+
+def test_held_run_calls_no_apply_in_pandas_and_pins_nothing(spark, monkeypatch):
+    """A held level splits on the driver (no applyInPandas) and frees
+    every frame it made: nothing stays pinned once the result is
+    unpersisted."""
+    import pyspark.sql
+
+    def no_udf(*_a, **_k):
+        raise AssertionError("a held level ran applyInPandas")
+
+    monkeypatch.setattr(pyspark.sql.GroupedData, "applyInPandas", no_udf)
+    und, threshold = _held_graph("powerlaw")
+    edges = edges_df(spark, und)
+    edges.count()
+    before = _persistent(spark)
+    for bt in (1, 250_000):
+        assign, q = engine.slm(
+            edges, seed=3, mode="scale", max_sweeps=3, exact_threshold=threshold,
+            broadcast_threshold=bt,
+        )
+        assert assign.count() == len({v for s, d, _w in und for v in (s, d)})
+        assert q == engine.modularity(edges, assign)
+        assign.unpersist()
+        assert _persistent(spark) == before
+
+
+def test_held_run_checkpoints_and_resumes(spark, tmp_path):
+    """A checkpointed held run writes the level snapshots from its
+    arrays; a resume finds them, restarts on the Spark path after the
+    last completed level and returns the same labels and Q."""
+    from slmpy_spark.checkpoint import Checkpointer
+    from slmpy_spark.graph import slm as slm_mod
+
+    und, threshold = _held_graph("gnp")
+    edges = edges_df(spark, und)
+    kw = dict(seed=3, mode="scale", max_sweeps=3, exact_threshold=threshold)
+    ck = Checkpointer(spark, str(tmp_path), run_id="held")
+    assign, q = engine.slm(edges, checkpointer=ck, **kw)
+    final = sorted((r.id, r.community) for r in assign.collect())
+    assert ck.latest_step("slm_supergraph") == 1  # levels 0 and 1 held
+    for state in ("slm_assign", "slm_node_w", "slm_next_assign"):
+        assert ck.latest_step(state) == 1
+    ops = {m["op"] for m in ck.metrics()}
+    assert {"slm", "slm_sweep", "slm_lm_input"} <= ops
+
+    ck2 = Checkpointer(spark, str(tmp_path), run_id="held")
+    assign2, q2 = engine.slm(edges, checkpointer=ck2, resume=True, **kw)
+    phases = slm_mod.LAST_RUN_STATS["phases"]
+    assert sorted((r.id, r.community) for r in assign2.collect()) == final
+    assert q2 == q
+    # the resume ran no level: its one level is the exact finish at 2
+    assert slm_mod.LAST_RUN_STATS["levels"] == 0
+    assert [lvl for lvl, name, _s in phases if name == "exact_collect"] == [2]
+    assign2.unpersist()
+
+
+def test_sweep_ignores_self_loop_rows(spark):
+    """A self-loop weighs the same on every candidate community, so one
+    synchronous sweep from the same warm-start state with the same node
+    weights proposes the same communities with and without the
+    self-loop rows (they used to count toward staying)."""
+    from slmpy_spark.graph import slm as slm_mod
+    from slmpy_spark.util import Frames
+    from tests.test_lm_compiled import rand_csr, start, with_self_loops
+
+    seed = 2
+    indptr, nbr, wgt = with_self_loops(*rand_csr(seed, n=300), seed)
+    n = indptr.size - 1
+    src = np.repeat(np.arange(n), np.diff(indptr))
+    node_w = np.bincount(src, weights=wgt, minlength=n)
+    state = slm_mod._attach_sigma(
+        spark.createDataFrame(
+            [(i, int(c), float(x)) for i, (c, x) in enumerate(zip(start("warm", n, seed), node_w))],
+            "id long, community long, node_w double",
+        ),
+        True,
+    )
+    proposals = []
+    for keep in (np.ones(src.size, bool), src != nbr):
+        sym = spark.createDataFrame(
+            [(int(s), int(d), float(x)) for s, d, x in zip(src[keep], nbr[keep], wgt[keep])],
+            "src long, dst long, weight double",
+        )
+        prop = slm_mod._propose_moves(
+            slm_mod._sweep_edges(Frames(), sym, True), state, 1.0 / wgt.sum(),
+            seed, 0, 1.0, True,
+        )
+        proposals.append(sorted((r.id, r.community) for r in prop.collect()))
+    assert (src == nbr).any()
+    assert proposals[0] == proposals[1]
+
+
+def test_held_band_rejects_negative_ids(spark):
+    """An input in the held band (3 rows, 6 entries > 3) refuses a
+    negative id before any sweep, leaving nothing persisted."""
+    before = _persistent(spark)
+    edges = edges_df(spark, [(0, 1, 1.0), (1, 2, 1.0), (-5, 2, 1.0)])
+    with pytest.raises(ValueError, match="non-negative"):
+        engine.slm(edges, seed=0, mode="scale", exact_threshold=3)
+    assert _persistent(spark) == before
