@@ -439,18 +439,23 @@ def _intra_edges_by_cluster(
     return s, d, w, estarts
 
 
+def supergraph_entries(cs, cd, w, k):
+    """The super-graph's entries over `k` clusters, from entries whose
+    endpoints lie in clusters `cs` → `cd` with weights `w`: intra-cluster
+    entries dropped, the rest summed per (cs, cd) pair in entry order.
+    Returns (rs, rd, rw), sorted by (rs, rd)."""
+    inter = cs != cd
+    key, inv = np.unique(cs[inter].astype(np.int64) * k + cd[inter], return_inverse=True)
+    return key // k, key % k, np.bincount(inv, weights=w[inter], minlength=key.size)
+
+
 def _reduced_network(indptr, nbr, wgt, node_w, cluster, n_clusters):
     """Aggregate to the super-graph: inter-cluster weights summed, intra
     weight dropped; super node weights = member node-weight sums.
     Returns (r_indptr, r_nbr, r_wgt, r_node_w)."""
     n = indptr.size - 1
     e_src = np.repeat(np.arange(n, dtype=np.int64), np.diff(indptr))
-    cs, cd, w = cluster[e_src], cluster[nbr], wgt
-    inter = cs != cd
-    key = cs[inter].astype(np.int64) * n_clusters + cd[inter]
-    uk, inv = np.unique(key, return_inverse=True)
-    rw = np.bincount(inv, weights=w[inter])
-    rs, rd = (uk // n_clusters), (uk % n_clusters)
+    rs, rd, rw = supergraph_entries(cluster[e_src], cluster[nbr], wgt, n_clusters)
     r_indptr, r_nbr, r_wgt = build_csr(n_clusters, rs, rd, rw)
     r_node_w = np.bincount(cluster, weights=node_w, minlength=n_clusters)
     return r_indptr, r_nbr, r_wgt, r_node_w

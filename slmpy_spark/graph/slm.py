@@ -8,19 +8,18 @@ Two execution modes (SURVEY.md §5.3):
   finish; bitwise-deterministic given a seed; used for the
   golden-fixture parity gate.
 
-- **scale**: the distributed path for web-scale graphs.  A graph
-  whose symmetrized edge table fits under ``exact_threshold`` entries
-  never enters the level loop: ONE bounded collect (one Spark job, one
-  task, at most ``exact_threshold + 1`` rows) brings it to the driver,
-  and every pass runs the exact finish's numpy core on it
-  (``_driver_graph`` → ``_finish_core`` → one ``createDataFrame``).
-  When that collect holds the whole edge table but the symmetrized
-  table exceeds ``exact_threshold``, level 0 is *held*
-  (``_held_pass``): only step 1 below runs in Spark, over frames made
-  from the driver arrays, and steps 2–3, the canonical labels and the
-  merge-down are numpy (step 2 calls the same per-community kernel); an
-  aggregated level that fits goes to ``_finish_core`` with no collect,
-  a bigger one is held again.  Otherwise, per outer level:
+- **scale**: the distributed path for web-scale graphs.  An input of
+  at most ``exact_threshold`` rows runs on the driver: ONE bounded
+  collect (one Spark job, one task, at most ``exact_threshold + 1``
+  rows) brings it there as arrays (``_driver_graph``), and every pass is
+  one level loop over them (``_driver_pass``) with one rule per level,
+  its symmetrized entry count: a level of at most ``exact_threshold``
+  entries is the exact finish (``_finish_core``, no collect), a bigger
+  one is *held* — only step 1 below runs in Spark, over frames made
+  from the arrays, and steps 2–3, the canonical labels and the
+  merge-down are numpy (step 2 calls the same per-community kernel).
+  The result relation is built once, after every pass.  Otherwise
+  (``_scale_pass``), per outer level:
     1. *distributed local moving*: a fully JVM-side synchronous sweep.
        Each sweep computes k_{i,c} (weight from every vertex i to every
        neighboring community c) as ``groupBy(src, cand).sum(weight)`` —
@@ -62,8 +61,8 @@ exact mode is the label-parity path.
 Scale mode labels an escaped singleton ``-(id+1)`` during sweeps, which
 must not collide with any real vertex id, so ``slm_scale`` requires
 every vertex id to be non-negative: the minimum id is read from the
-bounded collect (driver-sized and held runs), or rides the Spark
-setup's checkpoint job as an observe metric, and a negative one raises
+bounded collect (driver runs), or rides the Spark setup's checkpoint
+job as an observe metric, and a negative one raises
 ``ValueError`` before any sweep.  (An id of 2^63-1 would overflow
 ``id+1``; Spark's ANSI mode raises on that.)  The ingest layer's hashed
 ids satisfy the condition: ``pages_to_edges`` and ``url_ids`` mask
@@ -108,7 +107,14 @@ def _new_run_stats() -> dict:
 #: - ``sweep_jobs``: one ``[level, secs]`` per LM sweep job;
 #: - ``phases``: one ``[level, name, secs]`` per non-sweep phase
 #:   (``_phase``; level -1 = outside the level loop).  Phases do not
-#:   overlap, and no sweep job falls inside a phase.
+#:   overlap, and no sweep job falls inside a phase.  A name means the
+#:   same work on every path: ``setup`` (level -1) is the level-0
+#:   ingest (the bounded probe or ``_spark_setup``); ``exact_collect``
+#:   is the exact finish's Spark collect (``_exact_finish`` only);
+#:   ``exact_kernel`` is ``_finish_core`` at the finish level;
+#:   ``exact_emit`` turns labels into the result relation — at the
+#:   finish level in the Spark loop, at level -1 for a driver run's one
+#:   result; ``pass_q`` scores a pass that no finish scored.
 #:
 #: Scripts read this dict (BENCH/run_scaling.py copies it into every
 #: ladder row); the SLMPY_DEBUG stderr lines are for people only.
@@ -787,15 +793,14 @@ def slm_scale(
     """Distributed SLM (variant="slm") / Louvain (variant="louvain").
     Returns (assign, q) — q computed on the original graph.
 
-    A graph whose symmetrized edge table fits under `exact_threshold`
-    entries runs on the driver (see _driver_graph): every pass is the
-    exact finish on the collected arrays, and `assign` is one local
-    relation that pins no storage.  An input of at most
-    `exact_threshold` rows whose symmetrization does not fit is held on
-    the driver (`_held_pass`): only the sweeps run in Spark, and
-    `assign` is again a local relation.  Otherwise — more rows than
-    `exact_threshold`, `variant="louvain_refine"`, or a resume that
-    finds snapshots — the level loop runs in Spark (`_scale_pass`).
+    An input of at most `exact_threshold` rows runs on the driver: the
+    bounded probe (`_driver_graph`) collects it once, every pass is
+    `_driver_pass` over those arrays (a level that fits under
+    `exact_threshold` entries is the exact finish, a bigger one runs
+    only its sweeps in Spark), and `assign` is one local relation, built
+    after the last pass, that pins no storage.  Otherwise — more rows
+    than `exact_threshold`, `variant="louvain_refine"`, or a resume that
+    finds snapshots — every pass is the Spark level loop (`_scale_pass`).
 
     `n_iterations`: iterated SLM (G14) — each pass restarts the level
     hierarchy from the previous pass's flat assignment (never from
@@ -817,10 +822,10 @@ def slm_scale(
     slm_next_assign — the next level's warm-start clustering); passing
     `resume=True` with a checkpointer holding the same run_id restarts
     the level loop after the last completed level from that warm
-    start (held levels write the same snapshots; the resume runs on
-    the Spark path).  Per-level seeds are `seed + level`, so the remaining
-    levels replay as the uninterrupted run would (modulo sweeps'
-    snapshot timing)."""
+    start (a driver run's held levels write the same snapshots; the
+    resume runs on the Spark path).  Per-level seeds are `seed + level`,
+    so the remaining levels replay as the uninterrupted run would
+    (modulo sweeps' snapshot timing)."""
     LAST_RUN_STATS.update(_new_run_stats())
     tp = _time.time()
     frames = Frames()
@@ -832,31 +837,21 @@ def slm_scale(
         and checkpointer.latest_step("slm_supergraph") is not None
     ):
         g = _driver_graph(edges, exact_threshold)
-    held = False
     if g is not None:
-        ids, lsrc, ldst, w = g
+        ids, lsrc, _, w = g
         two_m = float(w.sum())
         if quality == "cpm":
             node_w = np.ones(ids.size)
         else:
             node_w = np.bincount(lsrc, weights=w, minlength=ids.size)
         sym0 = nw0 = None
-        # the probe holds the whole table; level 0 is the exact finish
-        # when it fits, else a held level (only its sweeps run in Spark)
-        held = lsrc.size > exact_threshold
-        _dbg(f"driver-{'held' if held else 'sized'}: m={lsrc.size}")
-        if held:
-            _phase(-1, "setup", tp)
-        else:
-            _phase(0, "exact_collect", tp)
     else:
         sym0, nw0, two_m, m0, nv0 = _spark_setup(frames, edges, quality)
-        _phase(-1, "setup", tp)
+    _phase(-1, "setup", tp)
     resolution2 = kernels.resolution2_of(gamma, quality, two_m)
 
     best_q = None
     best_flat = None
-    best_out = None  # a held pass's result relation
     n_starts = max(1, n_random_starts)
     n_iters = max(1, n_iterations)
     for start in range(n_starts):
@@ -865,19 +860,13 @@ def slm_scale(
             LAST_RUN_STATS["passes"] += 1
             pass_seed = seed + 7919 * it + 104_729 * start
             prev = flat
-            if held:
-                flat, q, out = _held_pass(
+            if g is not None:
+                flat, q = _driver_pass(
                     edges.sparkSession, g, node_w, two_m, resolution2, gamma,
                     quality, pass_seed, max_levels, max_sweeps, exact_threshold,
                     variant, checkpointer,
                     step_offset=(start * n_iters + it) * max_levels,
                     init_flat=prev, broadcast_threshold=broadcast_threshold,
-                )
-            elif g is not None:
-                # the level loop's exact finish at level 0, on the driver
-                flat, q = _finish_core(
-                    ids, lsrc, ldst, w, node_w, ids if prev is None else prev,
-                    resolution2, pass_seed, variant, two_m, gamma, quality, 0,
                 )
             else:
                 flat, q = _scale_pass(
@@ -916,22 +905,18 @@ def slm_scale(
             improved = best_q is None or q > best_q + 1e-9
             if improved:
                 best_q, best_flat = q, flat
-                if held:
-                    best_out = out
             # only the best pass's labels outlive the pass; one that did
             # not improve the global best also stops this start (further
-            # passes chase a local optimum the best already beat).  The
-            # driver-sized and held paths own no frames.
+            # passes chase a local optimum the best already beat).  A
+            # driver run owns no frames.
             frames.retain(sym0, nw0, best_flat)
             if not improved:
                 break
 
-    if held:
-        return best_out, best_q
     if g is not None:
         tp = _time.time()
         out = _assign_frame(edges.sparkSession, ids, best_flat)
-        _phase(0, "exact_emit", tp)
+        _phase(-1, "exact_emit", tp)
         return out, best_q
     frames.retain(best_flat)
     return owned_view(best_flat.select("id", "community"), best_flat), best_q
@@ -941,10 +926,10 @@ def _driver_graph(edges: DataFrame, exact_threshold: int):
     """The symmetrized edge table as driver arrays (ids, lsrc, ldst, w)
     — sorted distinct vertex ids, then each entry's endpoints as indices
     into them and its weight — when the input has at most
-    `exact_threshold` rows; else None.  The caller compares the entry
-    count with `exact_threshold`, the level loop's own exact-finish
-    rule: at most that many, and every pass is the exact finish on these
-    arrays; more, and level 0 is held (see _held_pass).
+    `exact_threshold` rows; else None.  `_driver_pass` then applies the
+    level loop's own rule to every level, starting with these arrays:
+    at most `exact_threshold` entries, and the level is the exact
+    finish; more, and it is held.
 
     ONE Spark job with ONE task: ``coalesce(1).limit(k)`` stops reading
     after k = exact_threshold + 1 rows, so at most k rows reach the
@@ -1214,55 +1199,50 @@ def _scale_pass(
     return flat, q
 
 
-def _held_pass(
+def _driver_pass(
     spark, graph, node_w, two_m, resolution2, gamma, quality, seed, max_levels,
     max_sweeps, exact_threshold, variant, checkpointer, step_offset, init_flat,
     broadcast_threshold,
 ):
-    """One hierarchy pass (the `_scale_pass` level loop) over a graph
-    the driver holds: the bounded probe returned the whole edge table,
-    but its `graph` arrays (ids, lsrc, ldst, w) exceed `exact_threshold`
-    entries.  Each held level runs only its sweeps (and the final
-    evaluation) in Spark, over frames made from the arrays; the
-    canonical labels, the split (``kernels.split_community``, the kernel
-    of the ``applyInPandas`` split), the parent map, node weights,
-    aggregation and merge-down are numpy.  An aggregated level of at
-    most `exact_threshold` entries goes to `_finish_core` with no
-    collect; a bigger one is held in turn.  `init_flat`: labels per
-    vertex of `graph` (None: singletons).
+    """One hierarchy pass (the `_scale_pass` level loop) over the graph
+    the bounded probe collected: `graph` arrays (ids, lsrc, ldst, w),
+    `node_w` per vertex, `init_flat` labels per vertex (None: singletons).
+    One rule, the level's entry count, picks where each level runs: a
+    level of at most `exact_threshold` entries is the exact finish
+    (`_finish_core`, no collect); a bigger one is *held* — only its
+    sweeps (and the final evaluation) run in Spark, over frames made from
+    the arrays, while the canonical labels, the split
+    (``kernels.split_community``, the kernel of the ``applyInPandas``
+    split), the parent map, node weights, aggregation and merge-down are
+    numpy.
 
-    Returns (flat, q, out): the labels per vertex, the pass's Q on the
-    original graph, and the same labels as one local relation.  With a
-    `checkpointer`, every level writes the `_scale_pass` snapshots from
-    its arrays, so a resume restarts from them on the Spark path.  The
-    phases keep the level loop's names; at the finish, ``exact_collect``
-    and ``exact_emit`` are the array hand-off and hand-back (no Spark
-    job), and the last ``merge_down`` emits the result relation."""
+    Returns (flat, q): the labels per vertex of `graph` and the pass's Q
+    on the original graph.  With a `checkpointer`, every held level
+    writes the `_scale_pass` snapshots from its arrays, so a resume
+    restarts from them on the Spark path."""
     ids0, lsrc0, ldst0, w0 = graph
     ids, lsrc, ldst, w = graph
     nw = node_w
     labels = init_flat  # this level's warm start; None = singletons
     flat = None  # per original vertex, its community (an id of this level)
     q = None
-    finished = False
     for level in range(max_levels):
         tl = _time.time()
         m_l = lsrc.size
-        _dbg(f"held level {level}: m={m_l}")
+        _dbg(f"driver level {level}: m={m_l}")
         if m_l <= exact_threshold:
-            tl = _phase(level, "exact_collect", tl)
-            start = ids if labels is None else labels
-            if m_l:
+            labels = ids if labels is None else labels
+            if m_l:  # an empty supergraph keeps its warm start
                 labels, q = _finish_core(
-                    ids, lsrc, ldst, w, nw, start, resolution2, seed + level,
+                    ids, lsrc, ldst, w, nw, labels, resolution2, seed + level,
                     variant, two_m, gamma, quality, level,
                 )
-            else:  # an empty supergraph keeps its warm start
-                labels = start
-            # the labels go back as arrays: an empty exact_emit
-            tl = _phase(level, "exact_emit", _time.time())
-            flat = labels if flat is None else labels[np.searchsorted(ids, flat)]
-            finished = True
+            if flat is None:
+                flat = labels
+            else:
+                tl = _time.time()
+                flat = labels[np.searchsorted(ids, flat)]
+                _phase(level, "merge_down", tl)
             break
         bcast = ids.size <= broadcast_threshold
         LAST_RUN_STATS["levels"] += 1
@@ -1295,12 +1275,7 @@ def _held_pass(
         tl = _phase(level, "node_w_next", tl)
         if cids.size >= ids.size:
             break  # nothing merged at this level → converged
-        # supergraph: inter-community entries summed, intra weight dropped
-        cs, cd = cidx[lsrc], cidx[ldst]
-        inter = cs != cd
-        key, inv = np.unique(cs[inter] * cids.size + cd[inter], return_inverse=True)
-        lsrc, ldst = key // cids.size, key % cids.size
-        w = np.bincount(inv, weights=w[inter], minlength=key.size)
+        lsrc, ldst, w = kernels.supergraph_entries(cidx[lsrc], cidx[ldst], w, cids.size)
         # next level's warm start: SLM groups subcommunities by their LM
         # community (§1.2(4c)); Louvain starts from singletons
         labels = None
@@ -1325,21 +1300,16 @@ def _held_pass(
             checkpointer.log_metric(
                 op="slm", level=level, step=step, edges=m_l, communities=cids.size
             )
-    if not finished:
-        tl = _time.time()
     if q is None:
         # no finish scored the pass (converged, max_levels, or an empty
         # supergraph): score `flat` on the original graph
+        tq = _time.time()
         q = _partition_q(
             lsrc0, ldst0, w0, node_w, np.unique(flat, return_inverse=True)[1],
             two_m, gamma, quality,
         )
-    out = _assign_frame(spark, ids0, flat)
-    if finished:
-        _phase(level, "merge_down", tl)
-    else:
-        _phase(-1, "pass_q", tl)
-    return flat, q, out
+        _phase(-1, "pass_q", tq)
+    return flat, q
 
 
 def _split_on_driver(ids, lsrc, ldst, w, node_w, comm, resolution2, seed):
@@ -1443,13 +1413,14 @@ def _finish_core(
     ids, lsrc, ldst, w, node_w, labels, resolution2, seed, variant, two_m, gamma,
     quality, level,
 ):
-    """The exact finish's numpy part, shared by `_exact_finish` and the
-    driver-sized path of `slm_scale`: the level's graph as sorted vertex
-    `ids` and symmetrized entries (`lsrc`, `ldst` index into `ids`; `w`
-    their weights), with `node_w` per vertex and `labels` (any int64
-    community labels, one per vertex) as the start.  Runs the level step
-    to convergence (at most 32 passes) and returns (min-member labels,
-    q), q the Q on the ORIGINAL graph.
+    """The exact finish's numpy part, shared by `_exact_finish` (the
+    Spark level loop) and `_driver_pass` (a driver run's finish level),
+    which records its seconds as the ``exact_kernel`` phase: the level's
+    graph as sorted vertex `ids` and symmetrized entries (`lsrc`, `ldst`
+    index into `ids`; `w` their weights), with `node_w` per vertex and
+    `labels` (any int64 community labels, one per vertex) as the start.
+    Runs the level step to convergence (at most 32 passes) and returns
+    (min-member labels, q), q the Q on the ORIGINAL graph.
 
     ``s_in = two_m − w_cross`` holds at any level, with w_cross the
     weight of entries whose endpoints end in different final

@@ -307,18 +307,39 @@ def _no_recompute(*_a, **_k):
     raise AssertionError("slm_scale recomputed Q with modularity()")
 
 
-@pytest.mark.parametrize("exact_threshold,finish_level", [(10_000, 0), (120, 2)])
+#: every phase name slm_scale records, on every path
+PHASE_VOCABULARY = {
+    "setup", "edge_cache", "lm_state_init", "lm_final_eval", "lm_canonical",
+    "split_kernel", "split_parent_map", "merge_down", "node_w_next",
+    "aggregate", "exact_collect", "exact_kernel", "exact_emit", "pass_q",
+}
+
+
+@pytest.mark.parametrize(
+    "exact_threshold,finish_level,spark_level0",
+    [
+        pytest.param(10_000, 0, False, id="10000-0"),
+        pytest.param(120, 2, False, id="120-2"),
+        pytest.param(10_000, 0, True, id="10000-0-spark"),
+        pytest.param(120, 2, True, id="120-2-spark"),
+    ],
+)
 @pytest.mark.parametrize("quality,gamma", [("modularity", 1.0), ("cpm", 0.5)])
 def test_slm_scale_pass_q_scored_at_exact_finish(
-    spark, monkeypatch, quality, gamma, exact_threshold, finish_level
+    spark, monkeypatch, quality, gamma, exact_threshold, finish_level, spark_level0
 ):
     """A pass that ends in the exact finish gets its Q from the driver's
     collected arrays: modularity() is never called, no pass_q phase is
     recorded, and on integral weights the Q equals the independent
-    recompute bit for bit (and, for CPM, the oracle)."""
+    recompute bit for bit (and, for CPM, the oracle).  The driver run
+    (exact_threshold 10_000: the finish at level 0; 120: levels 0 and 1
+    held) and the Spark level loop (`spark_level0`) record the same
+    phase vocabulary; only the Spark finish collects."""
     from slmpy_spark.graph import slm as slm_mod
 
     monkeypatch.setattr(slm_mod, "modularity", _no_recompute)
+    if spark_level0:
+        monkeypatch.setattr(slm_mod, "_driver_graph", lambda *_a: None)
     und = G.gnp(40, 0.12, seed=5)
     edges = edges_df(spark, und)
     assign, q = engine.slm(
@@ -326,13 +347,20 @@ def test_slm_scale_pass_q_scored_at_exact_finish(
         exact_threshold=exact_threshold, max_sweeps=3,
     )
     phases = slm_mod.LAST_RUN_STATS["phases"]
-    assert [lvl for lvl, name, _s in phases if name == "exact_collect"] == [finish_level]
+    assert {p[1] for p in phases} <= PHASE_VOCABULARY
+    assert [lvl for lvl, name, _s in phases if name == "exact_kernel"] == [finish_level]
+    assert [lvl for lvl, name, _s in phases if name == "exact_collect"] == (
+        [finish_level] if spark_level0 else []
+    )
     assert not [p for p in phases if p[1] == "pass_q"]
     # a finish above level 0 merges its labels down onto the original
-    # vertices: that job is the run's last phase
-    tail = [[finish_level, "exact_emit"]] + (
-        [[finish_level, "merge_down"]] if finish_level else []
-    )
+    # vertices; the Spark finish emits its level's relation before that,
+    # a driver run emits its one result last
+    merge = [[finish_level, "merge_down"]] if finish_level else []
+    if spark_level0:
+        tail = [[finish_level, "exact_kernel"], [finish_level, "exact_emit"]] + merge
+    else:
+        tail = [[finish_level, "exact_kernel"]] + merge + [[-1, "exact_emit"]]
     assert [p[:2] for p in phases[-len(tail):]] == tail
     assert q == engine.modularity(edges, assign, gamma=gamma, quality=quality)
     if quality == "cpm":
@@ -404,9 +432,9 @@ def _persistent(spark):
 
 def _scale_run(edges, spark_level0=False, **kw):
     """engine.slm in scale mode → (sorted (id, community) rows, q, the
-    run's phase names).  `spark_level0` switches the driver-sized path
-    off, so level 0 runs in Spark and ends in the exact finish (the path
-    every driver-sized graph took before)."""
+    run's phase names).  `spark_level0` switches the driver run off (no
+    bounded probe), so every level runs in the Spark level loop
+    (`_scale_pass`) — the reference every driver run must equal."""
     from slmpy_spark.graph import slm as slm_mod
 
     with pytest.MonkeyPatch.context() as mp:
@@ -447,10 +475,13 @@ def test_driver_sized_scale_equals_level0_exact_finish(spark, graph, kw):
         "big": _big_sparse,
     }[graph]()
     edges = edges_df(spark, und)
+    from slmpy_spark.graph import slm as slm_mod
+
     rows, q, phases = _scale_run(edges, seed=3, **kw)
+    passes = slm_mod.LAST_RUN_STATS["passes"]
     ref_rows, ref_q, ref_phases = _scale_run(edges, spark_level0=True, seed=3, **kw)
-    assert "setup" in ref_phases and "setup" not in phases
-    assert phases.count("exact_collect") == 1  # one collect for every pass
+    assert "exact_collect" in ref_phases and "exact_collect" not in phases
+    assert phases.count("exact_kernel") == passes  # no collect for any pass
     assert rows == ref_rows
     assert q == ref_q
 
@@ -483,13 +514,15 @@ def test_driver_sized_scale_runs_one_job_and_pins_nothing(spark, monkeypatch):
 def test_driver_sized_probe_boundary(spark, threshold_delta, driver):
     """An input of |E| rows that is already symmetric (m0 = |E|) runs on
     the driver at exact_threshold = |E| and in Spark at |E| − 1."""
+    from slmpy_spark.graph import slm as slm_mod
+
     und = G.gnp(30, 0.15, seed=2)
     sym = G.directed(und)
-    _rows, _q, phases = _scale_run(
+    _rows, _q, _phases = _scale_run(
         edges_df(spark, sym), seed=1, max_sweeps=3,
         exact_threshold=len(sym) + threshold_delta,
     )
-    assert ("setup" not in phases) == driver
+    assert (slm_mod.LAST_RUN_STATS["levels"] == 0) == driver
 
 
 def test_driver_sized_probe_fits_but_symmetrization_does_not(spark):
@@ -501,6 +534,29 @@ def test_driver_sized_probe_fits_but_symmetrization_does_not(spark):
         edges_df(spark, und), seed=1, max_sweeps=3, exact_threshold=len(und)
     )
     assert phases[0] == "setup"
+
+
+@pytest.mark.parametrize("exact_threshold", [10_000, 120])
+def test_driver_run_builds_one_result_relation(spark, monkeypatch, exact_threshold):
+    """A driver run turns its labels into a relation once, after every
+    pass: over two passes — driver-sized (10_000) or with levels 0 and 1
+    held (120) — one `_assign_frame` call, recorded as the run's one
+    exact_emit, its last phase; each pass records one exact_kernel."""
+    from slmpy_spark.graph import slm as slm_mod
+
+    calls = []
+    assign_frame = slm_mod._assign_frame
+    monkeypatch.setattr(
+        slm_mod, "_assign_frame", lambda *a: calls.append(a) or assign_frame(*a)
+    )
+    edges = edges_df(spark, G.gnp(40, 0.12, seed=5))
+    _rows, _q, phases = _scale_run(
+        edges, seed=3, max_sweeps=3, exact_threshold=exact_threshold, n_iterations=2
+    )
+    assert slm_mod.LAST_RUN_STATS["passes"] == 2
+    assert len(calls) == 1
+    assert phases.count("exact_emit") == 1 and phases[-1] == "exact_emit"
+    assert phases.count("exact_kernel") == 2
 
 
 def test_driver_sized_empty_edges(spark):
@@ -540,8 +596,8 @@ def test_scale_mode_on_ids_near_2_pow_62(spark, kw, finish_level):
     for sh in (0, shift):
         e = edges_df(spark, [(s + sh, d + sh, w) for s, d, w in und])
         rows, q, _ = _scale_run(e, seed=3, max_sweeps=3, **kw)
-        levels = [p[0] for p in slm_mod.LAST_RUN_STATS["phases"] if p[1] == "exact_collect"]
-        assert levels == [finish_level]
+        levels = [p[0] for p in slm_mod.LAST_RUN_STATS["phases"] if p[1] == "exact_kernel"]
+        assert levels == [finish_level] * slm_mod.LAST_RUN_STATS["passes"]
         runs.append(([(i - sh, c - sh) for i, c in rows], q))
     assert runs[0] == runs[1]
 
@@ -582,7 +638,7 @@ def test_held_level_equals_spark_level(spark, graph, kw):
     rows, q, phases = _scale_run(edges, **kw)
     levels = slm_mod.LAST_RUN_STATS["levels"]
     finish = {lvl for lvl, name, _s in slm_mod.LAST_RUN_STATS["phases"]
-              if name == "exact_collect"}
+              if name == "exact_kernel"}
     ref_rows, ref_q, ref_phases = _scale_run(edges, spark_level0=True, **kw)
     assert phases[0] == ref_phases[0] == "setup"
     # the Spark path's parent map is a Spark job; the held one is numpy
