@@ -120,6 +120,12 @@ def _new_run_stats() -> dict:
 #: ladder row); the SLMPY_DEBUG stderr lines are for people only.
 LAST_RUN_STATS: dict = _new_run_stats()
 
+#: every phase name ``_phase`` accepts, on every path (meanings above)
+PHASES = frozenset((
+    "setup", "edge_cache", "lm_state_init", "lm_final_eval", "lm_canonical", "split_kernel",
+    "split_parent_map", "merge_down", "node_w_next", "aggregate", "exact_collect",
+    "exact_kernel", "exact_emit", "pass_q"))
+
 
 def _dbg(msg: str) -> None:
     if _os.environ.get("SLMPY_DEBUG"):
@@ -129,7 +135,9 @@ def _dbg(msg: str) -> None:
 def _phase(level, name: str, t0: float) -> float:
     """Record a non-sweep phase's seconds since `t0` in
     LAST_RUN_STATS["phases"] (BENCH/decompose.py attributes the
-    non-sweep serial floor per phase from them) and return a fresh t0."""
+    non-sweep serial floor per phase from them) and return a fresh t0.
+    `name` must be one of PHASES."""
+    assert name in PHASES, name
     now = _time.time()
     LAST_RUN_STATS["phases"].append([level, name, now - t0])
     _dbg(f"phase level={level} name={name} secs={now - t0:.3f}")
@@ -1220,8 +1228,7 @@ def _driver_pass(
     on the original graph.  With a `checkpointer`, every held level
     writes the `_scale_pass` snapshots from its arrays, so a resume
     restarts from them on the Spark path."""
-    ids0, lsrc0, ldst0, w0 = graph
-    ids, lsrc, ldst, w = graph
+    ids0, lsrc0, ldst0, w0 = ids, lsrc, ldst, w = graph
     nw = node_w
     labels = init_flat  # this level's warm start; None = singletons
     flat = None  # per original vertex, its community (an id of this level)
@@ -1237,12 +1244,11 @@ def _driver_pass(
                     ids, lsrc, ldst, w, nw, labels, resolution2, seed + level,
                     variant, two_m, gamma, quality, level,
                 )
-            if flat is None:
-                flat = labels
-            else:
+            if flat is not None:
                 tl = _time.time()
-                flat = labels[np.searchsorted(ids, flat)]
+                labels = labels[np.searchsorted(ids, flat)]
                 _phase(level, "merge_down", tl)
+            flat = labels
             break
         bcast = ids.size <= broadcast_threshold
         LAST_RUN_STATS["levels"] += 1

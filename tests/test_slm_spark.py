@@ -307,14 +307,6 @@ def _no_recompute(*_a, **_k):
     raise AssertionError("slm_scale recomputed Q with modularity()")
 
 
-#: every phase name slm_scale records, on every path
-PHASE_VOCABULARY = {
-    "setup", "edge_cache", "lm_state_init", "lm_final_eval", "lm_canonical",
-    "split_kernel", "split_parent_map", "merge_down", "node_w_next",
-    "aggregate", "exact_collect", "exact_kernel", "exact_emit", "pass_q",
-}
-
-
 @pytest.mark.parametrize(
     "exact_threshold,finish_level,spark_level0",
     [
@@ -347,7 +339,7 @@ def test_slm_scale_pass_q_scored_at_exact_finish(
         exact_threshold=exact_threshold, max_sweeps=3,
     )
     phases = slm_mod.LAST_RUN_STATS["phases"]
-    assert {p[1] for p in phases} <= PHASE_VOCABULARY
+    assert {p[1] for p in phases} <= slm_mod.PHASES
     assert [lvl for lvl, name, _s in phases if name == "exact_kernel"] == [finish_level]
     assert [lvl for lvl, name, _s in phases if name == "exact_collect"] == (
         [finish_level] if spark_level0 else []
@@ -478,10 +470,12 @@ def test_driver_sized_scale_equals_level0_exact_finish(spark, graph, kw):
     from slmpy_spark.graph import slm as slm_mod
 
     rows, q, phases = _scale_run(edges, seed=3, **kw)
+    assert slm_mod.LAST_RUN_STATS["levels"] == 0  # driver-sized, not held
     passes = slm_mod.LAST_RUN_STATS["passes"]
     ref_rows, ref_q, ref_phases = _scale_run(edges, spark_level0=True, seed=3, **kw)
+    # no collect for any pass
     assert "exact_collect" in ref_phases and "exact_collect" not in phases
-    assert phases.count("exact_kernel") == passes  # no collect for any pass
+    assert phases.count("exact_kernel") == passes
     assert rows == ref_rows
     assert q == ref_q
 
