@@ -461,6 +461,85 @@ def _reduced_network(indptr, nbr, wgt, node_w, cluster, n_clusters):
     return r_indptr, r_nbr, r_wgt, r_node_w
 
 
+# ------------------------------------------------- synchronous sweep
+
+_P1, _P2, _P3, _P4, _P5 = (0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+                           0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5)  # XXH64 primes
+
+
+def _rotl(h, r):
+    return (h << np.uint64(r)) | (h >> np.uint64(64 - r))
+
+
+def _xxh_round(h, v, inc, r, mul, add):
+    # one XXH64 hashInt / hashLong step on uint64 arrays (`v`: the mixed
+    # input), then fmix
+    h = (h + np.uint64(_P5 + inc)) ^ v
+    h = _rotl(h, r) * np.uint64(mul) + np.uint64(add)
+    h = (h ^ (h >> np.uint64(33))) * np.uint64(_P2)
+    h = (h ^ (h >> np.uint64(29))) * np.uint64(_P3)
+    return h ^ (h >> np.uint64(32))
+
+
+def xxhash64(ids, k):
+    """Spark's ``xxhash64(id, lit(k))`` per id, as int64: XXH64
+    ``hashLong`` of the id under Spark's seed 42, then of the literal
+    under that hash — ``hashInt`` when `k` fits in int32 (``F.lit`` then makes an
+    int), ``hashLong`` otherwise."""
+    ids = np.asarray(ids, dtype=np.int64).view(np.uint64)
+
+    def hash_long(h, v):
+        return _xxh_round(h, _rotl(v * np.uint64(_P2), 31) * np.uint64(_P1), 8, 27, _P1, _P4)
+
+    h = hash_long(np.full(ids.shape, 42, dtype=np.uint64), ids)
+    if -(1 << 31) <= k < 1 << 31:
+        h = _xxh_round(h, np.uint64((k & 0xFFFFFFFF) * _P1 % (1 << 64)), 4, 23, _P2, _P3)
+    else:
+        h = hash_long(h, np.full(ids.shape, k, dtype=np.int64).view(np.uint64))
+    return h.view(np.int64)
+
+
+def sync_sweep(ids, lsrc, ldst, w, node_w, labels, resolution2, seed, sweep, move_frac):
+    """One synchronous local-moving sweep over a level held as arrays —
+    ``slm._propose_moves`` over ``slm._sweep_edges`` in numpy, with its
+    semantics: sorted vertex `ids`, entries `lsrc` → `ldst` (indices into
+    `ids`) of weight `w`, `node_w` and the community `labels` per vertex.
+    Self-loop entries are dropped; k_{i,c} sums each vertex's entries per
+    neighbour community plus a zero-weight row into its own; a vertex
+    moves to its best strictly positive gain (ties → lowest label), else
+    escapes to ``-(id+1)`` unless already alone; with `move_frac` < 1
+    only the vertices the Spark sweep's hash gate admits may change.
+
+    Returns (labels after the sweep, intra, s2, moves): intra and s2
+    (Σ_c Σtot(c)²) of the labels it started from, and how many labels
+    changed.  On integral weights every sum is exact, so all four equal
+    the Spark sweep's bit for bit; otherwise k_{i,c} and Σtot are summed
+    in another order and only the Q class agrees."""
+    n = ids.size
+    keep = lsrc != ldst
+    comms, ci = np.unique(labels, return_inverse=True)
+    k = comms.size
+    sigma = np.bincount(ci, weights=node_w, minlength=k)
+    own = np.arange(n) * k + ci
+    key, inv = np.unique(np.concatenate([lsrc[keep] * k + ci[ldst[keep]], own]), return_inverse=True)
+    kic = np.bincount(inv, weights=np.concatenate([w[keep], np.zeros(n)]), minlength=key.size)
+    src, cand = key // k, key % k
+    w_src = node_w[src]
+    # the Spark sweep's expression, in its operation order
+    gain = kic - w_src * (sigma[cand] - w_src * (cand == ci[src])) * resolution2
+    # every vertex has its own-community row, so src groups are 0..n-1
+    order = np.lexsort((cand, -gain, src))
+    best = order[np.searchsorted(src[order], np.arange(n))]
+    stay = np.where(sigma[ci] > node_w, -(ids + 1), labels)  # escape unless alone
+    out = np.where(gain[best] > 0.0, comms[cand[best]], stay)
+    if move_frac < 1.0:
+        # pmod(xxhash64(id, seed*97 + sweep), 2^20) < move_frac * 2^20
+        gate = xxhash64(ids, seed * 97 + sweep) & ((1 << 20) - 1)
+        out = np.where(gate < int(move_frac * (1 << 20)), out, labels)
+    kic_cur = kic[np.searchsorted(key, own)]
+    return out, float(kic_cur.sum()), float((node_w * sigma[ci]).sum()), int((out != labels).sum())
+
+
 # ------------------------------------------------------------- SLM
 
 

@@ -15,11 +15,12 @@ Two execution modes (SURVEY.md §5.3):
   one level loop over them (``_driver_pass``) with one rule per level,
   its symmetrized entry count: a level of at most ``exact_threshold``
   entries is the exact finish (``_finish_core``, no collect), a bigger
-  one is *held* — only step 1 below runs in Spark, over frames made
-  from the arrays, and steps 2–3, the canonical labels and the
-  merge-down are numpy (step 2 calls the same per-community kernel).
-  The result relation is built once, after every pass.  Otherwise
-  (``_scale_pass``), per outer level:
+  one is *held* — steps 1–3 below, the canonical labels and the
+  merge-down run in numpy over the arrays (step 1 is
+  ``kernels.sync_sweep`` under the same guard loop, step 2 the same
+  per-community kernel), so a driver run makes no Spark job after the
+  probe.  The result relation is built once, after every pass.
+  Otherwise (``_scale_pass``), per outer level:
     1. *distributed local moving*: a fully JVM-side synchronous sweep.
        Each sweep computes k_{i,c} (weight from every vertex i to every
        neighboring community c) as ``groupBy(src, cand).sum(weight)`` —
@@ -56,7 +57,10 @@ Two execution modes (SURVEY.md §5.3):
 Scale-mode results match the reference's *Q-class* (same modularity to
 1e-6 on graphs with stable optima), not its exact label sequence — the
 sequential visit order is inherently unparallelizable (SURVEY §8-H1);
-exact mode is the label-parity path.
+exact mode is the label-parity path.  A held level's numpy sweep is
+bit-identical to the Spark sweep on integral weights (labels, observed
+Q and move counts, so the whole run); on non-integral weights the two
+sum k_{i,c} and Σtot in different orders and agree only in Q class.
 
 Scale mode labels an escaped singleton ``-(id+1)`` during sweeps, which
 must not collide with any real vertex id, so ``slm_scale`` requires
@@ -104,12 +108,15 @@ def _new_run_stats() -> dict:
 #:   counts — bench.py, perfbench and BENCH/run_scaling.py compute real
 #:   edges-per-sweep throughput from them instead of assuming
 #:   max_sweeps ran;
-#: - ``sweep_jobs``: one ``[level, secs]`` per LM sweep job;
+#: - ``sweep_jobs``: one ``[level, secs]`` per LM sweep — a Spark job
+#:   at a Spark level, the numpy sweep's seconds at a held level;
 #: - ``phases``: one ``[level, name, secs]`` per non-sweep phase
 #:   (``_phase``; level -1 = outside the level loop).  Phases do not
 #:   overlap, and no sweep job falls inside a phase.  A name means the
 #:   same work on every path: ``setup`` (level -1) is the level-0
-#:   ingest (the bounded probe or ``_spark_setup``); ``exact_collect``
+#:   ingest (the bounded probe or ``_spark_setup``); ``edge_cache`` and
+#:   ``lm_state_init`` build a Spark level's sweep inputs (a held level
+#:   needs none and records neither); ``exact_collect``
 #:   is the exact finish's Spark collect (``_exact_finish`` only);
 #:   ``exact_kernel`` is ``_finish_core`` at the finish level;
 #:   ``exact_emit`` turns labels into the result relation — at the
@@ -484,22 +491,10 @@ def _distributed_local_moving(
     level: int = 0,
     bcast: bool = False,
     m_l: int = 0,
-    on_driver: bool = False,
 ):
-    """Superstep local moving with adaptive damping (starting at
-    INIT_FRAC, stopping at Q_TOL) and a *deferred* monotone-Q guard.
-
-    Sweep t's decision job also yields (for free, see _propose_moves)
-    the exact Q of the assignment it was proposed FROM.  So the guard
-    runs one sweep late: when sweep t reveals that state S_t does not
-    beat the best Q seen, S_t's proposal is discarded, the loop reverts
-    to the best state and retries with a halved mover fraction; when it
-    does beat it, S_t becomes the best and the (already computed)
-    proposal is adopted.  The final adopted proposal — whose Q no sweep
-    has revealed — gets one explicit _assign_quality evaluation per
-    level.  Convergence: damping shrinks the simultaneous-move set
-    toward the sequential regime; stops at n_moves == 0, `max_sweeps`,
-    or `patience` consecutive rejections.
+    """Local moving at a Spark level: `_guarded_moves` over
+    `_propose_moves` sweeps, with `_assign_quality` as the final
+    evaluation.
 
     Per-sweep cost: ONE Spark job — the decision job (one edge scan
     into the (src, cand) partial-agg + argmax, checkpointed); the
@@ -514,10 +509,8 @@ def _distributed_local_moving(
     join (dst → candidate community) then reuses the cached layout and
     only the vertex-sized state shuffles per sweep.
 
-    Returns the best state's canonical (min-member id) labels: a
-    materialized (id, community) frame, or — `on_driver`, for a level
-    the driver holds — one collect of the best state labelled in numpy,
-    an array over the vertices in ascending id order."""
+    Returns the best state's canonical (min-member id) labels as a
+    materialized (id, community) frame."""
     tp = _time.time()
     # state init — when the caller starts from singletons (assign=None)
     # the frame is a plain projection of the node-weight leaf: no
@@ -539,25 +532,38 @@ def _distributed_local_moving(
     frames = Frames()
     state = frames.own(materialize(state0))
     tp = _phase(level, "lm_state_init", tp)
-    best_state = state
-    best_q = None
-    move_frac = INIT_FRAC
-    patience = 4
-    stall = 0
-    pending = False  # does `state` hold an adopted-but-unevaluated proposal?
 
-    # Unpersist hygiene: the guard can only ever revert to `best_state`,
-    # so any sweep state that is neither `best_state` nor the current
-    # `state` is dead and its checkpoint blocks are freed IMMEDIATELY
-    # (the `retain` at the end of every sweep, before the next sweep's
-    # job).  Keeping them until level end (the old `owned` list) let ~16
-    # vertex-sized row-format block sets pile up in storage memory and
-    # evict the level's cached edge table — measured on the 10M-edge
-    # ladder as intermittent 3–4× propose-time spikes (cache rebuild)
-    # from sweep ~8 onward.
+    # Unpersist hygiene (`keep`): the guard can only ever revert to the
+    # best state, so any sweep state that is neither it nor the current
+    # state is dead and its checkpoint blocks are freed IMMEDIATELY,
+    # before the next sweep's job.  Keeping them until level end (the
+    # old `owned` list) let ~16 vertex-sized row-format block sets pile
+    # up in storage memory and evict the level's cached edge table —
+    # measured on the 10M-edge ladder as intermittent 3–4× propose-time
+    # spikes (cache rebuild) from sweep ~8 onward.
+    best_state = _guarded_moves(
+        state, _spark_sweep(frames, sym, resolution2, seed, bcast),
+        lambda s: _assign_quality(sym, s, two_m, gamma, quality, bcast=bcast),
+        max_sweeps, two_m, gamma, quality, checkpointer=checkpointer,
+        level=level, m_l=m_l, keep=frames.retain,
+    )
+    tp = _time.time()
+    assign_out = _canonical_labels(
+        best_state.select("id", "community"), bcast=bcast
+    ).transform(materialize)
+    _phase(level, "lm_canonical", tp)
+    frames.retain()
+    return assign_out
 
-    for sweep in range(max_sweeps):
-        t0 = _time.time()
+
+def _spark_sweep(frames: Frames, sym: DataFrame, resolution2: float, seed: int, bcast: bool):
+    """The Spark level's `propose` for `_guarded_moves`: one
+    `_propose_moves` sweep over `sym`, materialized and owned by
+    `frames`, with the pre-sweep state's intra, s2 and this sweep's move
+    count observed on the materialize action itself — one Spark job per
+    sweep, total."""
+
+    def propose(state, sweep, move_frac):
         obs = Observation()
         prop = _propose_moves(sym, state, resolution2, seed, sweep, move_frac, bcast)
         if sweep == 0:
@@ -571,18 +577,51 @@ def _distributed_local_moving(
             )
             .transform(materialize)
         )
+        v = obs.get
+        return prop, float(v["intra"] or 0.0), float(v["s2"] or 0.0), int(v["moves"] or 0)
+
+    return propose
+
+
+def _guarded_moves(
+    state, propose, evaluate, max_sweeps, two_m, gamma, quality,
+    checkpointer=None, level=0, m_l=0, keep=lambda best, state: None,
+):
+    """Superstep local moving with adaptive damping (starting at
+    INIT_FRAC, stopping at Q_TOL) and a *deferred* monotone-Q guard —
+    the one loop both sweeps run: the Spark sweep of a Spark level
+    (`_distributed_local_moving`) and the numpy sweep of a held level
+    (`_driver_pass`).  Returns the best state.
+
+    `propose(state, sweep, move_frac)` runs sweep `sweep` from `state`
+    and returns (proposal, intra, s2, moves): the proposed state, plus
+    the intra weight and Σ_c Σtot(c)² of `state` itself and the move
+    count.  So the guard runs one sweep late: when sweep t reveals that
+    state S_t does not beat the best Q seen, S_t's proposal is
+    discarded, the loop reverts to the best state and retries with a
+    halved mover fraction; when it does beat it, S_t becomes the best
+    and the (already computed) proposal is adopted.  The final adopted
+    proposal — whose Q no sweep has revealed — gets one `evaluate(state)`
+    (its Q) per level.  Convergence: damping shrinks the
+    simultaneous-move set toward the sequential regime; stops at
+    n_moves == 0, `max_sweeps`, or `patience` consecutive rejections.
+
+    `keep(best, state)` runs after every sweep with the only two states
+    the guard can still return to."""
+    best_state = state
+    best_q = None
+    move_frac = INIT_FRAC
+    patience = 4
+    stall = 0
+    pending = False  # does `state` hold an adopted-but-unevaluated proposal?
+    for sweep in range(max_sweeps):
+        t0 = _time.time()
+        prop, intra, s2, n_moves = propose(state, sweep, move_frac)
         t1 = _time.time()
         LAST_RUN_STATS["sweeps"] += 1
         LAST_RUN_STATS["edge_entries_swept"] += m_l
         LAST_RUN_STATS["sweep_jobs"].append([level, t1 - t0])
-        # pre-sweep state's Q + this sweep's move count, observed on the
-        # materialize action itself — one Spark job per sweep, total
-        vals = obs.get
-        q_prev = kernels.q_of(
-            float(vals["intra"] or 0.0), float(vals["s2"] or 0.0),
-            two_m, gamma, quality,
-        )
-        n_moves = int(vals["moves"] or 0)
+        q_prev = kernels.q_of(intra, s2, two_m, gamma, quality)
         _dbg(
             f"level {level} sweep {sweep} frac={move_frac} "
             f"q(pre)={q_prev:.6f} moves={n_moves} "
@@ -618,7 +657,7 @@ def _distributed_local_moving(
         pending = adopt and not stop
         if pending:
             state = prop
-        frames.retain(best_state, state)
+        keep(best_state, state)
         if stop:
             break
 
@@ -626,26 +665,12 @@ def _distributed_local_moving(
     if pending:
         # last adopted proposal was never revealed by a later sweep —
         # evaluate it once; keep it only if it beats the best
-        q_final = _assign_quality(sym, state, two_m, gamma, quality, bcast=bcast)
+        q_final = evaluate(state)
         _dbg(f"level {level} final-eval q={q_final:.6f} (best {best_q:.6f})")
         if best_q is None or q_final > best_q + 1e-12:
             best_state = state
-        tp = _phase(level, "lm_final_eval", tp)
-
-    if on_driver:
-        # one collect of the best state; the min-member labels are numpy
-        pdf = best_state.select("id", "community").toPandas().sort_values("id")
-        assign_out = kernels.min_member(
-            pdf["id"].to_numpy(np.int64),
-            np.unique(pdf["community"].to_numpy(np.int64), return_inverse=True)[1],
-        )
-    else:
-        assign_out = _canonical_labels(
-            best_state.select("id", "community"), bcast=bcast
-        ).transform(materialize)
-    tp = _phase(level, "lm_canonical", tp)
-    frames.retain()
-    return assign_out
+        _phase(level, "lm_final_eval", tp)
+    return best_state
 
 
 def _sweep_edges(frames: Frames, sym: DataFrame, bcast: bool) -> DataFrame:
@@ -802,13 +827,14 @@ def slm_scale(
     Returns (assign, q) — q computed on the original graph.
 
     An input of at most `exact_threshold` rows runs on the driver: the
-    bounded probe (`_driver_graph`) collects it once, every pass is
-    `_driver_pass` over those arrays (a level that fits under
-    `exact_threshold` entries is the exact finish, a bigger one runs
-    only its sweeps in Spark), and `assign` is one local relation, built
-    after the last pass, that pins no storage.  Otherwise — more rows
-    than `exact_threshold`, `variant="louvain_refine"`, or a resume that
-    finds snapshots — every pass is the Spark level loop (`_scale_pass`).
+    bounded probe (`_driver_graph`) collects it once — the run's one
+    Spark job — every pass is `_driver_pass` over those arrays (a level
+    that fits under `exact_threshold` entries is the exact finish, a
+    bigger one is held and sweeps in numpy), and `assign` is one local
+    relation, built after the last pass, that pins no storage.
+    Otherwise — more rows than `exact_threshold`,
+    `variant="louvain_refine"`, or a resume that finds snapshots — every
+    pass is the Spark level loop (`_scale_pass`).
 
     `n_iterations`: iterated SLM (G14) — each pass restarts the level
     hierarchy from the previous pass's flat assignment (never from
@@ -821,8 +847,8 @@ def slm_scale(
     argmax-Q assignment over all starts/passes is returned (mirrors
     exact mode's best-of-N restarts).
 
-    `broadcast_threshold`: levels whose vertex count fits under it run
-    every vertex-side join map-side (broadcast) — the edge table is
+    `broadcast_threshold`: Spark levels whose vertex count fits under it
+    run every vertex-side join map-side (broadcast) — the edge table is
     scanned without shuffling during sweeps.
 
     With a `checkpointer`, every completed level persists the snapshot
@@ -874,7 +900,7 @@ def slm_scale(
                     quality, pass_seed, max_levels, max_sweeps, exact_threshold,
                     variant, checkpointer,
                     step_offset=(start * n_iters + it) * max_levels,
-                    init_flat=prev, broadcast_threshold=broadcast_threshold,
+                    init_flat=prev,
                 )
             else:
                 flat, q = _scale_pass(
@@ -963,28 +989,12 @@ def _driver_graph(edges: DataFrame, exact_threshold: int):
     return ids, key // ids.size, key % ids.size, np.bincount(inv, weights=np.concatenate([w, w]))
 
 
-def _driver_frame(spark, schema: str, *cols) -> DataFrame:
-    """A frame over driver arrays (`cols`, in `schema`'s column order)
-    whose plan is ONE LogicalRDD leaf, built without a Spark job.
-    ``createDataFrame`` alone gives a LocalRelation, which every plan
-    reading it inlines row by row (measured 0.1–0.16 s per bcast-level
-    sweep at 64k entries) and which ``EdgeCache`` (not a leaf to
-    ``util.is_plan_leaf``) would checkpoint in a job of its own; the
-    LocalRelation's own RDD (``toRdd``: a parallelized collection, no
-    job) is such a leaf, as in ``util.materialize``."""
+def _assign_frame(spark, *cols, schema: str = ASSIGN_SCHEMA) -> DataFrame:
+    """A frame over driver arrays (`cols`, in `schema`'s column order;
+    by default an (id, community) result): one local relation that pins
+    no storage and runs no job."""
     names = [c.split()[0] for c in schema.split(",")]
-    local = spark.createDataFrame(pd.DataFrame(dict(zip(names, cols))), schema)._jdf
-    return DataFrame(spark._jsparkSession.internalCreateDataFrame(
-        local.queryExecution().toRdd(), local.schema(), False
-    ), spark)
-
-
-def _assign_frame(spark, ids, labels) -> DataFrame:
-    """An (id, community) result over driver arrays: one local relation
-    that pins no storage."""
-    return spark.createDataFrame(
-        pd.DataFrame({"id": ids, "community": labels}), ASSIGN_SCHEMA
-    )
+    return spark.createDataFrame(pd.DataFrame(dict(zip(names, cols))), schema)
 
 
 def _spark_setup(frames: Frames, edges: DataFrame, quality: str):
@@ -1210,24 +1220,25 @@ def _scale_pass(
 def _driver_pass(
     spark, graph, node_w, two_m, resolution2, gamma, quality, seed, max_levels,
     max_sweeps, exact_threshold, variant, checkpointer, step_offset, init_flat,
-    broadcast_threshold,
 ):
     """One hierarchy pass (the `_scale_pass` level loop) over the graph
     the bounded probe collected: `graph` arrays (ids, lsrc, ldst, w),
     `node_w` per vertex, `init_flat` labels per vertex (None: singletons).
     One rule, the level's entry count, picks where each level runs: a
     level of at most `exact_threshold` entries is the exact finish
-    (`_finish_core`, no collect); a bigger one is *held* — only its
-    sweeps (and the final evaluation) run in Spark, over frames made from
-    the arrays, while the canonical labels, the split
-    (``kernels.split_community``, the kernel of the ``applyInPandas``
-    split), the parent map, node weights, aggregation and merge-down are
-    numpy.
+    (`_finish_core`, no collect); a bigger one is *held* and runs no
+    Spark job: its sweeps are ``kernels.sync_sweep`` under the guard
+    loop (`_guarded_moves`) with a numpy final evaluation, and the
+    canonical labels, the split (``kernels.split_community``, the kernel
+    of the ``applyInPandas`` split), the parent map, node weights,
+    aggregation and merge-down are numpy too.  A held level records no
+    ``edge_cache`` or ``lm_state_init`` phase.
 
     Returns (flat, q): the labels per vertex of `graph` and the pass's Q
     on the original graph.  With a `checkpointer`, every held level
-    writes the `_scale_pass` snapshots from its arrays, so a resume
-    restarts from them on the Spark path."""
+    logs its sweeps and one ``slm_lm_input`` row (the level's entries,
+    as partition 0) and writes the `_scale_pass` snapshots from its
+    arrays, so a resume restarts from them on the Spark path."""
     ids0, lsrc0, ldst0, w0 = ids, lsrc, ldst, w = graph
     nw = node_w
     labels = init_flat  # this level's warm start; None = singletons
@@ -1250,25 +1261,31 @@ def _driver_pass(
                 _phase(level, "merge_down", tl)
             flat = labels
             break
-        bcast = ids.size <= broadcast_threshold
         LAST_RUN_STATS["levels"] += 1
-        frames = Frames()
-        sym_j = _sweep_edges(
-            frames, _driver_frame(spark, SYM_SCHEMA, ids[lsrc], ids[ldst], w), bcast
+        loop_free = lsrc != ldst
+        ls, ld, lw = lsrc[loop_free], ldst[loop_free], w[loop_free]
+
+        def evaluate(lab):  # `_assign_quality` over the level's arrays
+            c = np.unique(lab, return_inverse=True)[1]
+            s2 = (np.bincount(c, weights=nw) ** 2).sum()
+            return kernels.q_of(float(lw[c[ls] == c[ld]].sum()), float(s2), two_m, gamma, quality)
+
+        best = _guarded_moves(
+            ids if labels is None else labels,
+            lambda lab, sweep, frac: kernels.sync_sweep(
+                ids, lsrc, ldst, w, nw, lab, resolution2, seed + level, sweep, frac
+            ),
+            evaluate, max_sweeps, two_m, gamma, quality,
+            checkpointer=checkpointer, level=level, m_l=m_l,
         )
-        tl = _phase(level, "edge_cache", tl)
-        comm = _distributed_local_moving(
-            sym_j, _driver_frame(spark, NODE_W_SCHEMA, ids, nw),
-            None if labels is None else _driver_frame(spark, ASSIGN_SCHEMA, ids, labels),
-            resolution2, seed + level, max_sweeps, gamma, quality, two_m,
-            checkpointer=checkpointer, level=level, bcast=bcast, m_l=m_l,
-            on_driver=True,
-        )
+        tl = _time.time()
+        comm = kernels.min_member(ids, np.unique(best, return_inverse=True)[1])
+        _phase(level, "lm_canonical", tl)
         if checkpointer is not None:
-            checkpointer.log_partition_metrics(
-                sym_j, op="slm_lm_input", level=level, step=step_offset + level
+            checkpointer.log_metric(
+                op="slm_lm_input", level=level, step=step_offset + level,
+                partition_id=0, edges_processed=m_l,
             )
-        frames.retain()
         tl = _time.time()
         sub = comm
         if variant == "slm":
@@ -1292,17 +1309,16 @@ def _driver_pass(
         tl = _phase(level, "aggregate", tl)
         if checkpointer is not None:
             step = step_offset + level
+            checkpointer.save_state("slm_assign", step, _assign_frame(spark, ids0, flat))
             checkpointer.save_state(
-                "slm_assign", step, _driver_frame(spark, ASSIGN_SCHEMA, ids0, flat)
+                "slm_node_w", step, _assign_frame(spark, ids, nw, schema=NODE_W_SCHEMA)
             )
-            checkpointer.save_state("slm_node_w", step, _driver_frame(spark, NODE_W_SCHEMA, ids, nw))
             checkpointer.save_state(
-                "slm_supergraph", step, _driver_frame(spark, SYM_SCHEMA, ids[lsrc], ids[ldst], w)
+                "slm_supergraph", step,
+                _assign_frame(spark, ids[lsrc], ids[ldst], w, schema=SYM_SCHEMA),
             )
             if labels is not None:
-                checkpointer.save_state(
-                    "slm_next_assign", step, _driver_frame(spark, ASSIGN_SCHEMA, ids, labels)
-                )
+                checkpointer.save_state("slm_next_assign", step, _assign_frame(spark, ids, labels))
             checkpointer.log_metric(
                 op="slm", level=level, step=step, edges=m_l, communities=cids.size
             )

@@ -743,3 +743,148 @@ def test_held_band_rejects_negative_ids(spark):
     with pytest.raises(ValueError, match="non-negative"):
         engine.slm(edges, seed=0, mode="scale", exact_threshold=3)
     assert _persistent(spark) == before
+
+
+@pytest.mark.parametrize("graph,bt", [("powerlaw", 1), ("powerlaw", 250_000), ("gnp", 250_000)])
+def test_held_run_makes_one_spark_job(spark, monkeypatch, graph, bt):
+    """A held run's one Spark job is the bounded probe: a held level —
+    gnp holds levels 0 and 1 — sweeps, evaluates, labels, splits and
+    aggregates in numpy, at either broadcast setting, and nothing is
+    localCheckpointed."""
+    import pyspark.sql
+    from slmpy_spark.graph import slm as slm_mod
+
+    def no_checkpoint(*_a, **_k):
+        raise AssertionError("a held run ran a localCheckpoint")
+
+    monkeypatch.setattr(pyspark.sql.DataFrame, "localCheckpoint", no_checkpoint)
+    und, threshold = _held_graph(graph)
+    edges = edges_df(spark, und)
+    edges.count()
+    sc = spark.sparkContext
+    group = f"slm-held-{graph}-{bt}"
+    sc.setJobGroup(group, "held slm_scale")
+    try:
+        assign, q = engine.slm(
+            edges, seed=3, mode="scale", max_sweeps=3, exact_threshold=threshold,
+            broadcast_threshold=bt,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert slm_mod.LAST_RUN_STATS["levels"] == (2 if graph == "gnp" else 1)
+    assert slm_mod.LAST_RUN_STATS["sweeps"] > 0
+
+
+# ------------------------------------------- numpy sweep = Spark sweep
+
+
+def _sweep_level(shift, seed, integral=True):
+    """A level as arrays (ids, lsrc, ldst, w) — a seeded random graph
+    whose last tenth of vertices have no edges, plus self-loop rows on a
+    random half, ids shifted by `shift` — and a warm start of five
+    communities labelled by member ids (many vertices escape it)."""
+    from tests.test_lm_compiled import rand_csr, start, with_self_loops
+
+    indptr, nbr, w = with_self_loops(*rand_csr(seed, n=200, integral=integral), seed)
+    n = indptr.size - 1
+    ids = np.arange(n, dtype=np.int64) + shift
+    lsrc = np.repeat(np.arange(n), np.diff(indptr))
+    assert (lsrc == nbr).any()
+    return (ids, lsrc, nbr, w), ids[start("warm", n, seed) % n]
+
+
+def _chained_sweeps(spark, level, node_w, labels, resolution2, seed, move_frac, bcast):
+    """Eight chained sweeps from `labels`, each from the previous
+    proposal, through the Spark level's propose (`_propose_moves` over
+    `_sweep_edges`, observed) and through `kernels.sync_sweep`: per side
+    and sweep, (labels by ascending id, intra, s2, moves)."""
+    from slmpy_spark.graph import kernels
+    from slmpy_spark.graph import slm as slm_mod
+    from slmpy_spark.util import Frames, materialize
+
+    ids, lsrc, ldst, w = level
+    frames = Frames()
+    sym = slm_mod._assign_frame(spark, ids[lsrc], ids[ldst], w, schema=slm_mod.SYM_SCHEMA)
+    state = slm_mod._assign_frame(
+        spark, ids, labels, node_w, schema="id long, community long, node_w double"
+    )
+    state = frames.own(materialize(slm_mod._attach_sigma(state, bcast)))
+    propose = slm_mod._spark_sweep(
+        frames, slm_mod._sweep_edges(frames, sym, bcast), resolution2, seed, bcast
+    )
+    runs = ([], [])
+    for sweep in range(8):
+        state, *stats = propose(state, sweep, move_frac)
+        got = state.select("id", "community").toPandas().sort_values("id")
+        runs[0].append((got["community"].tolist(), *stats))
+        labels, *stats = kernels.sync_sweep(
+            ids, lsrc, ldst, w, node_w, labels, resolution2, seed, sweep, move_frac
+        )
+        runs[1].append((labels.tolist(), *stats))
+    frames.retain()
+    return runs
+
+
+@pytest.mark.parametrize("bcast", [True, False])
+@pytest.mark.parametrize("move_frac", [0.5, 0.75, 1.0])
+@pytest.mark.parametrize(
+    # seed 22_139_007: seed * 97 + sweep ≥ 2^31, so the gate hashes a long literal
+    "shift,quality,seed", [(10**12, "modularity", 3), (2**61, "cpm", 22_139_007)],
+)
+def test_numpy_sweep_equals_spark_sweep(spark, bcast, move_frac, shift, quality, seed):
+    """On integral weights the numpy sweep of a held level reproduces
+    the Spark sweep bit for bit over eight chained sweeps — labels
+    (escapes included), the observed intra and Σtot² and the move count
+    — at both layouts, with self-loop rows and shifted ids."""
+    from slmpy_spark.graph import kernels
+
+    level, labels = _sweep_level(shift, seed % 1000)
+    ids, lsrc, _ldst, w = level
+    gamma = 0.5 if quality == "cpm" else 1.0
+    if quality == "cpm":
+        node_w = np.ones(ids.size)
+    else:
+        node_w = np.bincount(lsrc, weights=w, minlength=ids.size)
+    resolution2 = kernels.resolution2_of(gamma, quality, float(w.sum()))
+    spark_runs, numpy_runs = _chained_sweeps(
+        spark, level, node_w, labels, resolution2, seed, move_frac, bcast
+    )
+    assert numpy_runs == spark_runs
+    assert any(min(lab) < 0 for lab, *_s in spark_runs)  # some vertex escaped
+    assert all(moves > 0 for *_l, moves in spark_runs[:2])
+
+
+def test_numpy_sweep_q_class_on_non_integral_weights(spark):
+    """On non-integral weights the two sweeps sum k_{i,c}, Σtot and the
+    observed intra / Σtot² in different orders, so their floats may
+    differ in the last bits: only the Q class is held (each sweep's
+    observed Q within 1e-9), not bit-identical labels."""
+    from slmpy_spark.graph import kernels
+
+    level, labels = _sweep_level(10**12, 5, integral=False)
+    ids, lsrc, _ldst, w = level
+    node_w = np.bincount(lsrc, weights=w, minlength=ids.size)
+    two_m = float(w.sum())
+    spark_runs, numpy_runs = _chained_sweeps(
+        spark, level, node_w, labels, 1.0 / two_m, 3, 0.75, True
+    )
+    for (_a, intra_a, s2_a, _m), (_b, intra_b, s2_b, _n) in zip(spark_runs, numpy_runs):
+        q_a = kernels.q_of(intra_a, s2_a, two_m, 1.0, "modularity")
+        q_b = kernels.q_of(intra_b, s2_b, two_m, 1.0, "modularity")
+        assert abs(q_a - q_b) <= 1e-9
+
+
+@pytest.mark.parametrize("k", [42 * 97 + 3, 2**31 + 5])  # an int and a long literal
+def test_xxhash64_twin_equals_spark(spark, k):
+    """`kernels.xxhash64(ids, k)` is Spark's `xxhash64(id, lit(k))`
+    (seed 42) on every id, whether `F.lit(k)` makes an int or a long."""
+    from pyspark.sql import functions as F
+
+    from slmpy_spark.graph import kernels
+
+    rng = np.random.default_rng(0)
+    ids = np.concatenate([np.arange(3000), rng.integers(0, 2**62, 3000), [2**63 - 1]])
+    df = spark.createDataFrame([(int(i),) for i in ids], "id long")
+    got = [r[0] for r in df.select(F.xxhash64("id", F.lit(k))).collect()]
+    assert kernels.xxhash64(ids, k).tolist() == got
